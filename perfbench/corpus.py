@@ -9,7 +9,7 @@ input: auditLog JSON lines, one file per micro-batch, with a fixed
 share of out-of-order and late rows.
 
 Every value is drawn from `numpy.random.default_rng(seed)`, so the same
-seed and scale factor give byte-identical files.
+seed gives byte-identical files.
 """
 
 from __future__ import annotations
@@ -37,6 +37,9 @@ WORDS = (
     "group big sort query fast"
 ).split()
 EMBED_DIM = 64
+# the catalog tables' scale factor: TPC-H SF-1 row counts times SF, with
+# floors where a table would come out too small for its operators
+SF = 0.01
 
 
 def _day_stamps(rng, n, start, days):
@@ -80,16 +83,16 @@ def _embeddings(rng, n, labels):
     return v.astype(np.float32)
 
 
-def write_corpus(out_dir: str, sf: float, seed: int) -> dict[str, int]:
-    """Write the ten tables at scale factor `sf` into `out_dir`; return
+def write_corpus(out_dir: str, seed: int) -> dict[str, int]:
+    """Write the ten tables at scale factor `SF` into `out_dir`; return
     the row count of each table."""
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
-    n_cust, n_supp = max(10, int(150_000 * sf)), max(5, int(10_000 * sf))
-    n_part, n_ord = max(20, int(200_000 * sf)), max(100, int(1_500_000 * sf))
-    n_line, n_ev = max(400, int(6_000_000 * sf)), max(100, int(1_000_000 * sf))
-    n_doc, n_emb = max(500, int(50_000 * sf)), max(500, int(20_000 * sf))
-    n_users = max(10, int(15_000 * sf))
+    n_cust, n_supp = max(10, int(150_000 * SF)), max(5, int(10_000 * SF))
+    n_part, n_ord = max(20, int(200_000 * SF)), max(100, int(1_500_000 * SF))
+    n_line, n_ev = max(400, int(6_000_000 * SF)), max(100, int(1_000_000 * SF))
+    n_doc, n_emb = max(500, int(50_000 * SF)), max(500, int(20_000 * SF))
+    n_users = max(10, int(15_000 * SF))
 
     _write(out_dir, "region", {
         "r_regionkey": pa.array(range(5), pa.int32()),
@@ -177,6 +180,8 @@ AUDIT_TYPES = ["shelf", "unshelf", "black", "chlid_shelf", "child_unshelf"]
 AUDIT_AREAS = ["AREA_US", "AREA_CT", "AREA_AR", "AREA_IN", "AREA_ID"]
 AUDIT_T0 = 1_514_800_800  # 2018-01-01 10:00:00 UTC, the reference's sample day
 WINDOW_S, WATERMARK_S, DISORDER_S = 30, 40, 30
+DISORDER_SHARE = 0.1  # rows moved back by 1..DISORDER_S seconds
+LATE_SHARE = 0.05  # rows beyond the watermark, from the third file on
 
 
 @dataclass
@@ -196,13 +201,12 @@ def _audit_line(ts: int, typ: str, area: str, user: int) -> str:
     return json.dumps({"dt": dt, "type": typ, "username": f"shenhe{user}", "area": area})
 
 
-def audit_backlog(out_dir: str, n_files: int, rows_per_file: int, seed: int,
-                  late_share: float = 0.05, disorder_share: float = 0.1) -> Backlog:
+def audit_backlog(out_dir: str, n_files: int, rows_per_file: int, seed: int) -> Backlog:
     """Write `n_files` auditLog JSON files of `rows_per_file` lines each.
 
     File i covers event times [T0 + 30 i, T0 + 30 (i + 1)). A
-    `disorder_share` of its rows is moved back by 1..30 s, which stays
-    inside the 40 s watermark. From file 2 on, a `late_share` of its rows
+    `DISORDER_SHARE` of its rows is moved back by 1..30 s, which stays
+    inside the 40 s watermark. From file 2 on, a `LATE_SHARE` of its rows
     is late: each sits in a window of its own that ends at least 30 s
     before the watermark batch i-1 set, so Spark drops every one of them
     and counts each once in `numRowsDroppedByWatermark`. The file
@@ -213,9 +217,9 @@ def audit_backlog(out_dir: str, n_files: int, rows_per_file: int, seed: int,
     for i in range(n_files):
         start = AUDIT_T0 + WINDOW_S * i
         ts = np.sort(start + rng.integers(0, WINDOW_S, rows_per_file))
-        moved = rng.random(rows_per_file) < disorder_share
+        moved = rng.random(rows_per_file) < DISORDER_SHARE
         ts = np.where(moved, ts - rng.integers(1, DISORDER_S + 1, rows_per_file), ts)
-        n_late = int(round(rows_per_file * late_share)) if i >= 2 else 0
+        n_late = int(round(rows_per_file * LATE_SHARE)) if i >= 2 else 0
         # the late-event watermark of batch i is batch i-1's: max event
         # time of files 0..i-2 minus 40 s; every late window ends below it
         if n_late:

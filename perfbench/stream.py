@@ -31,7 +31,7 @@ import eventlog
 from corpus import audit_backlog
 from metrics import Result, percentile
 
-WARM_FILES = 6
+WARM_FILES = 4
 TRIGGER_BUDGET_S = 4.0
 ROWS_PER_FILE = 1000
 

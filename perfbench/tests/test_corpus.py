@@ -12,8 +12,8 @@ def _bytes(d):
 
 def test_corpus_is_a_function_of_seed(tmp_path):
     a, b, c = (str(tmp_path / n) for n in "abc")
-    assert corpus.write_corpus(a, 0.001, 3) == corpus.write_corpus(b, 0.001, 3)
-    corpus.write_corpus(c, 0.001, 4)
+    assert corpus.write_corpus(a, 3) == corpus.write_corpus(b, 3)
+    corpus.write_corpus(c, 4)
     assert _bytes(a) == _bytes(b)
     assert _bytes(a)["lineitem.parquet"] != _bytes(c)["lineitem.parquet"]
     assert sorted(_bytes(a)) == sorted(f"{t}.parquet" for t in TABLES)
