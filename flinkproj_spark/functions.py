@@ -11,48 +11,78 @@ SURVEY.md §2.9), this engine expresses it as JVM-side column algebra.
 The operator modules (`operators/text.py`, `operators/dedup.py`,
 `operators/similarity.py`, `operators/sampling.py`) build on these; the
 library is exported so engine users can compose the same primitives
-into their own queries.
+into their own queries. `cache_scope` is the one cache lifetime every
+operator that reads a frame more than once goes through.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Sequence
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
-def eager_report(
-    spark: SparkSession, report: DataFrame, caches: Sequence[DataFrame]
-) -> DataFrame:
-    """Deterministic cache lifetime for BOUNDED report operators: run
-    the report NOW, unpersist its cached inputs, and hand back the
-    result as a local relation. Only for reports whose output is a
-    handful of rows (funnel counters, sweep tables, graph health
-    one-liners) — the collect is O(rows_out), never corpus-shaped.
-    Replaces the old "caller owns the cache, call clearCache()"
-    contract for these keys: the cache can no longer outlive the one
-    plan it was built for, and a caller that never calls clearCache()
-    no longer accumulates executor storage round after round
-    (round-6 ADVICE).
+class CacheScope:
+    """The frames one call holds cached; see `cache_scope`."""
 
-    Each cache is materialized SEQUENTIALLY (count(), upstream tiers
-    first — callers pass them in dependency order) before the report
-    collects. A lazily-filled cache referenced k times inside the one
-    report job races its own fill: block-level getOrElseUpdate gives
-    concurrent stages no cross-task fill lock, so each of the k
-    subtrees recomputes the underlying partitions (measured r13:
-    pair_strategy_agreement's stage-sum at x10 is ~50 s but the lazy
-    one-job shape ran 135.7 s — the three pair tiers filled ~3x). The
-    count barriers cost one O(cache) job each and make every fill
-    happen exactly once."""
-    for c in caches:
-        c.count()
-    rows = report.collect()
-    for c in caches:
-        c.unpersist()
-    return spark.createDataFrame(rows, report.schema)
+    def __init__(self) -> None:
+        self._held: list[DataFrame] = []
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        """Persist df (MEMORY_AND_DISK: spills instead of OOMing, and an
+        executor loss recomputes from lineage) and fill it NOW with a
+        count(). Holding in dependency order fills every tier exactly
+        once: a lazily-filled cache referenced k times inside one job
+        races its own fill (block-level getOrElseUpdate gives concurrent
+        stages no cross-task fill lock, so each of the k subtrees
+        recomputes the partitions — measured r13: pair_strategy_agreement
+        at x10 ran 135.7 s against a ~50 s stage sum)."""
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._held.append(df)
+        df.count()
+        return df
+
+    def release(self, df: DataFrame) -> None:
+        """Unpersist df now if this scope holds it — an iterative trainer
+        drops each superseded round frame once its successor is filled,
+        so at most two round frames are live."""
+        if any(d is df for d in self._held):
+            self._held = [d for d in self._held if d is not df]
+            df.unpersist()
+
+
+@contextmanager
+def cache_scope() -> Iterator[CacheScope]:
+    """The engine's one cache lifetime: every frame that more than one
+    action (or one job, more than once) reads is held in a scope, and
+    the scope unpersists all of it on exit — also when the body raises
+    — so no cache outlives the call that built it. Results that must
+    outlive the scope leave it materialized (`eager_report`, or a
+    driver-side collect); only a key whose corpus-shaped output is
+    returned lazily keeps a caller-owned cache instead.
+
+    A plan built from a frame before the frame is held still reads the
+    cache: Spark substitutes cached plans when a query executes, so a
+    report may be assembled first and run inside the scope."""
+    scope = CacheScope()
+    try:
+        yield scope
+    finally:
+        for df in reversed(scope._held):
+            df.unpersist()
+
+
+def eager_report(spark: SparkSession, report: DataFrame) -> DataFrame:
+    """Run a BOUNDED report now and hand it back as a local relation,
+    so it stays valid after the cache scope it read from has closed.
+    Only for a handful of output rows (funnel counters, sweep tables,
+    top-N) — the collect is O(rows_out), never corpus-shaped."""
+    return spark.createDataFrame(report.collect(), report.schema)
+
 
 # BPE-ish token regex: letter runs, digit runs, single punctuation.
 TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"

@@ -1061,119 +1061,3 @@ ORACLE["activity_migration_matrix"] = f"""
              AS share_ppm
     FROM mat CROSS JOIN tot
 """
-
-
-# ---------------------------------------------------------------------------
-# Import-path compatibility for the round-10 family-seam split: every
-# name that lived here before the split remains importable from
-# operators.analytic (tests, streaming twins, and downstream users
-# predate it). QUERIES/ORACLE entries, however, live ONLY in the seam
-# modules — the registry collects each key exactly once.
-# ---------------------------------------------------------------------------
-from flinkproj_spark.operators.stats import (  # noqa: E402,F401
-    percentile_stats,
-    APS_BAND_PCT,
-    approx_percentile_stats,
-    histogram_value,
-    outlier_zscore,
-    chi2_lang_source,
-    ols_trend_monthly,
-    corr_pairs_report,
-    moment_stats_by_source,
-    BENFORD_PPM,
-    benford_deviation,
-    gini_revenue_lorenz,
-    winsorized_mean_by_source,
-    mad_outlier_report,
-    hhi_by_nation,
-    theil_sen_trend_monthly,
-)
-from flinkproj_spark.operators.timeseries import (  # noqa: E402,F401
-    time_rollup_multires,
-    _ROLL_WIN,
-    _ROLL_MIN,
-    anomaly_rolling_z,
-    rolling_median,
-    EWMA_WEIGHTS,
-    EWMA_WSUM,
-    EWMA_FLAG_PCT,
-    ewma_daily_anomaly,
-    _EWMA_TERMS,
-    _EWMA_LAGS,
-    ACF_LAGS,
-    autocorr_daily_revenue,
-    cusum_changepoint,
-    seasonality_profile,
-    seasonal_naive_backtest,
-    twap_user_value,
-    interevent_gap_profile,
-    runs_test_daily,
-)
-from flinkproj_spark.operators.graph import (  # noqa: E402,F401
-    _PR_SCALE,
-    _PR_ITERS,
-    _PR_DAMP_NUM,
-    _PR_DAMP_DEN,
-    _PR_TOP,
-    pagerank_fixed,
-    _LPA_ITERS,
-    _LPA_TOP,
-    label_propagation,
-    _PR_BASE,
-    _PR_ITER_SQL,
-    _LPA_ITER_SQL,
-)
-from flinkproj_spark.operators.privacy import (  # noqa: E402,F401
-    K_ANON_QIDS,
-    K_ANON_KS,
-    k_anonymity_report,
-    L_DIV_QID_BUCKET_C,
-    L_DIV_LS,
-    l_diversity_report,
-    t_closeness_report,
-    K_REPAIR,
-    k_anonymity_repair,
-    anonymized_release,
-    dp_sensitivity_report,
-    DP_CLAMP_GRID,
-    DP_CLAMP_PCT,
-    dp_clamped_release,
-)
-from flinkproj_spark.operators.screens import (  # noqa: E402,F401
-    _IVM_T0,
-    incremental_rollup_merge,
-    _DRIFT_COLS,
-    schema_drift_report,
-    _ANALYZE_COLS,
-    analyze_tables_report,
-    CMS_D,
-    CMS_W,
-    CMS_TOP,
-    cms_hash_rows,
-    cms_heavy_hitters,
-    _CMS_BK,
-    _Z_BITS,
-    zorder_layout,
-    _Z_INTERLEAVE_SQL,
-    QSK_SUB,
-    QSK_TOP,
-    qsk_bucket_col,
-    qsk_hi_col,
-    qsk_decile_estimates,
-    quantile_sketch_audit,
-    JSA_BROADCAST_MAX_ROWS,
-    JSA_SKEW_FANOUT,
-    JSA_EDGES,
-    join_strategy_advisor,
-    _JSA_VALUES,
-    SRM_SALT,
-    CONF_SALT,
-    CONF_PCT,
-    srm_check,
-    conformal_coverage_report,
-    ZM_PROBES,
-    ZM_BITS,
-    zm_zorder_rows,
-    zonemap_effectiveness,
-    _ZM_INTERLEAVE_SQL,
-)

@@ -350,12 +350,8 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     side of both joins but still corpus-proportional, so no broadcast
     hint: AQE picks broadcast only when the runtime size allows.
 
-    Cache contract: the signature frame is persist()ed (three
-    consumers, see below) and stays cached after the result
-    materializes — unpersisting it here would evict the blocks before
-    the caller's action runs. Long-lived callers own the cache
-    lifetime: call spark.catalog.clearCache() after consuming the
-    result, as bench.py and tests/oracle_check.py do."""
+    The signature frame is cached (three consumers, see below) and is
+    caller-owned: the pair-shaped output is returned lazily over it."""
     from flinkproj_spark.operators.dedup import lsh_candidate_pairs
 
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))

@@ -242,10 +242,12 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     setCheckpointDir first), not localCheckpoint: localCheckpoint stores
     blocks only on executors with no lineage, so one lost executor kills
     a cluster job mid-iteration with no recompute path. Edges and the
-    initial labels checkpoint once; each round persists, and every
-    CKPT_EVERY rounds the label frame checkpoints reliably so lineage
-    never grows past a few joins and recovery restarts from the last
-    durable round."""
+    initial labels checkpoint once; each round is held in a cache
+    scope, and every CKPT_EVERY rounds the label frame checkpoints
+    reliably so lineage never grows past a few joins and recovery
+    restarts from the last durable round. The converged labels leave
+    as a reliable checkpoint too, so the returned frame holds no
+    cache."""
     pairs = dedup_minhash_lsh(spark, sf_dir)
     sc = spark.sparkContext
     if sc.getCheckpointDir() is None:
@@ -283,34 +285,33 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).checkpoint(eager=True)
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    retained = None
-    for rnd in range(64):  # bound >> any real diameter; convergence breaks out
-        neighbor = (
-            edges.join(labels, edges.dst == labels.node)
-            .select(edges.src.alias("node"), "label")
-        )
-        new_labels = (
-            labels.unionByName(neighbor)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        if (rnd + 1) % CKPT_EVERY == 0:
-            new_labels = new_labels.checkpoint(eager=True)  # durable, lineage cut
-        else:
-            new_labels = new_labels.persist()  # lineage kept back to last checkpoint
-        # Convergence via the label-sum invariant: labels only ever
-        # decrease (new = min(own, neighbors)), so the sum strictly
-        # drops on any active round and is equal iff nothing changed —
-        # one cheap aggregate (which also materializes the persist)
-        # instead of a join-and-compare per round.
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        if retained is not None:
-            retained.unpersist()
-        retained = new_labels
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
+    with fx.cache_scope() as scope:
+        for rnd in range(64):  # bound >> any real diameter; convergence breaks out
+            neighbor = (
+                edges.join(labels, edges.dst == labels.node)
+                .select(edges.src.alias("node"), "label")
+            )
+            new_labels = (
+                labels.unionByName(neighbor)
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
+            )
+            if (rnd + 1) % CKPT_EVERY == 0:
+                new_labels = new_labels.checkpoint(eager=True)  # durable, lineage cut
+            else:
+                new_labels = scope.hold(new_labels)  # lineage back to last checkpoint
+            scope.release(labels)
+            labels = new_labels
+            # Convergence via the label-sum invariant: labels only ever
+            # decrease (new = min(own, neighbors)), so the sum strictly
+            # drops on any active round and is equal iff nothing changed —
+            # one cheap aggregate instead of a join-and-compare per round.
+            new_sum = labels.agg(F.sum("label")).collect()[0][0]
+            if new_sum == prev_sum:
+                break
+            prev_sum = new_sum
+        if (rnd + 1) % CKPT_EVERY:  # the result outlives the round caches
+            labels = labels.checkpoint(eager=True)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -543,9 +544,7 @@ def pair_strategy_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 1-row fold collects to the driver (bounded, like every
     eager_report) and the 3-row table is assembled locally — callers
     see the same local-relation contract as fx.eager_report, and the
-    base cache is unpersisted before returning (round-6 ADVICE)."""
-    from pyspark.storagelevel import StorageLevel
-
+    base cache lives only for this call (round-6 ADVICE)."""
     from flinkproj_spark.operators.text import _WINNOW_W, positional_shingle_hashes
 
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
@@ -587,8 +586,7 @@ def pair_strategy_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         F.when(n_sh >= _WINNOW_W, fps).alias("fps"),
         F.lit(1).alias("_psa"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    base.count()
+    )
     frames = {
         "minhash_lsh": lsh_candidate_pairs(
             base.filter(F.col("s0").isNotNull()).select(
@@ -622,19 +620,20 @@ def pair_strategy_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(len(names))
         ]
     )
-    fold = per_pair.agg(
-        *[F.coalesce(F.sum(f"c{i}"), F.lit(0)).alias(f"n{i}") for i in range(3)],
-        *[
-            F.coalesce(
-                F.sum(F.col(f"c{i}") * (F.col(f"c{j}") > 0).cast("long")),
-                F.lit(0),
-            ).alias(f"s{i}{j}")
-            for i in range(3)
-            for j in range(3)
-            if i < j
-        ],
-    ).collect()[0]
-    base.unpersist()
+    with fx.cache_scope() as scope:
+        scope.hold(base)
+        fold = per_pair.agg(
+            *[F.coalesce(F.sum(f"c{i}"), F.lit(0)).alias(f"n{i}") for i in range(3)],
+            *[
+                F.coalesce(
+                    F.sum(F.col(f"c{i}") * (F.col(f"c{j}") > 0).cast("long")),
+                    F.lit(0),
+                ).alias(f"s{i}{j}")
+                for i in range(3)
+                for j in range(3)
+                if i < j
+            ],
+        ).collect()[0]
     rows = [
         (names[i], names[j], fold[f"n{i}"], fold[f"n{j}"], fold[f"s{i}{j}"])
         for i in range(3)
@@ -961,22 +960,15 @@ def minhash_banding_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision floor, and the production 3×3 sits between — the table
     an operator reads before moving BAND_ROWS.
 
-    Shape: ONE signature build (persisted for the run of this call —
+    Shape: ONE signature build (cached for the run of this call —
     three band configs and both sides of every agreement join consume
-    it; eager_report materializes the sweep table and unpersists
-    before returning; the _mbs marker keeps the cached plan
-    operator-unique), then per config the same
+    it; the sweep table leaves as a local relation; the _mbs marker
+    keeps the cached plan operator-unique), then per config the same
     capped bucket-expand as production (lsh_candidate_pairs with
     band_rows overridden) and an O(pairs) agreement join. Integer
     end to end."""
-    from pyspark.storagelevel import StorageLevel
-
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    sig = (
-        minhash_signatures(docs)
-        .withColumn("_mbs", F.lit(1))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sig = minhash_signatures(docs).withColumn("_mbs", F.lit(1))
     a = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"s{i}").alias(f"a{i}") for i in range(N_HASHES)],
@@ -1014,7 +1006,9 @@ def minhash_banding_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mean_est_jaccard_ppm"),
         )
         out = row if out is None else out.unionByName(row)
-    return fx.eager_report(spark, out, [sig])
+    with fx.cache_scope() as scope:
+        scope.hold(sig)
+        return fx.eager_report(spark, out)
 
 
 def pair_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1034,17 +1028,13 @@ def pair_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     join confirming (a,c). Both joins are equi-joins on vertex ids —
     at 100 TB this is the textbook distributed triangle count (join
     cost ~ Σ deg², the same wedge bound the output reports). The edge
-    frame feeds three consumers, so it is persisted for the run of
-    this call — eager_report materializes the one-row report and
-    unpersists before returning (the _tri marker keeps its cached
-    plan unique)."""
-    from pyspark.storagelevel import StorageLevel
-
+    frame feeds three consumers, so it is cached for the run of this
+    call and the one-row report leaves as a local relation (the _tri
+    marker keeps its cached plan unique)."""
     edges = (
         dedup_minhash_lsh(spark, sf_dir)
         .select("doc_a", "doc_b")
         .withColumn("_tri", F.lit(1))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     e1 = edges.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     e2 = edges.select(F.col("doc_a").alias("b"), F.col("doc_b").alias("c"))
@@ -1074,7 +1064,9 @@ def pair_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("transitivity_ppm"),
         )
     )
-    return fx.eager_report(spark, report, [edges])
+    with fx.cache_scope() as scope:
+        scope.hold(edges)
+        return fx.eager_report(spark, report)
 
 
 def _winnow_fp_oracle() -> str:
@@ -1939,8 +1931,8 @@ def link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     relied on best-effort exchange reuse that collapses on tiled
     corpora — and symmetrization is ONE explode emitting (a,b),(b,a)
     per pair instead of a self-union, keeping the cached frame
-    single-referenced per consumer. Cache lives for the returned
-    frame's lifetime, the dedup_cluster precedent."""
+    single-referenced per consumer. The cache is caller-owned: the
+    pair-shaped output is returned lazily over it."""
     from pyspark.storagelevel import StorageLevel
 
     edges = (
@@ -2051,10 +2043,8 @@ def graph_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tally, two more for the node census, plus the m count); ONE
     # explode emits both endpoint rows per edge, the persisted endpoint
     # frame feeds all three aggregates, and m is its row count div 2
-    # (each edge contributes exactly two endpoint rows). eager_report
-    # pins the cache lifetime to this call.
-    from pyspark.storagelevel import StorageLevel
-
+    # (each edge contributes exactly two endpoint rows). The cache
+    # lives only for this call.
     epts = (
         lab.select(
             F.explode(
@@ -2070,7 +2060,6 @@ def graph_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("src_a") == F.col("src_b")).alias("intra"),
         )
         .select("e.doc", "e.source", "intra")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     m_row = epts.agg(F.expr("count(*) div 2").alias("m"))
     per = epts.groupBy("source").agg(
@@ -2106,7 +2095,9 @@ def graph_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("q_ppm"),
         )
     )
-    return fx.eager_report(spark, out, [epts])
+    with fx.cache_scope() as scope:
+        scope.hold(epts)
+        return fx.eager_report(spark, out)
 
 
 QUERIES["graph_modularity_report"] = graph_modularity_report
@@ -2309,8 +2300,8 @@ def dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale. Interleaved fresh-JVM A/B at sf0.1: 4.2/4.5 s vs
     5.2/6.2 s plain (and vs 12.7/25.8 s for the eager per-round
     persist variant, whose ~1.4 s/round driver-action overhead
-    dominates at small SF). Cache lives for the returned frame's
-    lifetime, the dedup_cluster precedent."""
+    dominates at small SF). The cache is caller-owned: the per-cluster
+    output is returned lazily over it."""
     from pyspark.storagelevel import StorageLevel
 
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
@@ -2467,13 +2458,13 @@ def dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain, and a LAZY per-round persist was bimodal (min 17.3 s but
     one 177 s pass at x10 — the lazy persist races its own double
     reference). The shipped shape is the textbook synchronous-peel
-    plan: persist the symmetrized edge frame once, then persist each
-    round's surviving-edge frame EAGERLY (materialize via count(),
-    unpersist the previous round) so the executed plan is linear in
-    rounds and the race cannot happen. The per-round count() is a
-    driver scalar on the dup-subset frame — the dedup_cluster
-    trainer-sync contract. The last round's cache lives for the
-    returned frame's lifetime; bench/driver clearCache between keys."""
+    plan: hold the symmetrized edge frame once, then hold each round's
+    surviving-edge frame (filled eagerly, the previous round released)
+    so the executed plan is linear in rounds and the race cannot
+    happen; the last round is read only once, by the output fill. The per-round count() is a driver scalar on the dup-subset
+    frame — the dedup_cluster trainer-sync contract. The returned
+    per-node frame is itself cached (caller-owned, one row per
+    dup-graph node) and filled before the round caches are dropped."""
     from pyspark.storagelevel import StorageLevel
 
     edges = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
@@ -2494,38 +2485,44 @@ def dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.m", "e.n")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    deg0 = und.groupBy("m").agg(F.count("*").alias("deg0"))
-    cur = und
-    prev: DataFrame | None = None
-    for _ in range(KCORE_ROUNDS):
+
+    def peel(cur: DataFrame) -> DataFrame:
         keep = (
             cur.groupBy("m")
             .agg(F.count("*").alias("_d"))
             .filter(F.col("_d") >= KCORE_K)
             .select("m")
         )
-        cur = cur.join(keep, "m", "left_semi").join(
+        return cur.join(keep, "m", "left_semi").join(
             keep.select(F.col("m").alias("n")), "n", "left_semi"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        cur.count()
-        if prev is not None:
-            prev.unpersist()
-        prev = cur
-    core_deg = cur.groupBy("m").agg(F.count("*").alias("core_deg"))
-    return (
-        deg0.join(core_deg, "m", "left")
-        .select(
-            F.col("m").cast("long").alias("doc_id"),
-            F.col("deg0").cast("long").alias("deg0"),
-            F.when(F.col("core_deg").isNotNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("in_core"),
-            F.coalesce("core_deg", F.lit(0)).cast("long").alias("core_deg"),
         )
-    )
+
+    with fx.cache_scope() as scope:
+        cur = und = scope.hold(und)
+        for _ in range(KCORE_ROUNDS - 1):
+            nxt = scope.hold(peel(cur))
+            if cur is not und:
+                scope.release(cur)
+            cur = nxt
+        deg0 = und.groupBy("m").agg(F.count("*").alias("deg0"))
+        # the last round is read once, by the output fill below
+        core_deg = peel(cur).groupBy("m").agg(F.count("*").alias("core_deg"))
+        out = (
+            deg0.join(core_deg, "m", "left")
+            .select(
+                F.col("m").cast("long").alias("doc_id"),
+                F.col("deg0").cast("long").alias("deg0"),
+                F.when(F.col("core_deg").isNotNull(), F.lit(1))
+                .otherwise(F.lit(0))
+                .cast("int")
+                .alias("in_core"),
+                F.coalesce("core_deg", F.lit(0)).cast("long").alias("core_deg"),
+            )
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        out.count()
+    return out
 
 
 QUERIES["dedup_graph_kcore"] = dedup_graph_kcore
@@ -2655,8 +2652,6 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ends explode in-row, the degree groupBy and the two endpoint-degree
     hash joins all move only (doc_id, long) rows; one final 1-row
     aggregate. The corpus text never shuffles."""
-    from pyspark.storagelevel import StorageLevel
-
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
     pairs = _ngram_jaccard_pairs(
         docs.select("doc_id", "lang", _words().alias("ws"))
@@ -2664,8 +2659,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-13 lineage fix (guide §2.4): symmetrize by ONE explode —
     # the self-union referenced the Jaccard pair derivation twice —
     # and persist the directed-end frame, which three consumers read
-    # (the degree aggregate and both endpoint-degree joins);
-    # eager_report pins the cache lifetime to this call.
+    # (the degree aggregate and both endpoint-degree joins), for the
+    # run of this call only.
     ends = (
         pairs.select(
             F.explode(
@@ -2676,7 +2671,6 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.s", "e.d")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     deg = ends.groupBy("s").agg(F.count("*").alias("deg"))
     ed = ends.join(
@@ -2702,7 +2696,9 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             " - CAST(sum_deg AS DECIMAL(38,0)) * sum_deg, 0) AS BIGINT)"
         ).alias("assort_ppm"),
     )
-    return fx.eager_report(spark, out, [ends])
+    with fx.cache_scope() as scope:
+        scope.hold(ends)
+        return fx.eager_report(spark, out)
 
 
 QUERIES["graph_degree_assortativity"] = graph_degree_assortativity

@@ -220,7 +220,10 @@ def pipeline_curate_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the semantic drop set is corpus-proportional, so it
     joins as a plain hash anti join on doc_id, the same no-broadcast
     rule as every drop-set in this funnel; semdedup's own pair cost is
-    cell-bounded (see similarity.semdedup_cells)."""
+    cell-bounded (see similarity.semdedup_cells). The curated corpus is
+    returned lazily over semdedup_cells' caller-owned cache of the
+    cell-assigned embeddings: a long-lived caller clears it
+    (spark.catalog.clearCache()) after consuming the result."""
     from flinkproj_spark.operators.similarity import semdedup_cells
 
     sem_dropped = (
@@ -258,13 +261,12 @@ def filter_funnel_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters, with s2's expensive confirmed subtree referenced TWICE
     (once for its own counter, once inside s3) and only fragile
     exchange reuse between them. Drop sets stay un-broadcast joins —
-    each is corpus-proportional in the worst case. eager_report
-    materializes the cache then the 1-row funnel, and unpersists
-    before returning (the _ffv marker keeps the cached plan unique to
-    this key). Interleaved A/B and the per-stage contract pins live in
+    each is corpus-proportional in the worst case. The cache lives
+    only for this call and the 1-row funnel leaves as a local relation
+    (the _ffv marker keeps the cached plan unique to this key).
+    Interleaved A/B and the per-stage contract pins live in
     tests/test_contract.py."""
     from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
 
     from flinkproj_spark.operators.curation import neardup_semantic_verify
     from flinkproj_spark.operators.dedup import decontaminate, dedup_minhash_lsh
@@ -275,7 +277,6 @@ def filter_funnel_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         _curate_gate(spark, sf_dir)
         .withColumn("_rn", F.row_number().over(w))
         .withColumn("_ffv", F.lit(1))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     younger = (
         dedup_minhash_lsh(spark, sf_dir)
@@ -326,7 +327,9 @@ def filter_funnel_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_after_decontam",
         )
     )
-    return fx.eager_report(spark, out, [gated])
+    with fx.cache_scope() as scope:
+        scope.hold(gated)
+        return fx.eager_report(spark, out)
 
 
 def pipeline_lake(spark: SparkSession, sf_dir: str) -> DataFrame:

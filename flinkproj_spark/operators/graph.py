@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flinkproj_spark import functions as fx
 from flinkproj_spark.sources.tables import load_table
 
 ORACLE = {}
@@ -42,13 +43,9 @@ def pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto dst — two exchanges per iteration, the irreducible cost of
     synchronous PageRank. 3 iterations keep lineage shallow; at 10+
     iterations reuse the reliable-checkpoint pattern from
-    dedup_cluster (operators/dedup.py). Output: top-30 nodes.
-
-    Cache contract: the degree-annotated edge frame is persist()ed
-    (MEMORY_AND_DISK, read once per iteration) and stays cached after
-    the result materializes. Long-lived callers own the cache lifetime:
-    call spark.catalog.clearCache() after consuming the result, as
-    bench.py and tests/oracle_check.py do."""
+    dedup_cluster (operators/dedup.py). Output: top-30 nodes, returned
+    as a local relation; the edge frame's cache lives only for this
+    call."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     # Integer node ids (customer = 2k, supplier = 2k+1): every downstream
@@ -81,15 +78,9 @@ def pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e")
     ).select("e.src", "e.dst")
     # The degree-annotated edge frame is read once PER ITERATION: without
-    # a persist, every iteration's plan re-runs the orders⋈lineitem
+    # a cache, every iteration's plan re-runs the orders⋈lineitem
     # distinct from scratch (measured 7.8 s → the join chain dominates).
-    # MEMORY_AND_DISK is the cluster-safe level — an executor loss
-    # recomputes from lineage, an overflow spills instead of OOMing.
-    from pyspark.storagelevel import StorageLevel
-
-    ed = edges.withColumn(
-        "deg", F.count("*").over(Window.partitionBy("src"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ed = edges.withColumn("deg", F.count("*").over(Window.partitionBy("src")))
     base = _PR_SCALE * (_PR_DAMP_DEN - _PR_DAMP_NUM) // _PR_DAMP_DEN
     # Round 1 collapsed algebraically (r14): the initial rank frame is
     # the CONSTANT _PR_SCALE on exactly the distinct-src node set, and
@@ -125,11 +116,14 @@ def pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     label = F.when(
         F.col("node") % 2 == 0, F.concat(F.lit("c"), (F.col("node") / 2).cast("long"))
     ).otherwise(F.concat(F.lit("s"), ((F.col("node") - 1) / 2).cast("long")))
-    return (
+    top = (
         ranks.orderBy(F.col("rank").desc(), "node")
         .limit(_PR_TOP)
         .select(label.alias("node"), "rank")
     )
+    with fx.cache_scope() as scope:
+        scope.hold(ed)
+        return fx.eager_report(spark, top)
 
 
 _LPA_ITERS = 3
@@ -162,13 +156,9 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join exchange is
     the irreducible synchronous-LPA cost, same as PageRank's; the
     vote frame is community-bounded (nodes × distinct neighbor
-    labels, collapsing every round), never corpus-shaped.
-    Cache contract: the edge frame persists (MEMORY_AND_DISK, read
-    once per round) and stays cached after the result materializes;
-    long-lived callers call spark.catalog.clearCache() after
-    consuming, as bench.py and tests/oracle_check.py do."""
-    from pyspark.storagelevel import StorageLevel
-
+    labels, collapsing every round), never corpus-shaped. The edge
+    frame is cached (read once per round) for this call only; the
+    top-30 is returned as a local relation."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     pairs = (
@@ -183,7 +173,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-union that executes the orders⋈lineitem-distinct subtree
     # twice during the cache fill.
     # The cache is laid out FOR the per-round join (r14): hash-partition
-    # and sort by src before persisting, so every round's SortMergeJoin
+    # and sort by src before caching, so every round's SortMergeJoin
     # reads the cached frame with zero exchange and zero re-sort — the
     # r14 plan audit caught the unpartitioned cache being exchanged AND
     # sorted per round (3 corpus-shaped shuffles per run; pagerank never
@@ -195,8 +185,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
             )
         ).alias("e")
-    ).select("e.src", "e.dst").repartition(F.col("src")) \
-        .sortWithinPartitions("src").persist(StorageLevel.MEMORY_AND_DISK)
+    ).select("e.src", "e.dst").repartition(F.col("src")).sortWithinPartitions("src")
     # Round 1 collapsed algebraically (r14): initial labels are
     # label(node) = node on exactly the distinct-src set, so round-1
     # votes are (dst, src) pairs with count 1 each (edges are distinct)
@@ -231,7 +220,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label") % 2 == 0,
         F.concat(F.lit("c"), F.expr("label div 2")),
     ).otherwise(F.concat(F.lit("s"), F.expr("(label - 1) div 2")))
-    return (
+    top = (
         labels.groupBy("label")
         .agg(
             F.count("*").alias("n_members"),
@@ -242,6 +231,9 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_LPA_TOP)
         .select(readable.alias("community"), "n_members", "n_customers", "n_suppliers")
     )
+    with fx.cache_scope() as scope:
+        scope.hold(edges)
+        return fx.eager_report(spark, top)
 
 
 QUERIES = {

@@ -903,10 +903,10 @@ def pipeline_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair builder and the anti join consume it through four
     subtrees, and a persist is the only contractual way to run each
     payload decode ONCE (ReusedExchange is best-effort; the plan pin
-    in test_plans counts the Arrow stages). Callers own cache
-    lifetime (bench/oracle harness clearCache per key — the house
-    rule). The near-dup drop set is corpus-proportional → NOT
-    broadcast (pipeline_curate's rule)."""
+    in test_plans counts the Arrow stages). The cache is caller-owned:
+    the surviving corpus is returned lazily over it. The near-dup drop
+    set is corpus-proportional → NOT broadcast (pipeline_curate's
+    rule)."""
     from pyspark.storagelevel import StorageLevel
 
     p = _pgm_payloads(spark, sf_dir)

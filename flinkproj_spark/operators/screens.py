@@ -707,16 +707,12 @@ def join_strategy_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     are not deduplicated by reuse and the all-tables ANALYZE pass was
     measured executing TWICE (probe: advisor exec 3.74 s ≈ 2× the
     3.7-s stats key's own 1.9-s exec); the stats frame is now
-    persisted and the 7-row advice table materializes via
-    eager_report, so every table scan happens exactly once. Advice is
-    integer arithmetic (div / ppm) end to end."""
-    from pyspark.storagelevel import StorageLevel
-
+    cached for the run of this call and the 7-row advice table leaves
+    as a local relation, so every table scan happens exactly once.
+    Advice is integer arithmetic (div / ppm) end to end."""
     from flinkproj_spark import functions as fx
 
-    stats = analyze_tables_report(spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    stats = analyze_tables_report(spark, sf_dir)
     edges = spark.createDataFrame(
         list(JSA_EDGES), "fact_table string, fact_key string,"
         " dim_table string, dim_key string"
@@ -763,7 +759,9 @@ def join_strategy_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bucket_both_hint"),
         )
     )
-    return fx.eager_report(spark, out, [stats])
+    with fx.cache_scope() as scope:
+        scope.hold(stats)
+        return fx.eager_report(spark, out)
 
 
 QUERIES["join_strategy_advisor"] = join_strategy_advisor

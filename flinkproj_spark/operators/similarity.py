@@ -644,8 +644,8 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order-function chain that evaluates interpreted, so paying
     it once instead of three times dominates the cache cost at every
     scale (interleaved A/B at sf0.1: 2.42 -> 1.78 s; x10 17.3 -> 10.4).
-    Callers own the cache lifetime via clearCache, the dedup_cluster
-    contract."""
+    The cache is caller-owned: the one-row-per-vector output is returned
+    lazily over it."""
     from pyspark.storagelevel import StorageLevel
 
     base = _quantized(spark, sf_dir)
@@ -691,7 +691,9 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _greedy_keep_from_edges(verts: DataFrame, edges: DataFrame) -> DataFrame:
+def _greedy_keep_from_edges(
+    scope: fx.CacheScope, verts: DataFrame, edges: DataFrame
+) -> DataFrame:
     """Exact sequential-greedy keep set over a DAG of (va < vb)
     similarity edges. Vertices touching no edge are kept outright with
     ZERO loop work — the loop's state is only the edge-touched
@@ -704,21 +706,17 @@ def _greedy_keep_from_edges(verts: DataFrame, edges: DataFrame) -> DataFrame:
     smallest undecided vertex of every component is decided each
     round, so rounds ≤ the longest similarity chain — single digits in
     practice; the per-round scalar count is the dedup_cluster
-    convergence pattern, and the flat status frame (re-persisted,
-    predecessor unpersisted) keeps lineage depth constant. Returns a
-    (vec_id) frame of kept ids; inputs must be persisted by the
-    caller."""
-    from pyspark.storagelevel import StorageLevel
-
+    convergence pattern, and the flat status frame (held in the
+    caller's scope, predecessor released) keeps lineage depth constant.
+    Returns a (vec_id) frame of kept ids, valid while `scope` is open;
+    inputs must be held by the caller."""
     touched = (
         edges.select(F.col("va").alias("vec_id"))
         .unionByName(edges.select(F.col("vb").alias("vec_id")))
         .distinct()
     )
     free = verts.select("vec_id").join(touched, "vec_id", "left_anti")
-    status = touched.withColumn("st", F.lit(0)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    status = scope.hold(touched.withColumn("st", F.lit(0)))
     n_und = status.count()
     for _ in range(64):  # bound >> any real chain depth; break on done
         if n_und == 0:
@@ -734,9 +732,8 @@ def _greedy_keep_from_edges(verts: DataFrame, edges: DataFrame) -> DataFrame:
                 F.max((F.col("st_src") == 0).cast("int")).alias("und_nbr"),
             )
         )
-        new_status = (
-            status.join(upd, "vec_id", "left")
-            .select(
+        new_status = scope.hold(
+            status.join(upd, "vec_id", "left").select(
                 "vec_id",
                 F.when(F.col("st") != 0, F.col("st"))
                 .when(F.coalesce("kept_nbr", F.lit(0)) == 1, F.lit(2))
@@ -744,11 +741,10 @@ def _greedy_keep_from_edges(verts: DataFrame, edges: DataFrame) -> DataFrame:
                 .otherwise(F.lit(0))
                 .alias("st"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        n_und = new_status.filter(F.col("st") == 0).count()
-        status.unpersist()
+        scope.release(status)
         status = new_status
+        n_und = status.filter(F.col("st") == 0).count()
     else:
         raise RuntimeError("greedy keep did not converge in 64 rounds")
     return free.unionByName(
@@ -781,10 +777,9 @@ def semdedup_greedy_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     generic frontier loop (_greedy_keep_from_edges, kept for graphs
     with no cell structure) is the fallback if a pathological cell
     ever outgrows a task. The DuckDB oracle replays the identical
-    greedy as one ordered list_reduce. Caches: the edge list is
-    released before returning; the vertex frame backs the returned
-    (lazy) result, so callers own its lifetime via clearCache (the
-    dedup_cluster contract)."""
+    greedy as one ordered list_reduce. The cell-assigned corpus cache is
+    caller-owned: the one-row-per-vector output is returned lazily over
+    it."""
     from pyspark.storagelevel import StorageLevel
 
     base = _quantized(spark, sf_dir)
@@ -819,7 +814,6 @@ def semdedup_greedy_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("cos") >= SEMDEDUP_MIN_COS)
         .select("cell", "va", "vb")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     verts = corpus.select("vec_id", "cell")
 
@@ -844,14 +838,12 @@ def semdedup_greedy_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     decided = edges.groupBy("cell").applyInPandas(
         _cell_greedy, "vec_id long, is_kept int"
     )
-    out = verts.join(decided, "vec_id", "left").select(
+    return verts.join(decided, "vec_id", "left").select(
         "vec_id",
         "cell",
         # edge-free vectors never reach the grouped map: kept outright.
         F.coalesce("is_kept", F.lit(1)).cast("int").alias("is_kept"),
     )
-    edges.unpersist()
-    return out
 
 
 OUT_FACTOR = 4  # outlier: squared distance > 4× the label mean
@@ -1442,25 +1434,22 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the quantized corpus persists once; each round is one
     in-row distance map against the 64 broadcast literals of the
     newest center, a LEAST() fold into a flat (vec_id, q, mind2)
-    frame (re-persisted, predecessor unpersisted — constant lineage),
+    frame (held per round, predecessor released — constant lineage),
     and a TakeOrderedAndProject argmax (per-partition heaps, no global
     sort). The 1-row collect per round is the algorithm's own
     synchronization point (center k+1 depends on center k), the
     dedup_cluster driver-scalar contract. Nothing corpus-shaped ever
     reaches the driver, and rounds scale with scan bandwidth — the
     standard distributed k-center layout at 100 TB."""
-    from pyspark.storagelevel import StorageLevel
-
-    cur = (
-        _quantized(spark, sf_dir)
-        .select("vec_id", "q", F.lit(None).cast("long").alias("mind2"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cur.count()
-    first = cur.orderBy("vec_id").limit(1).collect()[0]
-    chosen: list[tuple[int, int, int]] = [(1, first.vec_id, 0)]
-    last_q = first.q
-    try:
+    with fx.cache_scope() as scope:
+        cur = scope.hold(
+            _quantized(spark, sf_dir).select(
+                "vec_id", "q", F.lit(None).cast("long").alias("mind2")
+            )
+        )
+        first = cur.orderBy("vec_id").limit(1).collect()[0]
+        chosen: list[tuple[int, int, int]] = [(1, first.vec_id, 0)]
+        last_q = first.q
         for rank in range(2, KCENTER_K + 1):
             cq = F.array(*[F.lit(int(v)) for v in last_q])
             d2 = F.aggregate(
@@ -1468,21 +1457,19 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0).cast("long"),
                 lambda acc, v: acc + v,
             )
-            nxt = cur.select(
-                "vec_id", "q", F.least(F.col("mind2"), d2).alias("mind2")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            nxt = scope.hold(
+                cur.select("vec_id", "q", F.least(F.col("mind2"), d2).alias("mind2"))
+            )
+            scope.release(cur)
+            cur = nxt
             far = (
-                nxt.filter(~F.col("vec_id").isin([c[1] for c in chosen]))
+                cur.filter(~F.col("vec_id").isin([c[1] for c in chosen]))
                 .orderBy(F.col("mind2").desc(), "vec_id")
                 .limit(1)
                 .collect()[0]
             )
-            cur.unpersist()
-            cur = nxt
             chosen.append((rank, far.vec_id, far.mind2))
             last_q = far.q
-    finally:
-        cur.unpersist()
     return spark.createDataFrame(
         chosen, "center_rank int, vec_id bigint, radius2 bigint"
     )
@@ -1655,21 +1642,14 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition), then one map-side-combined groupBy(cid) with 64 long
     sums; the K-row collect per iteration is the trainer
     synchronization contract."""
-    from pyspark.storagelevel import StorageLevel
-
-    base = (
-        _quantized(spark, sf_dir)
-        .select("vec_id", "q")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    base.count()
-    cents = [
-        (int(r.vec_id), [int(x) for x in r.q])
-        for r in base.filter(F.col("vec_id") < KM_K).orderBy("vec_id").collect()
-    ]
-    cents = [(i, v) for i, (_, v) in enumerate(cents)]
-    counts: dict[int, int] = {}
-    try:
+    with fx.cache_scope() as scope:
+        base = scope.hold(_quantized(spark, sf_dir).select("vec_id", "q"))
+        cents = [
+            (int(r.vec_id), [int(x) for x in r.q])
+            for r in base.filter(F.col("vec_id") < KM_K).orderBy("vec_id").collect()
+        ]
+        cents = [(i, v) for i, (_, v) in enumerate(cents)]
+        counts: dict[int, int] = {}
         for _ in range(KM_ITERS):
             # score m = |c|² − 2·q·c: argmin-equivalent to the squared
             # distance (the per-row |q|² shift cancels in every
@@ -1733,8 +1713,6 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (int(r.cid), [int(r[f"c{d}"]) for d in range(DIM)]) for r in rows
             )
             counts = {int(r.cid): int(r.n) for r in rows}
-    finally:
-        base.unpersist()
     out = [
         (cid, d, v[d], counts[cid])
         for cid, v in cents

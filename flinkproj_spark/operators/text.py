@@ -614,8 +614,6 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     training itself (rule k+1 depends on rule k), same driver-scalar
     contract as dedup_cluster's convergence count. The returned frame
     is vocabulary-sized trainer metadata, never corpus-shaped."""
-    from pyspark.storagelevel import StorageLevel
-
     docs = load_table(spark, sf_dir, "documents")
     wc = (
         docs.select(F.explode(fx.tokenize_ws(F.lower("text"))).alias("w"))
@@ -627,10 +625,10 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("||"), F.array_join(F.split("w", "(?!^)"), "||"), F.lit("||")
         ).alias("s"),
         "cnt",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    seg.count()
+    )
     merges: list[tuple[str, str, int]] = []
-    try:
+    with fx.cache_scope() as scope:
+        seg = scope.hold(seg)
         for _ in range(BPE_LEARN_K):
             cur: Column = F.col("s")
             for a, b, _c in merges:
@@ -661,8 +659,6 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not top:
                 break
             merges.append((top[0].lhs, top[0].rhs, top[0].cnt))
-    finally:
-        seg.unpersist()
     return spark.createDataFrame(
         [(k + 1, a, b, c) for k, (a, b, c) in enumerate(merges)],
         "merge_rank int, lhs string, rhs string, cnt bigint",

@@ -49,56 +49,56 @@ _EXTENSION_MODULES = (
 # tests/test_contract.py::test_priority_window_is_mechanical pins the
 # equality so a stale hand copy fails loudly.
 _PRIORITY_KEYS = (
-    "hhi_by_nation",  # last green r8
-    "mad_outlier_report",  # last green r8
-    "theil_sen_trend_monthly",  # last green r8
-    "winsorized_mean_by_source",  # last green r8
-    "anomaly_rolling_z",  # last green r8
-    "autocorr_daily_revenue",  # last green r8
-    "cusum_changepoint",  # last green r8
-    "runs_test_daily",  # last green r8
-    "seasonal_naive_backtest",  # last green r8
-    "pagerank_fixed",  # last green r8
-    "t_closeness_report",  # last green r8
-    "k_anonymity_repair",  # last green r8
-    "anonymized_release",  # last green r8
-    "zorder_layout",  # last green r8
-    "neardup_semantic_verify",  # last green r9
-    "data_card_report",  # last green r9
-    "minhash_containment_estimate",  # last green r9
-    "lsh_parameter_planner",  # last green r9
-    "sessionize",  # last green r9
-    "tpch_q1",  # last green r9
-    "tpch_q3",  # last green r9
-    "tpch_q5",  # last green r9
-    "tpch_q6",  # last green r9
-    "top_k_per_group",  # last green r9
-    "window_functions",  # last green r9
-    "session_window_agg",  # last green r9
-    "set_except",  # last green r9
-    "set_intersect",  # last green r9
-    "global_topk",  # last green r9
-    "rollup_counts",  # last green r9
-    "asof_join",  # last green r9
-    "asof_join_tolerance",  # last green r9
-    "order_total_audit",  # last green r9
-    "backfill_planner",  # last green r9
-    "supplier_scorecard",  # last green r9
-    "table_digest_report",  # last green r9
-    "trade_flow_matrix",  # last green r9
-    "dedup_substring",  # last green r9
-    "winnow_overlap_pairs",  # last green r9
-    "dedup_cluster_sizes",  # last green r9
-    "pair_strategy_agreement",  # last green r9
-    "substring_dedup_clean",  # last green r9
-    "dedup_graph_kcore",  # last green r9
-    "dedup_containment",  # last green r9
-    "graph_degree_assortativity",  # last green r9
-    "ann_topk_pq",  # last green r9
-    "ann_pq_recall_eval",  # last green r9
-    "ivf_pq_topk",  # last green r9
-    "embedding_outliers",  # last green r9
-    "char_gini_concentration",  # last green r9
+    "bpe_pair_counts",  # last green r9
+    "doc_length_survival",  # last green r9
+    "quality_classifier_linear",  # last green r9
+    "multimodal_vad_segments",  # last green r9
+    "compaction_plan",  # last green r9
+    "activity_migration_matrix",  # last green r9
+    "interevent_gap_profile",  # last green r9
+    "dp_sensitivity_report",  # last green r9
+    "dp_clamped_release",  # last green r9
+    "quantile_sketch_audit",  # last green r9
+    "join_strategy_advisor",  # last green r9
+    "srm_check",  # last green r9
+    "conformal_coverage_report",  # last green r9
+    "zonemap_effectiveness",  # last green r9
+    "distinct_counts",  # last green r10
+    "salted_skew_join",  # last green r10
+    "dedup_exact",  # last green r10
+    "dedup_keyed_latest",  # last green r10
+    "dedup_cluster",  # last green r10
+    "dedup_simhash",  # last green r10
+    "dedup_ngram_jaccard",  # last green r10
+    "dedup_pair_degree_hist",  # last green r10
+    "pair_graph_triangles",  # last green r10
+    "decontaminate",  # last green r10
+    "ann_topk_brute",  # last green r10
+    "ann_topk_lsh",  # last green r10
+    "ann_topk_ivf",  # last green r10
+    "ann_recall_eval",  # last green r10
+    "embedding_neardup",  # last green r10
+    "embedding_centroids",  # last green r10
+    "semdedup_cells",  # last green r10
+    "text_token_count",  # last green r10
+    "bpe_apply",  # last green r10
+    "bpe_token_usage",  # last green r10
+    "quality_threshold_sweep",  # last green r10
+    "quality_rank_per_lang",  # last green r10
+    "text_repetition",  # last green r10
+    "text_quality",  # last green r10
+    "hapax_rate_by_lang",  # last green r10
+    "lang_mix_report",  # last green r10
+    "query_expansion_prf",  # last green r10
+    "multimodal_pack",  # last green r10
+    "pipeline_multimodal",  # last green r10
+    "temperature_mix",  # last green r10
+    "vacuum_plan",  # last green r10
+    "shard_balance_report",  # last green r10
+    "pipeline_curate_v3",  # last green r10
+    "pipeline_curate_v4",  # last green r10
+    "filter_funnel_v3",  # last green r10
+    "pipeline_lake",  # last green r10
 )
 
 

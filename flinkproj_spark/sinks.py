@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkproj_spark.functions import cache_scope
+
 UPSERT_HASH_BUCKETS = 16
 
 
@@ -38,27 +40,36 @@ def upsert_keyed(batch: DataFrame, result_dir: str, key: str = "doc_id") -> None
     read is statically partition-pruned to the touched buckets (a
     bounded isin list), and localCheckpoint truncates its lineage so
     Spark permits writing the path it was read from — at 100 TB swap
-    this store for Delta/Iceberg MERGE INTO and keep the call sites."""
-    if batch.isEmpty():
-        return
+    this store for Delta/Iceberg MERGE INTO and keep the call sites.
+
+    The batch is held in a cache scope, so a streaming micro-batch's
+    plan runs ONCE per call: its emptiness check, bucket list, survivor
+    anti join and write all read the cache, where each action on the
+    bare batch would re-run the stateful plan and count its watermark
+    drops again."""
     spark_b = batch.sparkSession
-    spark_b.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    staged = batch.withColumn("kb", F.abs(F.hash(key)) % UPSERT_HASH_BUCKETS)
-    try:
-        existing = spark_b.read.parquet(result_dir)
-    except Exception:
-        existing = None
-    if existing is not None and "kb" in existing.columns:
-        touched = [
-            r.kb for r in staged.select("kb").distinct().collect()
-        ]  # <= UPSERT_HASH_BUCKETS values — a bounded driver list
-        survivors = (
-            existing.filter(F.col("kb").isin(touched))
-            .join(staged.select(key).distinct(), key, "left_anti")
-            .select(*staged.columns)
+    with cache_scope() as scope:
+        staged = scope.hold(
+            batch.withColumn("kb", F.abs(F.hash(key)) % UPSERT_HASH_BUCKETS)
         )
-        staged = staged.unionByName(survivors.localCheckpoint(eager=True))
-    staged.write.mode("overwrite").partitionBy("kb").parquet(result_dir)
+        if staged.isEmpty():
+            return
+        spark_b.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            existing = spark_b.read.parquet(result_dir)
+        except Exception:
+            existing = None
+        if existing is not None and "kb" in existing.columns:
+            touched = [
+                r.kb for r in staged.select("kb").distinct().collect()
+            ]  # <= UPSERT_HASH_BUCKETS values — a bounded driver list
+            survivors = (
+                existing.filter(F.col("kb").isin(touched))
+                .join(staged.select(key).distinct(), key, "left_anti")
+                .select(*staged.columns)
+            )
+            staged = staged.unionByName(survivors.localCheckpoint(eager=True))
+        staged.write.mode("overwrite").partitionBy("kb").parquet(result_dir)
 
 
 def write_partitioned(df: DataFrame, path: str, *partition_cols: str) -> None:

@@ -87,7 +87,7 @@ def drift_view(
 
 def stream_cms_sketch(events: DataFrame) -> DataFrame:
     """Streaming count-min sketch build — the ingest-time twin of
-    operators/analytic.py::cms_heavy_hitters' build stage. The shared
+    operators/screens.py::cms_heavy_hitters' build stage. The shared
     bucket expansion (cms_hash_rows) runs stateless per record; the
     streaming aggregation keeps ONE counter per (row, bucket) —
     bounded at CMS_D × CMS_W keys forever, no watermark needed, which
@@ -98,7 +98,7 @@ def stream_cms_sketch(events: DataFrame) -> DataFrame:
     tests/test_streaming_ext.py). Run in complete/update mode; the
     estimate query (min over a key's CMS_D counters) is a
     broadcast-join against this frame exactly as in the batch audit."""
-    from flinkproj_spark.operators.analytic import cms_hash_rows
+    from flinkproj_spark.operators.screens import cms_hash_rows
 
     return cms_hash_rows(events).groupBy("r", "b").agg(
         F.count("*").alias("counter")
@@ -146,7 +146,7 @@ def stream_source_sketch(docs: DataFrame) -> DataFrame:
 
 def stream_quantile_sketch(orders: DataFrame) -> DataFrame:
     """Streaming revenue-quantile sketch build — the ingest-time twin
-    of operators/analytic.py::quantile_sketch_audit's register stage.
+    of operators/screens.py::quantile_sketch_audit's register stage.
     The DDSketch-style bucket id (qsk_bucket_col, shared expression)
     runs stateless per record; the streaming aggregation keeps ONE
     counter per log2-octave x sub-bucket cell — bounded at ~1k keys
@@ -157,7 +157,7 @@ def stream_quantile_sketch(orders: DataFrame) -> DataFrame:
     tests/test_streaming_ext.py); reading live decile estimates is
     the SAME qsk_decile_estimates the batch audit uses, so the
     monitor can never disagree with the nightly audit."""
-    from flinkproj_spark.operators.analytic import qsk_bucket_col
+    from flinkproj_spark.operators.screens import qsk_bucket_col
 
     vals = orders.select(
         F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").alias("v")
@@ -248,10 +248,10 @@ def stream_vacuum_monitor(inv_state: DataFrame) -> DataFrame:
 
 def build_conformal_thresholds(spark: SparkSession, sf_dir: str) -> dict:
     """Freeze the batch conformal calibration
-    (operators/analytic.py::conformal_coverage_report's threshold
+    (operators/screens.py::conformal_coverage_report's threshold
     stage) into a deploy-time model: {event_type: q90_c}. Bounded
     driver sync — one row per event type, never event rows."""
-    from flinkproj_spark.operators.analytic import conformal_coverage_report
+    from flinkproj_spark.operators.screens import conformal_coverage_report
 
     rows = conformal_coverage_report(spark, sf_dir).collect()
     return {r.event_type: int(r.q90_c) for r in rows}
@@ -306,7 +306,7 @@ def stream_hll_registers(docs: DataFrame) -> DataFrame:
 
 def stream_zonemap_monitor(events: DataFrame) -> DataFrame:
     """Streaming zone-map maintenance for the Morton layout — the
-    ingest-time feed of operators/analytic.py::zonemap_effectiveness.
+    ingest-time feed of operators/screens.py::zonemap_effectiveness.
     Each event folds into its curve bin's (min_uid, max_uid): min/max
     are idempotent AND commutative, so micro-batch merging is exact
     in any arrival order and the live zone maps equal the batch
@@ -317,7 +317,7 @@ def stream_zonemap_monitor(events: DataFrame) -> DataFrame:
     lake that maintains footer stats AT INGEST can plan prunes
     without waiting for the nightly stats job). Run in
     complete/update mode; input stream needs (user_id, ts)."""
-    from flinkproj_spark.operators.analytic import zm_zorder_rows
+    from flinkproj_spark.operators.screens import zm_zorder_rows
 
     return zm_zorder_rows(events).groupBy("b").agg(
         F.min("uid").alias("mn"), F.max("uid").alias("mx")
@@ -326,7 +326,7 @@ def stream_zonemap_monitor(events: DataFrame) -> DataFrame:
 
 def stream_srm_monitor(events: DataFrame, horizon: str = "40 days") -> DataFrame:
     """Streaming sample-ratio-mismatch monitor — the ingest-time twin
-    of operators/analytic.py::srm_check's user-count stage. Each
+    of operators/screens.py::srm_check's user-count stage. Each
     user's FIRST event admits them to their hash variant
     (dropDuplicatesWithinWatermark on user_id — state is one row per
     user within the horizon, the experiment-population scale any SRM
@@ -338,7 +338,7 @@ def stream_srm_monitor(events: DataFrame, horizon: str = "40 days") -> DataFrame
     SHARED srm expression (same salt), so monitor and nightly check
     can never disagree on assignment. Input stream needs
     (user_id, ts)."""
-    from flinkproj_spark.operators.analytic import SRM_SALT
+    from flinkproj_spark.operators.screens import SRM_SALT
 
     variant = F.when(
         F.substring(

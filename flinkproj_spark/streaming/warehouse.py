@@ -33,6 +33,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flinkproj_spark.functions import cache_scope
+
 _KEEP_VERSIONS = 2
 
 
@@ -232,8 +234,8 @@ def stream_scd2(events: DataFrame, store_dir: str, checkpoint_dir: str):
                     "event_id",
                 )
             )
-        runs = _scd2_runs(rows).persist()
-        try:
+        with cache_scope() as scope:
+            runs = scope.hold(_scd2_runs(rows))
             closed = runs.filter(F.col("valid_to").isNotNull()).select(
                 "user_id", "event_type", "valid_from", "valid_to"
             )
@@ -244,8 +246,6 @@ def stream_scd2(events: DataFrame, store_dir: str, checkpoint_dir: str):
                 "user_id", "event_type", "valid_from", "event_id"
             )
             _commit_version(new_open, open_store, epoch_id)
-        finally:
-            runs.unpersist()
 
     return (
         events.writeStream.foreachBatch(merge)

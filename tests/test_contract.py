@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from flinkproj_spark import registry
 from flinkproj_spark.sources.tables import TABLES
@@ -98,6 +99,19 @@ def test_funnel_v3_counts_equal_pipeline_outputs(spark, sf_dir):
     assert row.n_gated < row.n_total
     assert row.n_after_decontam > 0
     spark.catalog.clearCache()
+
+
+def test_decontaminate_output_is_doc_unique(spark, sf_dir):
+    """filter_funnel_v3 folds its drop sets as left-join flags, which is
+    exact only while every drop set is doc-unique; `contaminated` comes
+    straight from decontaminate with no distinct(), so a duplicate
+    doc_id there would inflate the funnel counters instead of failing."""
+    from flinkproj_spark.operators.dedup import decontaminate
+
+    out = decontaminate(spark, sf_dir)
+    n, n_docs = out.agg(F.count("*"), F.countDistinct("doc_id")).collect()[0]
+    assert n == n_docs and n > 0
+    assert out.filter(F.col("contaminated")).count() > 0  # the flag is live
 
 
 def test_attribution_last_touch_equals_asof_join(spark, sf_dir):

@@ -125,8 +125,10 @@ def test_approx_percentile_within_error_bound(spark, sf_dir):
     segment's GK estimate must sit inside the APS_BAND_PCT band (the
     verdict column the DuckDB oracle pins to 1), and the exact columns
     must agree with the exact twin."""
-    from flinkproj_spark.operators.analytic import (
-        approx_percentile_stats, percentile_stats)
+    from flinkproj_spark.operators.stats import (
+        approx_percentile_stats,
+        percentile_stats,
+    )
 
     exact = {r.c_mktsegment: r for r in percentile_stats(spark, sf_dir).collect()}
     rows = {r.c_mktsegment: r for r in approx_percentile_stats(spark, sf_dir).collect()}
@@ -331,10 +333,7 @@ def test_key_skew_profile_is_heavy_hitter_ranked(spark, sf_dir):
 
 
 def test_pagerank_mass_is_conserved_and_ranked(spark, sf_dir):
-    from flinkproj_spark.operators.analytic import (
-        _PR_SCALE,
-        pagerank_fixed,
-    )
+    from flinkproj_spark.operators.graph import _PR_SCALE, pagerank_fixed
 
     df = pagerank_fixed(spark, sf_dir).toPandas()
     assert len(df) == 30
@@ -346,7 +345,7 @@ def test_pagerank_mass_is_conserved_and_ranked(spark, sf_dir):
 
 
 def test_anomaly_rolling_z_flags_are_sane(spark, sf_dir):
-    from flinkproj_spark.operators.analytic import anomaly_rolling_z
+    from flinkproj_spark.operators.timeseries import anomaly_rolling_z
 
     df = anomaly_rolling_z(spark, sf_dir).toPandas()
     rate = df["is_anomaly"].mean()
@@ -416,7 +415,7 @@ def test_filter_funnel_is_monotone(spark, sf_dir):
 
 
 def test_chi2_cells_cover_the_contingency_table(spark, sf_dir):
-    from flinkproj_spark.operators.analytic import chi2_lang_source
+    from flinkproj_spark.operators.stats import chi2_lang_source
     from flinkproj_spark.sources.tables import load_table
 
     df = chi2_lang_source(spark, sf_dir).toPandas()
@@ -525,7 +524,7 @@ def test_zorder_buckets_are_locality_tight(spark, sf_dir):
     """The point of the curve: each z-bucket must span a narrow band of
     BOTH dimensions relative to the full domain (that is what lets
     min-max file stats prune on either predicate)."""
-    from flinkproj_spark.operators.analytic import zorder_layout
+    from flinkproj_spark.operators.screens import zorder_layout
     from flinkproj_spark.sources.tables import load_table
     import pyspark.sql.functions as F
 
@@ -544,10 +543,7 @@ def test_incremental_merge_equals_full_recompute(spark, sf_dir):
     """The IVM invariant directly: merging the pre-T0 base rollup with
     the post-T0 delta must reproduce the full-history rollup row for
     row — including buckets present on only one side of the merge."""
-    from flinkproj_spark.operators.analytic import (
-        _IVM_T0,
-        incremental_rollup_merge,
-    )
+    from flinkproj_spark.operators.screens import _IVM_T0, incremental_rollup_merge
     from flinkproj_spark.sources.tables import load_table
     import pyspark.sql.functions as F
 
@@ -1183,16 +1179,17 @@ def test_greedy_keep_chain_semantics(spark):
     """Exact greedy on a planted chain 1-2-3-4 plus an isolated pair
     (5,6): keep 1, drop 2, resurrect 3, drop 4; keep 5, drop 6 —
     the textbook sequential kept-set the frontier loop must replay."""
+    from flinkproj_spark.functions import cache_scope
     from flinkproj_spark.operators.similarity import _greedy_keep_from_edges
 
     verts = spark.createDataFrame([(i,) for i in range(1, 7)], "vec_id long")
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (5, 6)], "va long, vb long"
     )
-    verts.persist(); edges.persist()
-    kept = sorted(r.vec_id for r in _greedy_keep_from_edges(verts, edges).collect())
+    with cache_scope() as scope:
+        kept_df = _greedy_keep_from_edges(scope, scope.hold(verts), scope.hold(edges))
+        kept = sorted(r.vec_id for r in kept_df.collect())
     assert kept == [1, 3, 5]
-    spark.catalog.clearCache()
 
 
 def test_bpe_learn_merges_invariants(spark, sf_dir):
@@ -1239,7 +1236,7 @@ def test_label_propagation_partitions_graph(spark, sf_dir):
     splits sum to the member count, members across communities sum to
     the full node population, and at least two communities survive
     (the planted trade graph is not one blob at any SF)."""
-    from flinkproj_spark.operators.analytic import label_propagation
+    from flinkproj_spark.operators.graph import label_propagation
     from flinkproj_spark.sources.tables import load_table
 
     out = label_propagation(spark, sf_dir).collect()
@@ -1487,7 +1484,7 @@ def test_cms_estimates_never_undercount(spark, sf_dir):
     audit covers the exact top-20, and over_ppm is the exact integer
     ratio. At least one user should estimate exactly (sparse sketch at
     test scale)."""
-    from flinkproj_spark.operators.analytic import CMS_TOP, cms_heavy_hitters
+    from flinkproj_spark.operators.screens import CMS_TOP, cms_heavy_hitters
     from flinkproj_spark.sources.tables import load_table
 
     rows = cms_heavy_hitters(spark, sf_dir).collect()
@@ -1887,10 +1884,7 @@ def test_analyze_report_null_path_fires_on_planted_nulls(spark, sf_dir, tmp_path
     import os
     import shutil
 
-    from flinkproj_spark.operators.analytic import (
-        _ANALYZE_COLS,
-        analyze_tables_report,
-    )
+    from flinkproj_spark.operators.screens import _ANALYZE_COLS, analyze_tables_report
 
     live = analyze_tables_report(spark, sf_dir).collect()
     assert len(live) == sum(len(c) for c in _ANALYZE_COLS.values())
@@ -1928,10 +1922,7 @@ def test_basket_pairs_match_bruteforce(spark, sf_dir):
     integer lift."""
     from itertools import combinations
 
-    from flinkproj_spark.operators.analytic import (
-        _BASKET_TOP,
-        basket_pair_lift,
-    )
+    from flinkproj_spark.operators.analytic import _BASKET_TOP, basket_pair_lift
 
     baskets = [
         sorted(set(r.parts))
@@ -2035,10 +2026,7 @@ def test_cep_matcher_equals_python_state_machine(spark, sf_dir):
     the same greedy skip-till-next-match machine — matches, order,
     timestamps, and the expiry branch (which must actually fire on
     this corpus for the test to mean anything)."""
-    from flinkproj_spark.operators.analytic import (
-        _CEP_WITHIN_US,
-        cep_pattern_matches,
-    )
+    from flinkproj_spark.operators.analytic import _CEP_WITHIN_US, cep_pattern_matches
 
     evs: dict[int, list] = {}
     for r in (
@@ -2078,7 +2066,7 @@ def test_ewma_daily_anomaly_matches_python_recursion(spark, sf_dir):
     """The truncated-EWMA linear form must equal a direct Python
     recomputation of the weighted lag sum per (type, day), and the
     20% flag must split live (both flagged and unflagged rows)."""
-    from flinkproj_spark.operators.analytic import (
+    from flinkproj_spark.operators.timeseries import (
         EWMA_FLAG_PCT,
         EWMA_WEIGHTS,
         EWMA_WSUM,
@@ -2129,7 +2117,7 @@ def test_k_anonymity_report_matches_python(spark, sf_dir):
     (some classes below, some not)."""
     from collections import Counter
 
-    from flinkproj_spark.operators.analytic import (
+    from flinkproj_spark.operators.privacy import (
         K_ANON_KS,
         K_ANON_QIDS,
         k_anonymity_report,
@@ -2378,7 +2366,7 @@ def test_ols_trend_is_exact_least_squares(spark, sf_dir):
     RAW (unpivoted) series, proving the integer pivots change nothing."""
     from fractions import Fraction
 
-    from flinkproj_spark.operators.analytic import ols_trend_monthly
+    from flinkproj_spark.operators.stats import ols_trend_monthly
 
     raw = load_table(spark, sf_dir, "orders").collect()
     monthly: dict[int, int] = {}
@@ -2410,7 +2398,7 @@ def test_corr_pairs_discriminates_and_is_exact(spark, sf_dir):
     formula — pivot shift-invariance again), the real metric pairs must
     score high with positive sign, and the doc_id%7 null control must
     score near zero — the discrimination that makes the report usable."""
-    from flinkproj_spark.operators.analytic import corr_pairs_report
+    from flinkproj_spark.operators.stats import corr_pairs_report
 
     docs = load_table(spark, sf_dir, "documents").collect()
     met = [
@@ -2475,7 +2463,7 @@ def test_l_diversity_report_recount(spark, sf_dir):
     be live: at least one class below the max l."""
     from collections import defaultdict
 
-    from flinkproj_spark.operators.analytic import (
+    from flinkproj_spark.operators.privacy import (
         L_DIV_LS,
         L_DIV_QID_BUCKET_C,
         l_diversity_report,
@@ -2515,7 +2503,7 @@ def test_twap_differs_from_plain_avg_and_is_exact(spark, sf_dir):
     the duration-faithfulness that justifies the operator."""
     from collections import defaultdict
 
-    from flinkproj_spark.operators.analytic import twap_user_value
+    from flinkproj_spark.operators.timeseries import twap_user_value
 
     by_user = defaultdict(list)
     for r in load_table(spark, sf_dir, "events").collect():
@@ -2629,10 +2617,8 @@ def test_seasonality_profile_conserves_residuals(spark, sf_dir):
     cell n_m sums to the month count, cell residual sums to the total
     residual, and each seas_ppm is the exact HUGEINT-style division
     recomputed in Python."""
-    from flinkproj_spark.operators.analytic import (
-        ols_trend_monthly,
-        seasonality_profile,
-    )
+    from flinkproj_spark.operators.stats import ols_trend_monthly
+    from flinkproj_spark.operators.timeseries import seasonality_profile
 
     fit = ols_trend_monthly(spark, sf_dir).collect()
     fit_total = sum(r.rev_c for r in fit) - sum(r.resid_c for r in fit)
@@ -2660,10 +2646,7 @@ def test_benford_constants_and_recount(spark, sf_dir):
     with the audit genuinely firing on the synthetic pricing."""
     import math
 
-    from flinkproj_spark.operators.analytic import (
-        BENFORD_PPM,
-        benford_deviation,
-    )
+    from flinkproj_spark.operators.stats import BENFORD_PPM, benford_deviation
 
     for d, ppm in BENFORD_PPM.items():
         assert ppm == math.floor(math.log10(1 + 1 / int(d)) * 1_000_000)
@@ -2689,7 +2672,7 @@ def test_gini_lorenz_exact_and_monotone(spark, sf_dir):
     truncation), and money is conserved."""
     from collections import defaultdict
 
-    from flinkproj_spark.operators.analytic import gini_revenue_lorenz
+    from flinkproj_spark.operators.stats import gini_revenue_lorenz
 
     spend = defaultdict(int)
     for r in load_table(spark, sf_dir, "orders").collect():
@@ -2726,7 +2709,7 @@ def test_moment_stats_exact_identities(spark, sf_dir):
     from collections import defaultdict
     from fractions import Fraction
 
-    from flinkproj_spark.operators.analytic import moment_stats_by_source
+    from flinkproj_spark.operators.stats import moment_stats_by_source
 
     xs = defaultdict(list)
     for r in load_table(spark, sf_dir, "documents").collect():
@@ -2832,10 +2815,7 @@ def test_autocorr_exact_and_iid_finding(spark, sf_dir):
     pivoted daily series, and all lags must sit near zero — the
     corpus's i.i.d.-across-days property the operator exists to
     check."""
-    from flinkproj_spark.operators.analytic import (
-        ACF_LAGS,
-        autocorr_daily_revenue,
-    )
+    from flinkproj_spark.operators.timeseries import ACF_LAGS, autocorr_daily_revenue
 
     daily = _daily_rev(spark, sf_dir)
     n = len(daily)
@@ -2859,7 +2839,7 @@ def test_cusum_peak_is_argmax(spark, sf_dir):
     """The cusum curve must equal the running-deviation recount, have
     exactly one flagged peak at the min-di argmax of |cusum|, and the
     shares must be the exact ppm of the peak."""
-    from flinkproj_spark.operators.analytic import cusum_changepoint
+    from flinkproj_spark.operators.timeseries import cusum_changepoint
 
     daily = _daily_rev(spark, sf_dir)
     cy = sum(daily.values()) // len(daily)
@@ -2942,7 +2922,7 @@ def test_runs_test_recount(spark, sf_dir):
     """obs_runs must equal the runs count of the above/below-pivot sign
     sequence in day order, and the ratio must sit near 1e6 (the i.i.d.
     verdict that corroborates the ACF)."""
-    from flinkproj_spark.operators.analytic import runs_test_daily
+    from flinkproj_spark.operators.timeseries import runs_test_daily
 
     daily = _daily_rev(spark, sf_dir)
     cy = sum(daily.values()) // len(daily)
@@ -2964,10 +2944,7 @@ def test_t_closeness_exact_variational_distance(spark, sf_dir):
     import math
     from collections import Counter, defaultdict
 
-    from flinkproj_spark.operators.analytic import (
-        L_DIV_QID_BUCKET_C,
-        t_closeness_report,
-    )
+    from flinkproj_spark.operators.privacy import L_DIV_QID_BUCKET_C, t_closeness_report
 
     per_class = defaultdict(Counter)
     glob = Counter()
@@ -3006,7 +2983,7 @@ def test_hhi_recount_and_invariants(spark, sf_dir):
     (1e4/n_nations) and monopoly (10000)."""
     from collections import defaultdict
 
-    from flinkproj_spark.operators.analytic import hhi_by_nation
+    from flinkproj_spark.operators.stats import hhi_by_nation
 
     nat_of = {
         r.c_custkey: r.c_nationkey
@@ -3041,7 +3018,7 @@ def test_iterative_trainers_are_partitioning_invariant(spark, sf_dir):
     generically; these two iterate through driver-side collects, so
     the invariance is pinned explicitly at 7 shuffle partitions (the
     odd-partitioning gauntlet figure)."""
-    from flinkproj_spark.operators.analytic import label_propagation
+    from flinkproj_spark.operators.graph import label_propagation
     from flinkproj_spark.operators.similarity import kmeans_lloyd
 
     for fn in (kmeans_lloyd, label_propagation):
@@ -3064,7 +3041,7 @@ def test_k_anonymity_repair_achieves_k(spark, sf_dir):
     and classes merged at the same generalization level agree on the
     size of the class they landed in (levels are a real partition of
     the release, not per-row fictions)."""
-    from flinkproj_spark.operators.analytic import K_REPAIR, k_anonymity_repair
+    from flinkproj_spark.operators.privacy import K_REPAIR, k_anonymity_repair
 
     rows = k_anonymity_repair(spark, sf_dir).collect()
     assert rows
@@ -3100,7 +3077,7 @@ def test_mad_fence_fires_on_planted_monsters(spark, sf_dir, tmp_path):
 
     import pandas as pd
 
-    from flinkproj_spark.operators.analytic import mad_outlier_report
+    from flinkproj_spark.operators.stats import mad_outlier_report
 
     clean = {r.source: r for r in mad_outlier_report(spark, sf_dir).collect()}
     src_name = sorted(clean)[0]
@@ -3286,7 +3263,7 @@ def test_theil_sen_resists_planted_corrupt_month(spark, sf_dir, tmp_path):
 
     import pandas as pd
 
-    from flinkproj_spark.operators.analytic import theil_sen_trend_monthly
+    from flinkproj_spark.operators.stats import theil_sen_trend_monthly
 
     clean = theil_sen_trend_monthly(spark, sf_dir).collect()[0]
 
@@ -3307,7 +3284,7 @@ def test_theil_sen_resists_planted_corrupt_month(spark, sf_dir, tmp_path):
     assert ts_move < 0.15, ts_move
 
     def ols_slope(sfd):
-        from flinkproj_spark.operators.analytic import ols_trend_monthly
+        from flinkproj_spark.operators.stats import ols_trend_monthly
 
         return ols_trend_monthly(spark, sfd).collect()[0].slope_c_per_month
 
@@ -3453,7 +3430,7 @@ def test_k_anonymity_ladder_rungs_live_at_sf01(spark, tmp_path):
 
     import pandas as pd
 
-    from flinkproj_spark.operators.analytic import k_anonymity_repair
+    from flinkproj_spark.operators.privacy import k_anonymity_repair
 
     src = "/root/testdata/sf0.1"
     planted = tmp_path / "planted_sf"
@@ -3510,10 +3487,7 @@ def test_quantile_sketch_is_mergeable(spark, sf_dir):
     1/QSK_SUB = 62_500 ppm construction bound."""
     import pyspark.sql.functions as F
 
-    from flinkproj_spark.operators.analytic import (
-        QSK_SUB,
-        quantile_sketch_audit,
-    )
+    from flinkproj_spark.operators.screens import QSK_SUB, quantile_sketch_audit
 
     orders = load_table(spark, sf_dir, "orders")
 
@@ -3665,7 +3639,7 @@ def test_join_advisor_matches_house_strategies(spark, sf_dir):
     the one big-big edge (lineitem><orders) is a shuffle with the
     bucket-both hint, hot-fanout keys (l_suppkey at 600x) carry the
     skew hint, and referenced-dim coverage is in (0, 1e6]."""
-    from flinkproj_spark.operators.analytic import join_strategy_advisor
+    from flinkproj_spark.operators.screens import join_strategy_advisor
 
     # sf0.01: the smallest SF where orders crosses the broadcast
     # ceiling — at sf0.001 every build side fits and all-broadcast is
@@ -3746,7 +3720,7 @@ def test_srm_check_chi2_and_partition(spark, sf_dir):
     """srm_check: exactly two variants partitioning the user universe,
     chi2 = (a-b)^2*1e6/(a+b) recomputed from the per-variant counts,
     and conversion counts bounded by user counts."""
-    from flinkproj_spark.operators.analytic import srm_check
+    from flinkproj_spark.operators.screens import srm_check
     from flinkproj_spark.sources.tables import load_table
 
     rows = {r.variant: r for r in srm_check(spark, sf_dir).collect()}
@@ -3769,7 +3743,7 @@ def test_conformal_coverage_near_nominal(spark, sf_dir):
     """The calibration q90 must cover roughly 90% of the held-out test
     half for every event type (wide tolerance at toy SF), and the
     cal/test split must partition each type's events."""
-    from flinkproj_spark.operators.analytic import conformal_coverage_report
+    from flinkproj_spark.operators.screens import conformal_coverage_report
     from flinkproj_spark.sources.tables import load_table
 
     rows = conformal_coverage_report(spark, sf_dir).collect()
@@ -3792,7 +3766,7 @@ def test_dp_sensitivity_bounds(spark, sf_dir):
     """Per-nation sensitivity: the max contribution is <= the nation
     total, sens_ppm is its exact ppm share, and a single-contributor
     nation (if any) would show ppm 1e6 — all rows in (0, 1e6]."""
-    from flinkproj_spark.operators.analytic import dp_sensitivity_report
+    from flinkproj_spark.operators.privacy import dp_sensitivity_report
 
     rows = dp_sensitivity_report(spark, sf_dir).collect()
     assert rows
@@ -3808,7 +3782,7 @@ def test_dp_clamp_threshold_and_mass(spark, sf_dir):
     of per-customer revenue (recomputed in pure Python), the clamp
     must actually clip someone (live), and per-nation clamped sums
     must equal clamping applied row-wise."""
-    from flinkproj_spark.operators.analytic import (
+    from flinkproj_spark.operators.privacy import (
         DP_CLAMP_GRID,
         DP_CLAMP_PCT,
         dp_clamped_release,
@@ -3881,7 +3855,7 @@ def test_interevent_gap_profile_moments(spark, sf_dir):
     degenerate) for every type."""
     from collections import defaultdict
 
-    from flinkproj_spark.operators.analytic import interevent_gap_profile
+    from flinkproj_spark.operators.timeseries import interevent_gap_profile
     from flinkproj_spark.sources.tables import load_table
 
     import pyspark.sql.functions as F
@@ -3978,7 +3952,7 @@ def test_zonemap_zorder_prunes_where_time_layout_cannot(spark):
     far smaller fraction of its zone maps than the day-partitioned
     layout for the same user-id probes, time bins must span ~every
     probe, and scan_ppm must be the exact ratio of its own columns."""
-    from flinkproj_spark.operators.analytic import zonemap_effectiveness
+    from flinkproj_spark.operators.screens import zonemap_effectiveness
 
     rows = {
         r.layout: r

@@ -16,6 +16,26 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _eager_report_frame(fn, spark, sf_dir):
+    """The internal frame a key hands to fx.eager_report, after it ran
+    (its executed plan is the one that read the key's held caches)."""
+    from flinkproj_spark import functions as fx
+
+    captured = {}
+    orig = fx.eager_report
+
+    def capture(sp, report):
+        captured["report"] = report
+        return orig(sp, report)
+
+    fx.eager_report = capture
+    try:
+        fn(spark, sf_dir)
+    finally:
+        fx.eager_report = orig
+    return captured["report"]
+
+
 def _formatted(df) -> str:
     return df._sc._jvm.org.apache.spark.sql.execution.ExplainUtils.processPlan(
         df._jdf.queryExecution().executedPlan(),
@@ -462,7 +482,7 @@ def test_ivf_cells_as_partition_column_prune_probes(spark, sf_dir, tmp_path):
 
 
 def test_time_rollup_is_single_expand_single_shuffle(spark, sf_dir):
-    from flinkproj_spark.operators.analytic import time_rollup_multires
+    from flinkproj_spark.operators.timeseries import time_rollup_multires
 
     plan = _plan(time_rollup_multires(spark, sf_dir))
     assert plan.count("Expand") == 1  # one pass for all three resolutions
@@ -629,13 +649,67 @@ def test_no_key_regresses_to_python_eval(spark, sf_dir):
 
 
 def test_pagerank_has_no_cartesian_and_bounded_lineage(spark, sf_dir):
-    from flinkproj_spark.operators.analytic import pagerank_fixed
+    from flinkproj_spark.operators.graph import pagerank_fixed
     from flinkproj_spark.plans.checks import executed_plan
 
-    plan = executed_plan(pagerank_fixed(spark, sf_dir))
+    plan = executed_plan(_eager_report_frame(pagerank_fixed, spark, sf_dir))
     assert "CartesianProduct" not in plan
     # iterative joins stay equi-joins on the node key
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
+
+
+def _joins_reading_cache_directly(df) -> int:
+    """How many SortMergeJoins of df's executed plan have a child that
+    reaches an InMemoryTableScan through no Exchange, Sort, join or
+    aggregate — i.e. the join reads the cache in the layout it was
+    cached with."""
+    def children(node):
+        name = node.getClass().getSimpleName()
+        if name.endswith("QueryStageExec"):
+            return [node.plan()]
+        if name == "AdaptiveSparkPlanExec":
+            return [node.executedPlan()]
+        ch = node.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def clean(node) -> bool:
+        name = node.nodeName()
+        if name == "InMemoryTableScan":
+            return True
+        if name in ("Exchange", "Sort", "ReusedExchange") or "Join" in name or "Aggregate" in name:
+            return False
+        return any(clean(c) for c in children(node))
+
+    def walk(node) -> int:
+        here = node.nodeName() == "SortMergeJoin" and any(clean(c) for c in children(node))
+        return int(here) + sum(walk(c) for c in children(node))
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def test_iterative_graph_joins_read_the_edge_cache_in_place(spark, sf_dir):
+    """pagerank_fixed's and label_propagation's per-round SortMergeJoin
+    reads the held edge frame with no Exchange or Sort in between: the
+    cache is laid out by src (pagerank: its degree window; LPA: an
+    explicit repartition+sort), so every round after the first joins
+    without re-shuffling the edges. Captured inside the key's cache
+    scope through eager_report."""
+    from flinkproj_spark.operators.graph import (
+        _LPA_ITERS,
+        _PR_ITERS,
+        label_propagation,
+        pagerank_fixed,
+    )
+
+    broadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        pr = _eager_report_frame(pagerank_fixed, spark, sf_dir)
+        lpa = _eager_report_frame(label_propagation, spark, sf_dir)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcast)
+    assert _joins_reading_cache_directly(pr) == _PR_ITERS - 1, _plan(pr)
+    assert _joins_reading_cache_directly(lpa) == _LPA_ITERS - 1, _plan(lpa)
 
 
 def test_tfidf_term_join_not_broadcast(spark, sf_dir):
@@ -1053,7 +1127,7 @@ def test_ewma_window_runs_over_daily_aggregate(spark, sf_dir):
     """ewma_daily_anomaly's lag window must run over the per-day
     aggregate (HashAggregate below the Window), be partitioned by
     event_type (never a global sort), and stay JVM-side."""
-    from flinkproj_spark.operators.analytic import ewma_daily_anomaly
+    from flinkproj_spark.operators.timeseries import ewma_daily_anomaly
 
     plan = _plan(ewma_daily_anomaly(spark, sf_dir))
     lines = plan.splitlines()
@@ -1067,7 +1141,7 @@ def test_k_anonymity_broadcasts_the_k_list(spark, sf_dir):
     """k_anonymity_report must broadcast the 4-row k frame against the
     QID-class aggregate — one scan of customer, no shuffle join, no
     sort anywhere."""
-    from flinkproj_spark.operators.analytic import k_anonymity_report
+    from flinkproj_spark.operators.privacy import k_anonymity_report
 
     plan = _plan(k_anonymity_report(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
@@ -1121,22 +1195,9 @@ def test_modularity_scalar_m_is_broadcast(spark, sf_dir):
     frame is a local relation), so the INTERNAL report frame is
     captured by wrapping eager_report — the assertions pin the plan
     that actually executes."""
-    from flinkproj_spark import functions as fx
     from flinkproj_spark.operators.dedup import graph_modularity_report
 
-    captured = {}
-    orig = fx.eager_report
-
-    def capture(sp, report, caches):
-        captured["report"] = report
-        return orig(sp, report, caches)
-
-    fx.eager_report = capture
-    try:
-        graph_modularity_report(spark, sf_dir)
-    finally:
-        fx.eager_report = orig
-    plan = _plan(captured["report"])
+    plan = _plan(_eager_report_frame(graph_modularity_report, spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
@@ -1148,7 +1209,7 @@ def test_gini_rank_window_is_bucket_partitioned(spark, sf_dir):
     # rank must partition by the 2^24-cent bucket — the only
     # unpartitioned ordered windows left are the bucket-count offset
     # frame (money-domain-bounded) and the 10-row decile cumsum.
-    from flinkproj_spark.operators.analytic import gini_revenue_lorenz
+    from flinkproj_spark.operators.stats import gini_revenue_lorenz
 
     plan = _plan(gini_revenue_lorenz(spark, sf_dir))
     rn = [l for l in plan.splitlines() if "row_number()" in l]

@@ -67,6 +67,33 @@ class TestStreamReport:
         first_window = rows["2018-01-01_10:00:10-shelf-AREA_US"]
         assert first_window["count"] == 2  # corrected result, not 1
 
+    def test_late_rows_dropped_once_per_trigger(self, spark, tmp_path):
+        """The sink runs each micro-batch plan once, so a trigger whose
+        file carries k rows behind the watermark reports exactly k in
+        numRowsDroppedByWatermark (each extra run counted them again).
+        Spark filters late rows against the PREVIOUS batch's watermark,
+        so the late file is the third trigger."""
+        k = 3
+        src, res, late, ckpt = (str(tmp_path / d) for d in ("src", "res", "late", "ckpt"))
+        _write_lines(spark, src, [_audit("2018-01-01 10:10:00")], "b0")
+        _write_lines(spark, src, [_audit("2018-01-01 10:10:05")], "b1")
+        # one late row per window: the partial aggregate before the state
+        # store would merge late rows that share a window into one
+        _write_lines(spark, src, [_audit(f"2018-01-01 10:0{i}:00") for i in range(k)]
+                     + [_audit("2018-01-01 10:10:10")], "b2")
+        for i, name in enumerate(("b0", "b1", "b2")):  # fixes the trigger order
+            os.utime(os.path.join(src, f"{name}.txt"), (1_000_000 + i, 1_000_000 + i))
+        raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
+        q = stream_report(spark, raw, res, late, ckpt)
+        q.awaitTermination(120)
+
+        dropped = {
+            p["batchId"]: sum(s["numRowsDroppedByWatermark"] for s in p["stateOperators"])
+            for p in map(json.loads, (p.json for p in q.recentProgress))
+            if p["numInputRows"] > 0
+        }
+        assert dropped == {0: 0, 1: 0, 2: k}
+
     def test_late_split_side_output(self, spark, tmp_path):
         src, res, late, ckpt = (str(tmp_path / d) for d in ("src", "res", "late", "ckpt"))
         _write_lines(spark, src, [_audit("2018-01-01 10:10:00")], "b0")

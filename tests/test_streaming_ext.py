@@ -171,7 +171,7 @@ class TestStreamRollingAnomaly:
         operator in event-time order, split across micro-batches; the
         emitted verdicts must equal the batch anomaly_rolling_z rows
         (same BIGINT math, state carried across the batch boundary)."""
-        from flinkproj_spark.operators.analytic import anomaly_rolling_z
+        from flinkproj_spark.operators.timeseries import anomaly_rolling_z
         from flinkproj_spark.sources.tables import load_table
         from flinkproj_spark.streaming.stateful import stream_rolling_anomaly
         import pyspark.sql.functions as F
@@ -456,7 +456,7 @@ class TestStreamRollingMedian:
         equal the batch rolling_median rows; med2_c = 2x median cents
         makes the comparison integer-exact (batch emits the rounded
         double, reconstructed via round(x*200))."""
-        from flinkproj_spark.operators.analytic import rolling_median
+        from flinkproj_spark.operators.timeseries import rolling_median
         from flinkproj_spark.sources.tables import load_table
         from flinkproj_spark.streaming.stateful import stream_rolling_median
 
@@ -827,7 +827,7 @@ class TestStreamCmsSketch:
         property must hold when estimating from the streamed sketch."""
         import pyspark.sql.functions as F
 
-        from flinkproj_spark.operators.analytic import cms_hash_rows
+        from flinkproj_spark.operators.screens import cms_hash_rows
         from flinkproj_spark.sources.tables import load_table
         from flinkproj_spark.streaming.monitor import stream_cms_sketch
 
@@ -1036,7 +1036,7 @@ class TestStreamTwap:
         micro-batches; each user's LAST emitted row must equal the
         batch twap_user_value row (state correctly bridges the batch
         boundary), and running rows must be n-monotone."""
-        from flinkproj_spark.operators.analytic import twap_user_value
+        from flinkproj_spark.operators.timeseries import twap_user_value
         from flinkproj_spark.sources.tables import load_table
         from flinkproj_spark.streaming.stateful import stream_twap
 
@@ -1246,7 +1246,7 @@ class TestStreamQuantileSketch:
         column exactly."""
         import pyspark.sql.functions as F
 
-        from flinkproj_spark.operators.analytic import (
+        from flinkproj_spark.operators.screens import (
             qsk_bucket_col,
             qsk_decile_estimates,
             quantile_sketch_audit,
@@ -1394,7 +1394,7 @@ class TestStreamConformalGate:
         comparison; the flag is live in both directions."""
         import pyspark.sql.functions as F
 
-        from flinkproj_spark.operators.analytic import (
+        from flinkproj_spark.operators.screens import (
             CONF_SALT,
             conformal_coverage_report,
         )
@@ -1510,7 +1510,7 @@ class TestStreamZonemapMonitor:
         across micro-batches in any order."""
         import pyspark.sql.functions as F
 
-        from flinkproj_spark.operators.analytic import zm_zorder_rows
+        from flinkproj_spark.operators.screens import zm_zorder_rows
         from flinkproj_spark.sources.tables import load_table
         from flinkproj_spark.streaming.monitor import stream_zonemap_monitor
 
@@ -1582,7 +1582,7 @@ class TestStreamSrmMonitor:
         across multiple micro-batches."""
         import pyspark.sql.functions as F
 
-        from flinkproj_spark.operators.analytic import srm_check
+        from flinkproj_spark.operators.screens import srm_check
         from flinkproj_spark.sources.tables import load_table
         from flinkproj_spark.streaming.monitor import stream_srm_monitor
 

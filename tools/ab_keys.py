@@ -1,7 +1,6 @@
-"""Isolated A/B bench for ANY set of registry keys — the generalized
-form of tools/ab_ann.py (the round-5 harness that closed the ANN drift
-flag), kept as the house protocol for adjudicating suspected per-key
-regressions between two checkouts.
+"""Isolated A/B bench for ANY set of registry keys, kept as the house
+protocol for adjudicating suspected per-key regressions between two
+checkouts.
 
 Usage:
     python tools/ab_keys.py <repo_root> <label> key1 [key2 ...]
