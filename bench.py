@@ -1,80 +1,135 @@
-"""Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line:
-    {"metric": ..., "value": total_sec, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": ..., "config": {...}}
+"""Benchmark harness: times registry keys on the corpus at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 corpus, see SF_DIR) on
+local[$SPARK_GRAFT_CPUS].
 
-Each query is timed as a full plan execution into a no-op sink (all the
-work, none of the driver collect), fresh action per query, shared
-SparkSession — per BASELINE.md's measurement plan.
+    python bench.py [--repo DIR] [--passes N] [KEY ...]
+
+With no KEY it times every registered key, prints the full record
+    {"metric": ..., "value": total_sec, "unit": "sec",
+     "queries": {name: sec, ...}, "build": {name: sec, ...},
+     "sf": ..., "config": {...}}
+writes it to the timed checkout's BENCH_FULL.json, and ends with ONE
+compact summary line for the driver. With KEYs it times only those and
+prints only the record. `--repo DIR` imports the engine from another
+checkout: run two checkouts alternately the same hour and compare the
+printed minima (interleaved fresh-JVM A/B — same-code runs minutes
+apart have drifted up to 2.6x, so only interleaved minima compare).
+
+Each key is timed as a full plan execution into a no-op sink (all the
+work, none of the driver collect), fresh action per key, shared
+SparkSession — per BASELINE.md's measurement plan. `queries` is the
+total per key, `build` its plan-construction share (`fn(spark, sf_dir)`:
+py4j plan building plus any trainer collects); both are minima over
+the passes, and a key that raises on any pass records -1.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
 import sys
 import time
+from collections.abc import Callable
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
+HERE = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def main() -> None:
-    from flinkproj_spark import registry
-    from flinkproj_spark.session import build_session
-
-    spark = build_session("flinkproj_spark-bench", cpus=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    m = re.search(r"sf([0-9.]+)", SF_DIR)
-    sf = float(m.group(1)) if m else None
+def warm_up(spark, sf_dir: str) -> None:
+    """Charge one-time JVM, reader and worker start-up to no key."""
+    from flinkproj_spark.sources.tables import TABLES, load_table
 
     # JVM/codegen warmup on a trivial plan so query 1 isn't charged for it.
     spark.range(1000).selectExpr("sum(id)").collect()
     # Warm the parquet reader + FS classes with a 1-row peek per table
     # (footer read only) — otherwise whichever query runs first absorbs
     # one-time class-loading that isn't part of its plan.
-    from flinkproj_spark.sources.tables import TABLES, load_table
     for t in TABLES:
         try:
-            load_table(spark, SF_DIR, t).limit(1).collect()
+            load_table(spark, sf_dir, t).limit(1).collect()
         except Exception:
             pass
     # Spawn+warm the Python/Arrow UDF workers (reused session-wide) so
     # the first pandas-UDF query isn't charged ~1 s of worker startup.
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    workers = spark.range(32).repartition(32).mapInPandas(lambda it: it, "id long")
+    workers.write.format("noop").mode("overwrite").save()
 
-    # Two full passes, per-query minimum. The first pass at each query is
-    # still a cold plan (fresh Catalyst analysis + codegen); the minimum
-    # rejects host-noise outliers (CPU steal / page-cache stalls measured
-    # at 10-15 s on ~0.5 s queries, ~50% of runs) that would otherwise be
-    # charged to whichever query they landed on. Steady-state per-query
-    # wall time is the metric BASELINE.md declares.
+
+def time_keys(
+    spark, sf_dir: str, queries: dict[str, Callable], passes: int
+) -> tuple[dict[str, float], dict[str, float]]:
+    """Per-key minimum over `passes` of (total, build) seconds; -1 for a
+    key that raised on any pass."""
+    # The first pass at each key is still a cold plan (fresh Catalyst
+    # analysis + codegen); the minimum rejects host-noise outliers (CPU
+    # steal / page-cache stalls measured at 10-15 s on ~0.5 s queries,
+    # ~50% of runs) that would otherwise be charged to whichever query
+    # they landed on. Steady-state per-key wall time is the metric
+    # BASELINE.md declares.
     times: dict[str, float] = {}
-    for _pass in range(2):
-        for name, fn in registry.queries().items():
+    build: dict[str, float] = {}
+    for _pass in range(passes):
+        for name, fn in queries.items():
             t0 = time.perf_counter()
             try:
-                fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-                dt = round(time.perf_counter() - t0, 3)
-                times[name] = min(times.get(name, float("inf")), dt)
+                df = fn(spark, sf_dir)
+                t1 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                t2 = time.perf_counter()
+                times[name] = min(times.get(name, float("inf")), round(t2 - t0, 3))
+                build[name] = min(build.get(name, float("inf")), round(t1 - t0, 3))
             except Exception as e:  # a failing query must not hide the rest
-                times[name] = -1.0
+                times[name] = build[name] = -1.0
                 print(f"BENCH ERROR {name}: {e}", file=sys.stderr)
             finally:
-                # operators that persist multi-consumer frames (pagerank's
-                # edge frame, the MinHash signature cache) would otherwise
-                # accumulate MEMORY_AND_DISK blocks across the 100+-key
+                # keys that keep a caller-owned cache (the MinHash
+                # signature cache, the semdedup corpus) would otherwise
+                # accumulate MEMORY_AND_DISK blocks across the 260-key
                 # sweep; each key pays its own materialization, none
                 # inherits another's cache
                 spark.catalog.clearCache()
+    return times, build
 
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--repo", default=HERE,
+                    help="checkout whose flinkproj_spark is timed")
+    ap.add_argument("--passes", type=int, default=2)
+    ap.add_argument("keys", nargs="*", metavar="KEY")
+    a = ap.parse_args()
+    if a.passes < 1:
+        ap.error("--passes must be at least 1")
+    root = os.path.abspath(a.repo)
+    sf_dir = os.path.abspath(SF_DIR)
+    sys.path.insert(0, root)
+    # Python workers do not inherit the driver's sys.path: their first
+    # import root is the directory the JVM starts in, ahead of any
+    # PYTHONPATH entry. Starting it in `root` makes UDFs import the same
+    # flinkproj_spark as the driver, whatever directory the run came from.
+    os.chdir(root)
+
+    from flinkproj_spark import registry
+
+    queries = registry.queries()
+    unknown = [k for k in a.keys if k not in queries]
+    if unknown:
+        ap.error(f"unknown key(s) {unknown}; `python -m flinkproj_spark list`")
+    if a.keys:
+        queries = {k: queries[k] for k in a.keys}
+
+    from flinkproj_spark.session import build_session
+
+    spark = build_session("flinkproj_spark-bench", cpus=CPUS)
+    spark.sparkContext.setLogLevel("ERROR")
+    warm_up(spark, sf_dir)
+    times, build = time_keys(spark, sf_dir, queries, a.passes)
+
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
     total = round(sum(t for t in times.values() if t >= 0), 3)
     config = {
         "spark": spark.version,
@@ -82,25 +137,29 @@ def main() -> None:
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         "aqe": spark.conf.get("spark.sql.adaptive.enabled"),
     }
+    spark.stop()
     full = {
         "metric": "total_wall_sec_all_queries",
         "value": total,
         "unit": "sec",
         "queries": times,
+        "build": build,
         "sf": sf,
         "config": config,
     }
-    # Full per-key record: printed for humans AND persisted next to the
-    # repo so per-key history survives stdout truncation.
+    # Full per-key record: printed for humans AND, for a full run,
+    # persisted in the timed checkout so per-key history survives
+    # stdout truncation.
     print(json.dumps(full))
+    if a.keys:
+        return
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_FULL.json"), "w") as f:
+        with open(os.path.join(root, "BENCH_FULL.json"), "w") as f:
             json.dump(full, f, indent=1)
     except OSError as e:
         print(f"BENCH WARN could not write BENCH_FULL.json: {e}", file=sys.stderr)
     # The driver records only the LAST ~2000 chars of stdout and parses
-    # the final line as JSON; the full line above is ~4-5 KB for 120+
+    # the final line as JSON; the full line above is ~10 KB for 260
     # keys and overflows that window. The very last line is therefore a
     # compact summary (aggregates + the slowest keys) guaranteed to fit.
     ok = sorted((t for t in times.values() if t >= 0))
@@ -120,7 +179,6 @@ def main() -> None:
         "queries_full_file": "BENCH_FULL.json",
         "config": config,
     }))
-    spark.stop()
 
 
 if __name__ == "__main__":

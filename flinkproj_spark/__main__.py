@@ -74,25 +74,6 @@ def _cmd_oracle(args: argparse.Namespace) -> int:
     return 0
 
 
-def _cmd_compare(args: argparse.Namespace) -> int:
-    """Run the driver-style parity check for one key (or all keys) —
-    delegates to tests/oracle_check.py's harness."""
-    import os
-    import runpy
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    script = os.path.join(repo, "tests", "oracle_check.py")
-    if not os.path.exists(script):
-        print("tests/oracle_check.py not found next to the package", file=sys.stderr)
-        return 2
-    sys.argv = [script, args.sf_dir] + ([args.key] if args.key else [])
-    try:
-        runpy.run_path(script, run_name="__main__")
-    except SystemExit as e:
-        return int(e.code or 0)
-    return 0
-
-
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="python -m flinkproj_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -113,13 +94,6 @@ def main(argv: list[str] | None = None) -> int:
     p_or.add_argument("key")
     p_or.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
     p_or.set_defaults(fn=_cmd_oracle)
-
-    p_cmp = sub.add_parser(
-        "compare", help="driver-style Spark-vs-DuckDB parity check"
-    )
-    p_cmp.add_argument("key", nargs="?", default=None)
-    p_cmp.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    p_cmp.set_defaults(fn=_cmd_compare)
 
     args = p.parse_args(argv)
     return args.fn(args)

@@ -149,7 +149,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list shuffles onto src to meet the label frame, then a
     map-side-combined groupBy(dst, label) counts votes and a second
     combinable aggregate — min(struct(-count, label)) over dst —
-    picks the argmax without any sort (interleaved ab_keys.py A/B vs
+    picks the argmax without any sort (interleaved `bench.py --repo` A/B vs
     the row_number-window formulation measured wall-time PARITY at
     sf0.1 — the win is structural: no per-round sort of the vote
     frame, which is what matters when votes stop fitting a task);

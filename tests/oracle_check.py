@@ -42,11 +42,11 @@ def main() -> int:
 
     from flinkproj_spark import registry
     from flinkproj_spark.session import build_session
+    from flinkproj_spark.sources.tables import TABLES
 
     spark = build_session("oracle_check", cpus=8)
     con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem "
-              "events documents embeddings").split():
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )

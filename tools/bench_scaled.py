@@ -1,6 +1,6 @@
-"""Empirical scaling exponents for the heaviest registry keys — runs
-the ab_keys.py protocol (fresh JVM per invocation, warmup, noop sink,
-min over passes) against the sf0.1 corpus and its deterministic tiled
+"""Empirical scaling exponents for the heaviest registry keys — times
+each key with `bench.py --passes 1 KEY` (its own fresh JVM, warmup,
+noop sink) against the sf0.1 corpus and its deterministic tiled
 scale-ups from tools/gen_scaled.py, then fits log(t) ~ e*log(factor)
 per key. The bucketed-candidate-generation claims in SCALING.md rule 3
 predict e ≈ 1 for the dedup/ANN families; a key whose exponent trends
@@ -8,7 +8,7 @@ quadratic is using an all-pairs shape no plan-reading caught.
 
 Interleaving: factors are visited round-robin (x1, x3, x10, x1, ...)
 so host drift lands on every factor equally — the same reasoning as
-ab_keys.py's interleaved-minima discipline.
+bench.py's interleaved-minima A/B discipline.
 
 Usage:
     python tools/bench_scaled.py [--factors 1,3,10] [--rounds 2]
@@ -78,25 +78,18 @@ def sf_dir(factor: int) -> str:
     return out
 
 
-def run_once(
-    factor: int, keys: list[str], isolate: bool = True
-) -> dict[str, float]:
-    """One timing pass at `factor`. With isolate=True (the default
-    since round 12) every key gets its OWN fresh JVM: the shared-JVM
-    protocol measured keys run after other keys at up to 8–18× their
-    isolated time on x30 corpora (round-12 BASELINE.md record —
-    pipeline_curate_v4 437 s shared vs 54 s solo, dedup_simhash 277 vs
-    15.4), so multi-key invocations systematically inflate every key
-    but the first. isolate=False keeps the old one-JVM-per-factor mode
-    for quick relative sweeps."""
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir(factor), AB_PASSES="1")
-    env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")
-    groups = [[k] for k in keys] if isolate else [keys]
+def run_once(factor: int, keys: list[str]) -> dict[str, float]:
+    """One timing pass at `factor`, every key in its OWN fresh JVM: one
+    JVM for several keys measured the keys after the first at up to
+    8–18× their isolated time on x30 corpora (round-12 BASELINE.md
+    record — pipeline_curate_v4 437 s shared vs 54 s solo,
+    dedup_simhash 277 vs 15.4)."""
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir(factor))
     merged: dict[str, float] = {}
-    for group in groups:
+    for key in keys:
         out = subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "ab_keys.py"),
-             REPO, f"x{factor}", *group],
+            [sys.executable, os.path.join(REPO, "bench.py"),
+             "--passes", "1", key],
             capture_output=True, text=True, env=env, check=True,
         ).stdout.strip().splitlines()[-1]
         merged.update(json.loads(out)["queries"])
@@ -121,9 +114,6 @@ def main() -> None:
     ap.add_argument("--factors", default="1,3,10")
     ap.add_argument("--rounds", type=int, default=2)
     ap.add_argument("--keys", default=",".join(DEFAULT_KEYS))
-    ap.add_argument("--shared-jvm", action="store_true",
-                    help="legacy one-JVM-per-factor mode (inflates "
-                         "every key after the first; see run_once)")
     ap.add_argument("--out", default="SCALE_BENCH.json")
     a = ap.parse_args()
     factors = [int(x) for x in a.factors.split(",")]
@@ -132,7 +122,7 @@ def main() -> None:
     best: dict[int, dict[str, float]] = {f: {} for f in factors}
     for rnd in range(a.rounds):
         for f in factors:
-            got = run_once(f, keys, isolate=not a.shared_jvm)
+            got = run_once(f, keys)
             for k, t in got.items():
                 if t > 0:
                     prev = best[f].get(k)
