@@ -1,6 +1,7 @@
 """Benchmark harness: times registry keys on the corpus at
 $SPARK_GRAFT_SF_DIR (default: the sf0.1 corpus, see SF_DIR) on
-local[$SPARK_GRAFT_CPUS].
+`build_session`'s default master: local[$SPARK_GRAFT_CPUS], or every
+core the process may run on.
 
     python bench.py [--repo DIR] [--passes N] [KEY ...]
 
@@ -35,7 +36,6 @@ from collections.abc import Callable
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def warm_up(spark, sf_dir: str) -> None:
@@ -123,7 +123,7 @@ def main() -> None:
 
     from flinkproj_spark.session import build_session
 
-    spark = build_session("flinkproj_spark-bench", cpus=CPUS)
+    spark = build_session("flinkproj_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     warm_up(spark, sf_dir)
     times, build = time_keys(spark, sf_dir, queries, a.passes)
@@ -133,7 +133,7 @@ def main() -> None:
     total = round(sum(t for t in times.values() if t >= 0), 3)
     config = {
         "spark": spark.version,
-        "master": f"local[{CPUS}]",
+        "master": spark.sparkContext.master,
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         "aqe": spark.conf.get("spark.sql.adaptive.enabled"),
     }

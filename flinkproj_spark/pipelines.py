@@ -17,7 +17,7 @@ Pipeline 2 — DataReport (DataReport.java:48-204):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, StringType, StructField, StructType,
@@ -87,22 +87,48 @@ def report_parse(raw: DataFrame) -> DataFrame:
     return parsed.filter(F.col("ts").isNotNull())
 
 
+REPORT_WINDOW = "30 seconds"  # DataReport's tumbling window
+
+
+def report_doc_id() -> Column:
+    """The deterministic upsert key of a report row (DataReport.java:181):
+    its time with spaces→'_', -type, -area."""
+    return F.concat_ws("-", F.regexp_replace("time", " ", "_"), "type", "area")
+
+
 def report_aggregate(parsed: DataFrame) -> DataFrame:
     """DataReport window core: 30 s tumble per (type, area) → count +
     formatted max(ts) + deterministic upsert key (MyAggFunction.java:19-51;
     key spec DataReport.java:181: time with spaces→'_', -type, -area)."""
-    agg = parsed.groupBy(F.window("ts", "30 seconds").alias("w"), "type", "area").agg(
+    agg = parsed.groupBy(F.window("ts", REPORT_WINDOW).alias("w"), "type", "area").agg(
         F.count("*").alias("count"),
         F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("time"),
     )
-    return agg.select(
-        "time",
-        "type",
-        "area",
-        "count",
-        F.concat_ws(
-            "-", F.regexp_replace("time", " ", "_"), "type", "area"
-        ).alias("doc_id"),
+    return agg.select("time", "type", "area", "count", report_doc_id().alias("doc_id"))
+
+
+def report_merge(partial: DataFrame, stored: DataFrame) -> DataFrame:
+    """Fold one batch's `report_aggregate` into the stored result: for
+    each window the batch touches, count = batch count + the count of
+    the window's latest stored version (a window's versions only grow,
+    so the latest is the largest), and time = the later max time, keyed
+    by that time's doc id. Windows are recovered from `time`, which lies
+    inside its window; stored windows the batch does not touch drop out."""
+    fresh = partial.select(
+        "time", "type", "area", F.col("count").alias("fresh"), F.lit(0).cast("long").alias("kept")
+    )
+    kept = stored.select(
+        "time", "type", "area", F.lit(0).cast("long").alias("fresh"), F.col("count").alias("kept")
+    )
+    merged = (
+        fresh.unionByName(kept)
+        .groupBy(F.window(F.to_timestamp("time"), REPORT_WINDOW), "type", "area")
+        .agg(F.sum("fresh").alias("fresh"), F.max("kept").alias("kept"), F.max("time").alias("time"))
+        .filter(F.col("fresh") > 0)
+    )
+    return merged.select(
+        "time", "type", "area", (F.col("fresh") + F.col("kept")).alias("count"),
+        report_doc_id().alias("doc_id"),
     )
 
 

@@ -13,7 +13,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Sized from the host unless the environment pins them: every core this
+# process may run on, and a third of the RAM within 2..8 GB, so the heap
+# holds each local task's working set without crowding other processes.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+_RAM_GB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024**3
+DEFAULT_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM") or f"{max(2, min(8, _RAM_GB // 3))}g"
 
 
 def build_session(
@@ -51,7 +56,7 @@ def build_session(
         # hold N concurrent task working sets; with a big heap full GC is
         # rare, so force periodic GC or broadcast/shuffle blocks from
         # earlier queries pile up and long sessions degrade.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
         # Periodic GC keeps multi-hour sessions from accumulating dead
         # broadcast/shuffle blocks — but the System.gc() it triggers
         # stalls whatever query is running when it fires (measured: a

@@ -7,7 +7,11 @@ Spark-native equivalents here:
 
   * keyed idempotent upsert — the deterministic-key trick as a
     partition-overwrite MERGE (used by streaming.pipelines.stream_report
-    for the ES twin, and callable for any batch job);
+    for the ES twin, and callable for any batch job). Keys that start
+    with an event-time minute (the report's doc id) are partitioned by
+    that minute, so a trigger under a watermark rewrites only the one
+    or two newest minutes: its cost is bounded by the batch, not by the
+    history already written;
   * partitioned writes — partition columns become directory pruning for
     every downstream read (the write-side half of predicate pushdown);
   * bucketed tables — pre-shuffling both join sides by key at write
@@ -18,56 +22,86 @@ Spark-native equivalents here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkproj_spark.functions import cache_scope
 
 UPSERT_HASH_BUCKETS = 16
+# the reference's doc id opens with its window's max event time,
+# `yyyy-MM-dd_HH:mm:ss` (DataReport.java:181)
+_MINUTE_KEY = r"^\d{4}-\d{2}-\d{2}_\d{2}:\d{2}"
+
+
+def upsert_bucket(key: str = "doc_id") -> Column:
+    """The `kb` partition of a key. A key opening with an event-time
+    minute is bucketed by that minute's digits (`2018-01-01_10:00:..`
+    -> `201801011000`); any other key by `h` + a stable hash modulo
+    UPSERT_HASH_BUCKETS. String functions only, so the bucket does not
+    depend on the session time zone, and every value is path-safe (a
+    `:` would be written as `%3A`, which a read by the raw value misses)."""
+    k = F.col(key)
+    return F.when(
+        k.rlike(_MINUTE_KEY), F.regexp_replace(F.substring(k, 1, 16), "[^0-9]", "")
+    ).otherwise(
+        F.concat(F.lit("h"), (F.abs(F.hash(k)) % UPSERT_HASH_BUCKETS).cast("string"))
+    )
+
+
+def read_buckets(
+    spark: SparkSession, result_dir: str, buckets: list[str], schema
+) -> DataFrame | None:
+    """The stored rows of the given `kb` buckets, or None when none of
+    them exists yet. Each bucket directory costs one existence check
+    through the Hadoop FS API (any file system), and the present ones
+    are read by literal path with the caller's schema: nothing else in
+    the result is listed — a glob over `kb=` lists every bucket — and no
+    job infers a schema."""
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.Path(result_dir).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+    paths = [f"{result_dir}/kb={b}" for b in buckets]
+    present = [p for p in paths if fs.exists(jvm.org.apache.hadoop.fs.Path(p))]
+    if not present:
+        return None
+    return spark.read.schema(schema).option("basePath", result_dir).parquet(*present)
 
 
 def upsert_keyed(batch: DataFrame, result_dir: str, key: str = "doc_id") -> None:
     """Idempotent keyed upsert without a table format: rows are
-    partitioned by a stable hash prefix of the key and only the
-    partitions present in this batch are rewritten (dynamic partition
-    overwrite = poor-man's MERGE). Re-writing the same keys converges
-    to one value — the reference's ES doc-id semantics (K3).
+    partitioned by `upsert_bucket(key)` and only the partitions present
+    in this batch are rewritten (dynamic partition overwrite = poor-man's
+    MERGE). Re-writing the same keys converges to one value — the
+    reference's ES doc-id semantics (K3).
 
-    A rewritten bucket carries batch rows PLUS the surviving existing
+    A rewritten bucket carries batch rows PLUS the surviving stored
     rows of that bucket (anti-joined on the key): overwriting with
     batch rows alone would silently delete every previously-upserted
-    key that hash-shares a bucket with any batch key. The survivor
-    read is statically partition-pruned to the touched buckets (a
-    bounded isin list), and localCheckpoint truncates its lineage so
-    Spark permits writing the path it was read from — at 100 TB swap
-    this store for Delta/Iceberg MERGE INTO and keep the call sites.
+    key that shares a bucket with any batch key. The survivor read
+    opens only the touched buckets. For the report's doc ids those are
+    event-time minutes, and under the watermark a trigger touches the
+    newest one or two, so the read, its localCheckpoint (which truncates
+    the lineage so Spark permits writing the path it was read from) and
+    the write are bounded by the batch however long the result grows.
+    At 100 TB swap this store for Delta/Iceberg MERGE INTO and keep the
+    call sites.
 
     The batch is held in a cache scope, so a streaming micro-batch's
-    plan runs ONCE per call: its emptiness check, bucket list, survivor
-    anti join and write all read the cache, where each action on the
-    bare batch would re-run the stateful plan and count its watermark
-    drops again."""
+    plan runs ONCE per call: its bucket list, survivor anti join and
+    write all read the cache, where each action on the bare batch would
+    re-run the stateful plan and count its watermark drops again."""
     spark_b = batch.sparkSession
     with cache_scope() as scope:
-        staged = scope.hold(
-            batch.withColumn("kb", F.abs(F.hash(key)) % UPSERT_HASH_BUCKETS)
-        )
-        if staged.isEmpty():
+        staged = scope.hold(batch.withColumn("kb", upsert_bucket(key)))
+        # one job; a trigger touches a bounded number of buckets
+        touched = [r.kb for r in staged.select("kb").distinct().collect()]
+        if not touched:
             return
         spark_b.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            existing = spark_b.read.parquet(result_dir)
-        except Exception:
-            existing = None
-        if existing is not None and "kb" in existing.columns:
-            touched = [
-                r.kb for r in staged.select("kb").distinct().collect()
-            ]  # <= UPSERT_HASH_BUCKETS values — a bounded driver list
-            survivors = (
-                existing.filter(F.col("kb").isin(touched))
-                .join(staged.select(key).distinct(), key, "left_anti")
-                .select(*staged.columns)
-            )
+        existing = read_buckets(spark_b, result_dir, touched, staged.schema)
+        if existing is not None:
+            survivors = existing.join(staged.select(key).distinct(), key, "left_anti")
             staged = staged.unionByName(survivors.localCheckpoint(eager=True))
         staged.write.mode("overwrite").partitionBy("kb").parquet(result_dir)
 

@@ -9,7 +9,8 @@
     (DataReport.java:181) that makes late corrections overwrites;
   * late side output: stream_report_with_late_split's foreachBatch
     routes records older than the observed watermark to a TSV channel
-    (W4); stream_report counts them as numRowsDroppedByWatermark;
+    (W4) and folds the rest into the result window by window;
+    stream_report counts them as numRowsDroppedByWatermark;
   * dim refresh: the dimension DataFrame is re-derived inside
     foreachBatch each micro-batch — the 60 s Redis poll twin (S2).
 
@@ -32,6 +33,7 @@ from flinkproj_spark.pipelines import (
     clean_transform,
     report_aggregate,
     report_late_split,
+    report_merge,
     report_parse,
 )
 
@@ -74,7 +76,11 @@ def stream_report(
     parse → watermark(40 s) → windowed count+max in update mode →
     foreachBatch MERGE-style upsert keyed on the deterministic doc_id
     (late arrivals within the watermark re-fire the window and
-    overwrite — observably the ES upsert, K3). Rows older than the
+    overwrite — observably the ES upsert, K3). The doc_id opens with
+    the window's event-time minute, which is the sink's partition: a
+    window older than the watermark never re-fires, so each trigger
+    rewrites only the newest one or two minutes of the result, however
+    long it has run. Rows older than the
     watermark are dropped by the stateful aggregate, and the late
     accounting is each progress record's numRowsDroppedByWatermark
     (the sink runs the micro-batch plan once, so every late row counts
@@ -106,32 +112,43 @@ def stream_report_with_late_split(
 ):
     """Variant exposing the W4 side output explicitly: one foreachBatch
     over the *parsed* stream computes its own watermark bound (max seen
-    event time − 40 s, the MyWatermark.java:19-21 formula), splits, and
-    maintains the windowed result over the on-time half incrementally
-    per batch (idempotent via overwrite of batch-affected partitions)."""
+    event time − 40 s, the MyWatermark.java:19-21 formula) and splits.
+    The on-time half is folded into the result per window: each window
+    the batch touches merges its batch partial (count, max time) with
+    its latest stored version, read from the touched `kb` buckets, and
+    the merge goes through `upsert_keyed` — so a window whose rows
+    arrive over several triggers converges to its batch-twin count.
+
+    A replayed epoch (the sink ran but its commit was lost) is a no-op:
+    the last applied epoch id is recorded beside max_ts once the epoch's
+    writes are done. A failure between those writes and the record
+    still applies the epoch twice on replay (its late rows and counts)."""
+    from flinkproj_spark.sinks import read_buckets, upsert_bucket, upsert_keyed
+
     parsed = report_parse(raw_stream)
     # Watermark state must survive query restarts exactly like Spark's
-    # own (checkpointed) watermark — persist max event time beside the
-    # checkpoint dir.
+    # own (checkpointed) watermark — persist max event time, and the
+    # last applied epoch, beside the checkpoint dir.
     wm_file = os.path.join(checkpoint_dir, "_late_split_watermark.json")
 
-    def _load_max_ts():
+    def _load_state() -> dict:
         try:
             with open(wm_file) as f:
-                return json.load(f)["max_ts"]
-        except (OSError, ValueError, KeyError):
-            return None
+                return json.load(f)
+        except (OSError, ValueError):
+            return {}
 
-    def _store_max_ts(iso: str) -> None:
+    def _store_state(max_ts: str, epoch_id: int) -> None:
         os.makedirs(checkpoint_dir, exist_ok=True)
         with open(wm_file, "w") as f:
-            json.dump({"max_ts": iso}, f)
+            json.dump({"max_ts": max_ts, "epoch": epoch_id}, f)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
+        state = _load_state()
+        if epoch_id <= state.get("epoch", -1):
+            return  # replay of an epoch whose writes are already applied
         with cache_scope() as scope:
             batch = scope.hold(batch)
-            if batch.isEmpty():
-                return
             # Format the max event time JVM-side (session timezone) —
             # collecting the raw timestamp would surface it as a Python
             # datetime in the HOST timezone, and re-parsing that string
@@ -140,13 +157,19 @@ def stream_report_with_late_split(
             mx = batch.agg(
                 F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
             ).collect()[0][0]
-            prev = _load_max_ts()
-            cur = max(p for p in (prev, mx) if p)
-            _store_max_ts(cur)
+            if mx is None:
+                return  # empty batch
+            cur = max(p for p in (state.get("max_ts"), mx) if p)
             wm = F.to_timestamp(F.lit(cur)) - F.expr(f"INTERVAL {WATERMARK}")
             on_time, late = report_late_split(batch, wm)
             late.write.mode("append").text(late_dir)
-            report_aggregate(on_time).write.mode("append").parquet(result_dir)
+            partial = scope.hold(report_aggregate(on_time).withColumn("kb", upsert_bucket()))
+            touched = [r.kb for r in partial.select("kb").distinct().collect()]
+            if touched:
+                stored = read_buckets(spark, result_dir, touched, partial.schema)
+                merged = partial.drop("kb") if stored is None else report_merge(partial, stored)
+                upsert_keyed(merged, result_dir, "doc_id")
+        _store_state(cur, epoch_id)
 
     return (
         parsed.writeStream.foreachBatch(process)

@@ -6,6 +6,8 @@ columns, hot paths stay in whole-stage codegen."""
 
 from __future__ import annotations
 
+import os
+
 from flinkproj_spark.operators.clean import dim_join
 from flinkproj_spark.operators.relational import tpch_q3, tpch_q6
 from flinkproj_spark.operators.similarity import ann_topk_brute
@@ -409,6 +411,74 @@ def test_upsert_keyed_converges_and_keeps_cobucket_keys(spark, tmp_path):
     assert rows[b] == 1        # co-bucketed key survived the rewrite
     assert rows[other] == 1    # untouched bucket untouched
     assert len(rows) == 3
+
+
+def _report_rows(spark, rows):
+    return spark.createDataFrame(
+        [(f"{t.replace(' ', '_')}-shelf-AREA_US", c) for t, c in rows],
+        "doc_id string, count int",
+    )
+
+
+def _minute_files(out):
+    """{minute directory: {file name: mtime}} of a minute-bucketed store."""
+    return {
+        d: {f: os.stat(os.path.join(out, d, f)).st_mtime_ns
+            for f in os.listdir(os.path.join(out, d))}
+        for d in os.listdir(out) if d.startswith("kb=")
+    }
+
+
+def test_upsert_keyed_minute_buckets_keep_unrefired_key(spark, tmp_path):
+    """Report doc ids are bucketed by their event-time minute: two keys
+    of one minute share a bucket, and re-firing one of them keeps the
+    other."""
+    from flinkproj_spark.sinks import upsert_keyed
+
+    out = str(tmp_path / "upsert")
+    upsert_keyed(_report_rows(spark, [("2018-01-01 10:00:05", 1),
+                                      ("2018-01-01 10:00:40", 1)]), out)
+    upsert_keyed(_report_rows(spark, [("2018-01-01 10:00:40", 2)]), out)
+    assert sorted(_minute_files(out)) == ["kb=201801011000"]
+    rows = {r.doc_id: r["count"] for r in spark.read.parquet(out).collect()}
+    assert rows == {"2018-01-01_10:00:05-shelf-AREA_US": 1,
+                    "2018-01-01_10:00:40-shelf-AREA_US": 2}
+
+
+def test_upsert_keyed_leaves_other_minutes_unwritten(spark, tmp_path):
+    """A batch of one minute rewrites that minute's directory only: the
+    files of every other minute keep their names and mtimes."""
+    from flinkproj_spark.sinks import upsert_keyed
+
+    out = str(tmp_path / "upsert")
+    upsert_keyed(_report_rows(spark, [("2018-01-01 10:00:05", 1),
+                                      ("2018-01-01 10:01:05", 1),
+                                      ("2018-01-01 10:02:05", 1)]), out)
+    before = _minute_files(out)
+    upsert_keyed(_report_rows(spark, [("2018-01-01 10:02:05", 2)]), out)
+    after = _minute_files(out)
+    assert after.pop("kb=201801011002") != before.pop("kb=201801011002")
+    assert after == before
+    assert spark.read.parquet(out).count() == 3
+
+
+def test_upsert_keyed_bucket_ignores_session_time_zone(spark, tmp_path):
+    """The minute bucket is cut from the key's text, so a session in
+    another time zone writes the same `kb` directories."""
+    from flinkproj_spark.sinks import upsert_keyed
+
+    rows = [("2018-03-11 02:30:00", 1), ("2018-11-04 01:30:00", 1)]
+    dirs = {}
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    for zone in ("UTC", "America/New_York"):
+        spark.conf.set("spark.sql.session.timeZone", zone)
+        try:
+            upsert_keyed(_report_rows(spark, rows), str(tmp_path / zone))
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", tz)
+        dirs[zone] = sorted(_minute_files(str(tmp_path / zone)))
+    assert dirs["UTC"] == dirs["America/New_York"] == [
+        "kb=201803110230", "kb=201811040130"]
 
 
 def test_global_topk_is_heap_not_full_sort(spark, sf_dir):

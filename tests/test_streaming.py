@@ -110,6 +110,57 @@ class TestStreamReport:
         assert "black" not in res_types  # late record kept out of results
 
 
+    def _run_late_split(self, spark, tmp_path, files):
+        """Each (name, lines) file is its own trigger, in order."""
+        src, res, late, ckpt = (str(tmp_path / d) for d in ("src", "res", "late", "ckpt"))
+        for i, (name, lines) in enumerate(files):
+            _write_lines(spark, src, lines, name)
+            os.utime(os.path.join(src, f"{name}.txt"), (1_000_000 + i, 1_000_000 + i))
+        raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
+        stream_report_with_late_split(spark, raw, res, late, ckpt).awaitTermination(120)
+        return src, res, late, ckpt
+
+    def test_late_split_window_over_two_triggers_converges(self, spark, tmp_path):
+        """A window whose rows arrive over two triggers gets the batch
+        twin's count, not the second trigger's partial count."""
+        files = [("b0", [_audit("2018-01-01 10:00:05")]),
+                 ("b1", [_audit("2018-01-01 10:00:10"), _audit("2018-01-01 10:00:20")])]
+        _, res, _, _ = self._run_late_split(spark, tmp_path, files)
+
+        got = {(r.doc_id, r["count"]) for r in spark.read.parquet(res).collect()}
+        twin = report_aggregate(report_parse(spark.createDataFrame(
+            [(l,) for _, ls in files for l in ls], "value string")))
+        expected = {(r.doc_id, r["count"]) for r in twin.collect()}
+        assert expected == {("2018-01-01_10:00:20-shelf-AREA_US", 3)}
+        assert expected <= got  # earlier versions stay under older doc ids
+
+    def test_late_split_replayed_epoch_is_a_no_op(self, spark, tmp_path):
+        """Losing the last commit makes Spark re-run that epoch on
+        restart; the recorded epoch id keeps the re-run from counting
+        its rows (or writing its late rows) a second time."""
+        files = [("b0", [_audit("2018-01-01 10:10:05")]),
+                 ("b1", [_audit("2018-01-01 10:10:10"), _audit("2018-01-01 10:00:00", typ="black")])]
+        src, res, late, ckpt = self._run_late_split(spark, tmp_path, files)
+
+        def snapshot():
+            return (sorted(map(tuple, spark.read.parquet(res).drop("kb").collect())),
+                    sorted(r.value for r in spark.read.text(late).collect()))
+
+        before = snapshot()
+        assert ("2018-01-01 10:10:10", "shelf", "AREA_US", 2,
+                "2018-01-01_10:10:10-shelf-AREA_US") in before[0]
+        assert len(before[1]) == 1
+        last = max(int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit())
+        for name in (str(last), f".{last}.crc"):
+            os.remove(os.path.join(ckpt, "commits", name))
+        raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
+        q = stream_report_with_late_split(spark, raw, res, late, ckpt)
+        q.awaitTermination(120)
+        # the epoch did re-run (its rows unread, so numInputRows is 0)
+        assert [json.loads(p.json)["batchId"] for p in q.recentProgress] == [last]
+        assert snapshot() == before
+
+
 class TestStreamClean:
     def test_clean_stream_with_dim_reload(self, spark, tmp_path):
         lines = [json.dumps({

@@ -77,8 +77,7 @@ def worker(factor: int) -> None:
     )
 
     base_dir = corpus_dir(factor)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(f"stream-gates-x{factor}", cpus=cpus)
+    spark = build_session(f"stream-gates-x{factor}")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
 
