@@ -12,7 +12,7 @@ Layout:
     operators/  the operator library (SURVEY.md §2 + LLM-pipeline extensions)
     plans/      plan-inspection helpers (broadcast/pushdown assertions)
     streaming/  Structured Streaming pipeline twins (watermark, upsert, late split)
-    pipelines   batch pipeline drivers (run_clean / run_report)
+    pipelines   the two reference pipelines' batch transforms
 """
 
 __version__ = "0.1.0"

@@ -148,17 +148,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    """Cosine from precomputed norms (compute norms once per side
-    before a pair join — never per pair)."""
-    return dot(a, b).cast("double") / (norm_a * norm_b)
-
-
-def l2_norm(a: Column) -> Column:
-    """sqrt of the integer self-dot, as double."""
-    return F.sqrt(dot(a, a).cast("double"))
-
-
 def sign_lsh_bucket(vec: Column, planes: list[list[int]]) -> Column:
     """Sign-LSH bucket id over integer plane weights: bit p of the id is
     (planes[p] · vec >= 0). 2^len(planes) buckets; candidate pairs meet
@@ -187,7 +176,7 @@ def lsh_planes(n_planes: int, dim: int) -> list[list[int]]:
     ]
 
 
-def hash_keep(key: Column, frac_hex2: str | None = None, salt: str = "s0") -> Column:
+def hash_keep(key: Column, salt: str = "s0") -> Column:
     """Deterministic sampling predicate material: the first 2 hex chars
     of md5(key || salt). Comparing against a threshold selects a
     reproducible ~(threshold/256) fraction with no RNG, no state, and no

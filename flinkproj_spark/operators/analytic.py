@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flinkproj_spark.operators.relational import TD_MOD, _cents
+from flinkproj_spark.operators.relational import _cents
 from flinkproj_spark.sources.tables import load_table
 
 def grouping_sets_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

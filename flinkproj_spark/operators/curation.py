@@ -45,7 +45,6 @@ from flinkproj_spark.operators.dedup import (
     _MINHASH_PAIRS_SQL,
     _SHINGLES_SQL,
     _WORDS_SQL,
-    _shingles,
     minhash_signatures,
 )
 from flinkproj_spark.sources.tables import fan_out, load_table
@@ -151,7 +150,7 @@ def unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BLOOM_BITS = 1 << 22  # bloom size m; at scale ≈ 10× delta cardinality
 
 
-def bloom_bitmap(keys: DataFrame, col: str, m: int = _BLOOM_BITS) -> DataFrame:
+def bloom_bitmap(keys: DataFrame, col: str) -> DataFrame:
     """Build a DataFrame-native bloom filter over `keys[col]` as a
     (w_idx, bits) bitmap frame: k=2 bit positions per key derived from
     one xxhash64, OR-combined into 64-bit words. The frame is bounded
@@ -162,8 +161,8 @@ def bloom_bitmap(keys: DataFrame, col: str, m: int = _BLOOM_BITS) -> DataFrame:
     (broadcast equi-join on w_idx + bitand — O(1) per probe row,
     no Python anywhere)."""
     h = F.xxhash64(col)
-    p0 = F.pmod(h, F.lit(m))
-    p1 = F.pmod(F.shiftright(h, 22), F.lit(m))
+    p0 = F.pmod(h, F.lit(_BLOOM_BITS))
+    p1 = F.pmod(F.shiftright(h, 22), F.lit(_BLOOM_BITS))
     return (
         keys.select(F.explode(F.array(p0, p1)).alias("pos"))
         .select(
@@ -177,9 +176,7 @@ def bloom_bitmap(keys: DataFrame, col: str, m: int = _BLOOM_BITS) -> DataFrame:
     )
 
 
-def bloom_maybe_contains(
-    probe: DataFrame, col: str, bloom: DataFrame, m: int = _BLOOM_BITS
-) -> DataFrame:
+def bloom_maybe_contains(probe: DataFrame, col: str, bloom: DataFrame) -> DataFrame:
     """Keep only probe rows that MIGHT be in the bloom (both bit
     positions set). Rows dropped here are DEFINITELY absent — bloom
     filters have no false negatives — so any exact join downstream is
@@ -192,8 +189,8 @@ def bloom_maybe_contains(
     b1 = bloom.select(F.col("w_idx").alias("_w1"), F.col("bits").alias("_bits1"))
     mask = lambda p: F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({p} % 64 AS INT))")  # noqa: E731
     return (
-        probe.withColumn("_p0", F.pmod(h, F.lit(m)))
-        .withColumn("_p1", F.pmod(F.shiftright(h, 22), F.lit(m)))
+        probe.withColumn("_p0", F.pmod(h, F.lit(_BLOOM_BITS)))
+        .withColumn("_p1", F.pmod(F.shiftright(h, 22), F.lit(_BLOOM_BITS)))
         .withColumn("_w0", F.expr("_p0 div 64"))
         .withColumn("_w1", F.expr("_p1 div 64"))
         .join(F.broadcast(b0), "_w0")
@@ -472,7 +469,7 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = fx.tokenize_ws()
     sh = (
         docs.filter(F.size(words) >= 3)
-        .select("doc_id", F.explode(_shingles(words)).alias("s"))
+        .select("doc_id", F.explode(fx.shingles(words, 3)).alias("s"))
         .select("doc_id", F.md5("s").alias("h"))
     )
     return (
@@ -1213,7 +1210,7 @@ def minhash_containment_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
     sig = (
         docs.filter(F.size(words) >= 3)
-        .select("doc_id", F.explode(_shingles(words)).alias("sh"))
+        .select("doc_id", F.explode(fx.shingles(words, 3)).alias("sh"))
         .select("doc_id", base.alias("x"))
         .groupBy("doc_id")
         .agg(

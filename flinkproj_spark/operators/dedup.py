@@ -25,7 +25,7 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkproj_spark import functions as fx
@@ -55,15 +55,6 @@ BUCKET_CAP = 200
 CKPT_EVERY = 3
 
 _WORDS_SQL = "list_filter(string_split(text, ' '), w -> w != '')"
-
-
-# Canonical implementations live in the public function library
-# (flinkproj_spark/functions.py); aliases keep module-local names.
-_words = fx.tokenize_ws
-
-
-def _shingles(words: Column) -> Column:
-    return fx.shingles(words, 3)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,11 +90,11 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     min aggregates in a single map-side-combined groupBy (no 9× row
     blow-up, no per-hash md5). Shared by dedup_minhash_lsh and the
     Jaccard-estimate verifier."""
-    words = _words()
+    words = fx.tokenize_ws()
     base = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
     return (
         docs.filter(F.size(words) >= 3)
-        .select("doc_id", F.explode(_shingles(words)).alias("sh"))
+        .select("doc_id", F.explode(fx.shingles(words, 3)).alias("sh"))
         .select("doc_id", base.alias("x"))
         .groupBy("doc_id")
         .agg(
@@ -112,27 +103,6 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
                 for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
             ]
         )
-    )
-
-
-def minhash_sigs_from_hashes(staged: DataFrame) -> DataFrame:
-    """Signatures from a pre-built positional shingle-hash array
-    (text.positional_shingle_hashes): sig_i = in-row affine minimum
-    over hs. Equal to minhash_signatures by construction — the min
-    over the positional multiset is the min over the distinct shingle
-    set — but with NO explode and NO groupBy shuffle, so a caller that
-    already owns a (doc_id, hs) frame (pair_strategy_agreement's
-    shared scan) gets signatures for one codegen'd projection."""
-    return staged.filter(F.size("hs") >= 1).select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform(
-                    "hs", lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-                )
-            ).alias(f"s{i}")
-            for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-        ],
     )
 
 
@@ -339,7 +309,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Near-dup = small Hamming distance, banded the same way as minhash
     when pairing at scale."""
     docs = load_table(spark, sf_dir, "documents")
-    words = _words()
+    words = fx.tokenize_ws()
     # Explode to (doc_id, token-hash) rows: one codegen'd md5 per token,
     # then 32 SUM(CASE) aggregates in a single map-side-combinable
     # groupBy — the nested-HOF formulation re-evaluates the hash array
@@ -443,7 +413,7 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers min(L, next_p − p) tokens, the last covers L — integer end
     to end, bit-identical in DuckDB."""
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = _words()
+    words = fx.tokenize_ws()
     # Nondeterministic barrier (paragraph_dedup's trick): without it
     # CollapseProject inlines the tokenize into EVERY gram's slice —
     # O(n_grams · n) re-splits per doc.
@@ -548,7 +518,7 @@ def pair_strategy_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkproj_spark.operators.text import _WINNOW_W, positional_shingle_hashes
 
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = _words()
+    words = fx.tokenize_ws()
     # Materialize ws/hs once per row behind a nondeterministic barrier
     # (the doc_winnow_fingerprints trick) so the per-strategy reductions
     # below don't each re-evaluate the tokenize/md5 chain — the barrier
@@ -677,7 +647,7 @@ def substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = _words()
+    words = fx.tokenize_ws()
     staged = docs.filter(F.size(words) >= 1).select(
         "doc_id", words.alias("ws"), F.monotonically_increasing_id().alias("_nc")
     )
@@ -760,9 +730,9 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     move. Contaminated-doc removal is then an anti join, as in
     pipeline_curate."""
     docs = load_table(spark, sf_dir, "documents")
-    words = _words()
+    words = fx.tokenize_ws()
     sh = docs.filter(F.size(words) >= 3).select(
-        "doc_id", F.explode(_shingles(words)).alias("s")
+        "doc_id", F.explode(fx.shingles(words, 3)).alias("s")
     ).select("doc_id", F.md5("s").alias("h"))
     eval_hashes = sh.filter(F.col("doc_id") % EVAL_MOD == 0).select("h").distinct()
     train = sh.filter(F.col("doc_id") % EVAL_MOD != 0)
@@ -799,9 +769,9 @@ def eval_leak_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     space = eval-set size). The training corpus still never self-joins
     and never shuffles text."""
     docs = load_table(spark, sf_dir, "documents")
-    words = _words()
+    words = fx.tokenize_ws()
     sh = docs.filter(F.size(words) >= 3).select(
-        "doc_id", F.explode(_shingles(words)).alias("s")
+        "doc_id", F.explode(fx.shingles(words, 3)).alias("s")
     ).select("doc_id", F.md5("s").alias("h"))
     eval_sh = (
         sh.filter(F.col("doc_id") % EVAL_MOD == 0)
@@ -843,7 +813,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate, the upstream exact-dedup filter's job, not blocking's."""
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
     return _ngram_jaccard_pairs(
-        docs.select("doc_id", "lang", _words().alias("ws"))
+        docs.select("doc_id", "lang", fx.tokenize_ws().alias("ws"))
     )
 
 
@@ -1694,11 +1664,11 @@ def source_jaccard_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # slower at sf0.1 (5.4 s vs 3.7 s warm) than letting the distinct
     # exchange parallelize the downstream work.
     docs = load_table(spark, sf_dir, "documents")
-    words = _words()
+    words = fx.tokenize_ws()
     base = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
     sh = (
         docs.filter(F.size(words) >= 3)
-        .select("source", F.explode(_shingles(words)).alias("sh"))
+        .select("source", F.explode(fx.shingles(words, 3)).alias("sh"))
         .select("source", base.alias("x"))
         .distinct()
     )
@@ -2589,7 +2559,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
     return (
         _blocked_pair_expand(
-            docs.select("doc_id", "lang", _words().alias("ws")),
+            docs.select("doc_id", "lang", fx.tokenize_ws().alias("ws")),
             lambda x, y: F.struct(
                 x["doc_id"].alias("doc_a"),
                 y["doc_id"].alias("doc_b"),
@@ -2654,7 +2624,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. The corpus text never shuffles."""
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
     pairs = _ngram_jaccard_pairs(
-        docs.select("doc_id", "lang", _words().alias("ws"))
+        docs.select("doc_id", "lang", fx.tokenize_ws().alias("ws"))
     ).select("doc_a", "doc_b")
     # Round-13 lineage fix (guide §2.4): symmetrize by ONE explode —
     # the self-union referenced the Jaccard pair derivation twice —

@@ -46,10 +46,6 @@ _CHUNK_WORDS = 32
 _PACK_CAPACITY = 256  # words per packed training sequence
 
 
-def _keep_hash(doc_id_col) -> F.Column:
-    return F.substring(F.md5(F.concat(doc_id_col.cast("string"), F.lit(_SALT))), 1, 2)
-
-
 def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sample of `documents`: each language
     keeps a fixed fraction chosen by hash, so the sample is reproducible
@@ -59,7 +55,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.create_map(*[F.lit(x) for kv in _RATES.items() for x in kv])[F.col("lang")],
         F.lit(_DEFAULT_CEIL),
     )
-    return docs.filter(_keep_hash(F.col("doc_id")) < ceil_col).select(
+    return docs.filter(fx.hash_keep(F.col("doc_id"), _SALT) < ceil_col).select(
         "doc_id", "lang", "source", "n_chars"
     )
 
@@ -80,7 +76,7 @@ def importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: pure scan + filter, zero shuffle, all integer arithmetic
     (w_e6 · 2³² div 10⁶ never overflows a BIGINT)."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    words = fx.tokenize_ws()
     n_words = F.size(words)
     w_e6 = (F.least(n_words, F.lit(IS_CAP_WORDS)) * F.lit(1_000_000 // IS_CAP_WORDS)).cast(
         "long"
@@ -103,7 +99,7 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     one output row per chunk with its text and word count. The slice per
     chunk is O(chunk), so total work is O(words) per doc."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    words = fx.tokenize_ws()
     n = F.size(words)
     base = docs.filter(n >= 1).select("doc_id", words.alias("ws"), n.alias("n"))
     n_chunks = F.ceil(F.col("n") / F.lit(_CHUNK_WORDS)).cast("int")
@@ -118,9 +114,7 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("chunk_id").cast("long").alias("chunk_id"),
         "chunk_text",
-        F.size(F.filter(F.split("chunk_text", " "), lambda w: w != "")).alias(
-            "chunk_words"
-        ),
+        F.size(fx.tokenize_ws("chunk_text")).alias("chunk_words"),
     )
 
 
@@ -134,7 +128,7 @@ def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     one window cumsum per source, no global coordination — the form that
     still works when a source holds billions of docs."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    words = fx.tokenize_ws()
     sized = docs.select(
         "doc_id", "source", F.least(F.size(words), F.lit(_PACK_CAPACITY)).alias("nw")
     )
@@ -934,7 +928,7 @@ ORACLE["range_partition_plan"] = f"""
 
 #: train/val/test cut points out of SPLIT_DENOM rank slices.
 SPLIT_DENOM = 10
-SPLIT_TRAIN, SPLIT_VAL = 8, 9  # slice < 8 train, 8 val, 9 test
+SPLIT_TRAIN = 8  # slice < 8 train, slice 8 val, slice 9 test
 
 #: Dedicated salt for the split RANK. Must differ from every sampling
 #: coin (_SALT, _MIX_SALT, ...): if the rank reused a keep-coin salt,

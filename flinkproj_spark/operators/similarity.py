@@ -21,7 +21,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkproj_spark import functions as fx
@@ -35,24 +35,13 @@ N_PLANES_NEARDUP = 4   # 16 buckets
 NEARDUP_MIN_COS = 0.25
 
 
-# Canonical implementations live in the public function library
-# (flinkproj_spark/functions.py); these aliases keep module-local names.
-def _plane_weights(n_planes: int, dim: int = DIM) -> list[list[int]]:
-    return fx.lsh_planes(n_planes, dim)
-
-
-_quant = fx.quantize_embedding
-_dot = fx.dot
-_sketch = fx.sign_lsh_bucket
-
-
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.select(
         "vec_id",
         "label",
-        _quant(F.col("embedding")).alias("q"),
-    ).withColumn("norm", F.sqrt(_dot("q", "q").cast("double")))
+        fx.quantize_embedding(F.col("embedding")).alias("q"),
+    ).withColumn("norm", F.sqrt(fx.dot("q", "q").cast("double")))
 
 
 def ann_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -74,7 +63,7 @@ def ann_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "vec_id",
             F.round(
-                _dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
+                fx.dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
             ).alias("cos"),
         )
     )
@@ -103,8 +92,8 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall floor pinned by tests/test_operators.py."""
     from pyspark.sql import Window
 
-    planes = _plane_weights(N_PLANES_TOPK)
-    base = _quantized(spark, sf_dir).withColumn("bucket", _sketch(F.col("q"), planes))
+    planes = fx.lsh_planes(N_PLANES_TOPK, DIM)
+    base = _quantized(spark, sf_dir).withColumn("bucket", fx.sign_lsh_bucket(F.col("q"), planes))
     masks = [1 << p for p in range(N_PLANES_TOPK)] + [
         (1 << p1) | (1 << p2)
         for p1 in range(N_PLANES_TOPK)
@@ -130,7 +119,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "vec_id",
             F.round(
-                _dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
+                fx.dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
             ).alias("cos"),
         )
     )
@@ -176,7 +165,7 @@ def ann_topk_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the dot product so each pair is scored once."""
     from pyspark.sql import Window
 
-    all_planes = _plane_weights(N_TABLES * N_PLANES_TOPK)
+    all_planes = fx.lsh_planes(N_TABLES * N_PLANES_TOPK, DIM)
     base = _quantized(spark, sf_dir)
     tagged = base.select(
         "vec_id",
@@ -187,7 +176,7 @@ def ann_topk_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(t).alias("tbl"),
-                        _sketch(
+                        fx.sign_lsh_bucket(
                             F.col("q"),
                             all_planes[t * N_PLANES_TOPK : (t + 1) * N_PLANES_TOPK],
                         ).alias("bucket"),
@@ -234,7 +223,7 @@ def ann_topk_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "vec_id",
             F.round(
-                _dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
+                fx.dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
             ).alias("cos"),
         )
     )
@@ -282,12 +271,12 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01 vs the exact O(n²) truth: 0.125 single-probe → 0.47
     multi-probe. Same shape as dedup_minhash_lsh otherwise: an
     equi-join on the bucket instead of a cross join."""
-    planes = _plane_weights(N_PLANES_NEARDUP)
+    planes = fx.lsh_planes(N_PLANES_NEARDUP, DIM)
     # The per-pair dot products run on the probe side of a broadcast
     # join — fan out the single-split scan so they parallelize (3× at
     # sf0.1; no-op on a multi-split layout).
     base = fan_out(spark, sf_dir, "embeddings", _quantized(spark, sf_dir)).withColumn(
-        "bucket", _sketch(F.col("q"), planes)
+        "bucket", fx.sign_lsh_bucket(F.col("q"), planes)
     )
     probe_arr = F.array(
         F.col("bucket"),
@@ -306,7 +295,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_a",
             "vec_b",
-            F.round(_dot("qa", "qb").cast("double") / (F.col("na") * F.col("nb")), 6).alias("cos"),
+            F.round(fx.dot("qa", "qb").cast("double") / (F.col("na") * F.col("nb")), 6).alias("cos"),
         )
         .filter(F.col("cos") >= NEARDUP_MIN_COS)
     )
@@ -334,7 +323,7 @@ def ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "cid",
-        (_dot("q", "cv").cast("double") / (F.col("norm") * F.col("cnorm"))).alias("csim"),
+        (fx.dot("q", "cv").cast("double") / (F.col("norm") * F.col("cnorm"))).alias("csim"),
     )
     return scored.groupBy("vec_id").agg(
         F.max_by("cid", F.struct(F.col("csim"), (-F.col("cid")).cast("double"))).alias("cell"),
@@ -363,7 +352,7 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored_cells = base.crossJoin(F.broadcast(cent)).select(
         "vec_id",
         "cid",
-        (_dot("q", "cv").cast("double") / (F.col("norm") * F.col("cnorm"))).alias("csim"),
+        (fx.dot("q", "cv").cast("double") / (F.col("norm") * F.col("cnorm"))).alias("csim"),
     )
     # argmax centroid per vector: max_by over (csim, -cid) — highest
     # similarity, smallest cid on ties; pure map-side agg, one shuffle
@@ -395,7 +384,7 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "vec_id",
             F.round(
-                _dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
+                fx.dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
             ).alias("cos"),
         )
     )
@@ -422,10 +411,10 @@ def _argmax_cos(arr, id_field: str, v_field: str, n_field: str, q, norm):
             F.lit(-2.0).alias("s"), F.lit(-1).cast("long").alias("i")
         ),
         lambda acc, c: F.when(
-            (_dot(c[v_field], q).cast("double") / (c[n_field] * norm))
+            (fx.dot(c[v_field], q).cast("double") / (c[n_field] * norm))
             > acc["s"],
             F.struct(
-                (_dot(c[v_field], q).cast("double") / (c[n_field] * norm)).alias(
+                (fx.dot(c[v_field], q).cast("double") / (c[n_field] * norm)).alias(
                     "s"
                 ),
                 c[id_field].cast("long").alias("i"),
@@ -518,13 +507,30 @@ def _semdedup_codebook(base: DataFrame) -> DataFrame:
 
 def _with_cells(base: DataFrame) -> DataFrame:
     """`base` plus its semdedup `cell` column, computed entirely
-    IN-ROW against the broadcast two-level codebook: coarse argmax
-    over c = ⁴√N-ish centroids picks the group, fine argmax over only
-    that group's ~√k fine centroids picks the cell — ~2·√k dots per
-    vector instead of the flat argmax's k, and ZERO shuffles on the
-    corpus side (the r11 flat version shuffled N rows through a
-    groupBy(vec_id) and its consumers re-joined on vec_id; this is a
-    pure projection over the scan).
+    IN-ROW against the broadcast two-level codebook (√N cells; see
+    _semdedup_codebook).
+
+    Why √N cells: the two stages this geometry feeds pull in opposite
+    directions — the within-cell pair stage costs ~N·(N/k), so
+    k = √N balances pair cost at N^1.5 (the SemDeDup paper's own
+    sizing). Both failure modes were MEASURED on the x30 tiled corpus
+    (BASELINE.md round-11 record): a fixed codebook sends the pair
+    stage quadratic (semdedup_cells 8.3→47→178 s at x1/x10/x30), and a
+    pinned-occupancy k = N/64 sends assignment quadratic (466 s at
+    x30). Why two-level assignment: the r11 flat argmax's N·k = N^1.5
+    scoring term dominated the measured exponent (0.87 at x30);
+    hierarchical assignment scores N·(c + E[group]) ≈ N·2·√k ≈ N^1.25
+    with the same cell geometry feeding the pair stage — measured at
+    x30 on the honest v2 corpus (SCALE_BENCH_R12.json, round-12
+    BASELINE record): semdedup_cells 118→50 s, e 0.874→0.545;
+    semdedup_greedy_keep 206→45 s, e 1.066→0.584.
+
+    Shape: coarse argmax over c = ⁴√N-ish centroids picks the group,
+    fine argmax over only that group's ~√k fine centroids picks the
+    cell — ~2·√k dots per vector instead of the flat argmax's k, and
+    ZERO shuffles on the corpus side (the r11 flat version shuffled N
+    rows through a groupBy(vec_id) and its consumers re-joined on
+    vec_id; this is a pure projection over the scan).
 
     The cell FUNCTION changes vs the flat argmax (a vector near a
     group boundary can land in a different — equally valid — cell):
@@ -564,29 +570,6 @@ def _with_cells(base: DataFrame) -> DataFrame:
             F.col("_grp"),
         ),
     ).drop("_coarse", "_cmap", "_grp")
-
-
-def semdedup_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every vector's semdedup cell — (vec_id, cell) — under the
-    corpus-size-scaled √N codebook, assigned through the standard
-    TWO-LEVEL coarse quantizer (_with_cells / _semdedup_codebook).
-
-    Why √N cells: the two stages this geometry feeds pull in opposite
-    directions — the within-cell pair stage costs ~N·(N/k), so
-    k = √N balances pair cost at N^1.5 (the SemDeDup paper's own
-    sizing). Both failure modes were MEASURED on the x30 tiled corpus
-    (BASELINE.md round-11 record): a fixed codebook sends the pair
-    stage quadratic (semdedup_cells 8.3→47→178 s at x1/x10/x30), and a
-    pinned-occupancy k = N/64 sends assignment quadratic (466 s at
-    x30). Why two-level assignment: the r11 flat argmax's N·k = N^1.5
-    scoring term dominated the measured exponent (0.87 at x30);
-    hierarchical assignment scores N·(c + E[group]) ≈ N·2·√k ≈ N^1.25
-    with the same cell geometry feeding the pair stage — measured at
-    x30 on the honest v2 corpus (SCALE_BENCH_R12.json, round-12
-    BASELINE record): semdedup_cells 118→50 s, e 0.874→0.545;
-    semdedup_greedy_keep 206→45 s, e 1.066→0.584."""
-    base = _quantized(spark, sf_dir)
-    return _with_cells(base).select("vec_id", "cell")
 
 
 #: The oracle twins of _semdedup_codebook's centroid windows — shared
@@ -630,7 +613,7 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level broadcast-codebook argmax (_with_cells — √N cells so the
     pair stage stays N^1.5-bounded, ~2·√k dots per vector, zero
     corpus-side shuffles; the fixed ivf_assignments codebook measured
-    quadratic on the tiled corpus, see semdedup_assignments); pair
+    quadratic on the tiled corpus, see _with_cells); pair
     generation is an EQUI-JOIN on cell (merge-pinned: both sides are
     corpus-proportional, broadcast would cap scale; pinned by
     tests/test_plans.py). The verdict aggregation is a
@@ -669,7 +652,7 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vb",
             F.round(
-                _dot("qa", "qb").cast("double") / (F.col("na") * F.col("nb")), 6
+                fx.dot("qa", "qb").cast("double") / (F.col("na") * F.col("nb")), 6
             ).alias("cos"),
         )
         .filter(F.col("cos") >= SEMDEDUP_MIN_COS)
@@ -691,64 +674,26 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _greedy_keep_from_edges(
-    scope: fx.CacheScope, verts: DataFrame, edges: DataFrame
-) -> DataFrame:
-    """Exact sequential-greedy keep set over a DAG of (va < vb)
-    similarity edges. Vertices touching no edge are kept outright with
-    ZERO loop work — the loop's state is only the edge-touched
-    subgraph, so iteration cost scales with the PAIR list (the dedup
-    rate), never the corpus: at 100 TB the corpus-shaped work is one
-    anti join. Each round updates one flat (vec_id, st) status frame
-    (0 undecided / 1 kept / 2 dropped) with a single
-    edge-join + groupBy: a vertex with a kept earlier neighbor drops;
-    one with no undecided earlier neighbor (and none kept) keeps. The
-    smallest undecided vertex of every component is decided each
-    round, so rounds ≤ the longest similarity chain — single digits in
-    practice; the per-round scalar count is the dedup_cluster
-    convergence pattern, and the flat status frame (held in the
-    caller's scope, predecessor released) keeps lineage depth constant.
-    Returns a (vec_id) frame of kept ids, valid while `scope` is open;
-    inputs must be held by the caller."""
-    touched = (
-        edges.select(F.col("va").alias("vec_id"))
-        .unionByName(edges.select(F.col("vb").alias("vec_id")))
-        .distinct()
-    )
-    free = verts.select("vec_id").join(touched, "vec_id", "left_anti")
-    status = scope.hold(touched.withColumn("st", F.lit(0)))
-    n_und = status.count()
-    for _ in range(64):  # bound >> any real chain depth; break on done
-        if n_und == 0:
-            break
-        live_src = status.filter(F.col("st") != 2).select(
-            F.col("vec_id").alias("va"), F.col("st").alias("st_src")
-        )
-        upd = (
-            edges.join(live_src, "va")
-            .groupBy(F.col("vb").alias("vec_id"))
-            .agg(
-                F.max((F.col("st_src") == 1).cast("int")).alias("kept_nbr"),
-                F.max((F.col("st_src") == 0).cast("int")).alias("und_nbr"),
-            )
-        )
-        new_status = scope.hold(
-            status.join(upd, "vec_id", "left").select(
-                "vec_id",
-                F.when(F.col("st") != 0, F.col("st"))
-                .when(F.coalesce("kept_nbr", F.lit(0)) == 1, F.lit(2))
-                .when(F.coalesce("und_nbr", F.lit(0)) == 0, F.lit(1))
-                .otherwise(F.lit(0))
-                .alias("st"),
-            )
-        )
-        scope.release(status)
-        status = new_status
-        n_und = status.filter(F.col("st") == 0).count()
-    else:
-        raise RuntimeError("greedy keep did not converge in 64 rounds")
-    return free.unionByName(
-        status.filter(F.col("st") == 1).select("vec_id")
+def _greedy_keep_cell(pdf):
+    """One cell's sequential greedy over its (va < vb) similarity
+    edges: scan the edge-touched ids ascending and keep an id unless an
+    already-kept id is its neighbor. Returns (vec_id, is_kept) for
+    every id the edges touch."""
+    import pandas as pd
+
+    pred: dict[int, list[int]] = {}
+    vs: set[int] = set()
+    for va, vb in zip(pdf["va"], pdf["vb"]):
+        pred.setdefault(int(vb), []).append(int(va))
+        vs.add(int(va))
+        vs.add(int(vb))
+    kept: set[int] = set()
+    for v in sorted(vs):
+        if all(u not in kept for u in pred.get(v, ())):
+            kept.add(v)
+    order = sorted(vs)
+    return pd.DataFrame(
+        {"vec_id": order, "is_kept": [1 if v in kept else 0 for v in order]}
     )
 
 
@@ -773,13 +718,10 @@ def semdedup_greedy_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-cluster sequential dedup of the SemDeDup paper, one
     shuffle of (cell, id-pair) rows and zero driver rounds. The Arrow
     task holds a cell's EDGE list (dedup-rate-sized), not its vectors;
-    ivf_cell_balance_report monitors the cell-size bound, and the
-    generic frontier loop (_greedy_keep_from_edges, kept for graphs
-    with no cell structure) is the fallback if a pathological cell
-    ever outgrows a task. The DuckDB oracle replays the identical
-    greedy as one ordered list_reduce. The cell-assigned corpus cache is
-    caller-owned: the one-row-per-vector output is returned lazily over
-    it."""
+    ivf_cell_balance_report monitors the cell-size bound. The DuckDB
+    oracle replays the identical greedy as one ordered list_reduce. The
+    cell-assigned corpus cache is caller-owned: the one-row-per-vector
+    output is returned lazily over it."""
     from pyspark.storagelevel import StorageLevel
 
     base = _quantized(spark, sf_dir)
@@ -809,34 +751,15 @@ def semdedup_greedy_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "va",
             "vb",
             F.round(
-                _dot("qa", "qb").cast("double") / (F.col("na") * F.col("nb")), 6
+                fx.dot("qa", "qb").cast("double") / (F.col("na") * F.col("nb")), 6
             ).alias("cos"),
         )
         .filter(F.col("cos") >= SEMDEDUP_MIN_COS)
         .select("cell", "va", "vb")
     )
     verts = corpus.select("vec_id", "cell")
-
-    def _cell_greedy(pdf):
-        import pandas as pd
-
-        pred: dict[int, list[int]] = {}
-        vs: set[int] = set()
-        for va, vb in zip(pdf["va"], pdf["vb"]):
-            pred.setdefault(int(vb), []).append(int(va))
-            vs.add(int(va))
-            vs.add(int(vb))
-        kept: set[int] = set()
-        for v in sorted(vs):
-            if all(u not in kept for u in pred.get(v, ())):
-                kept.add(v)
-        order = sorted(vs)
-        return pd.DataFrame(
-            {"vec_id": order, "is_kept": [1 if v in kept else 0 for v in order]}
-        )
-
     decided = edges.groupBy("cell").applyInPandas(
-        _cell_greedy, "vec_id long, is_kept int"
+        _greedy_keep_cell, "vec_id long, is_kept int"
     )
     return verts.join(decided, "vec_id", "left").select(
         "vec_id",
@@ -875,7 +798,7 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     find). The gate fires on genuinely corrupted vectors — pinned by
     tests/test_operators.py::test_embedding_outliers_flags_planted_corruption."""
     emb = fan_out(spark, sf_dir, "embeddings", load_table(spark, sf_dir, "embeddings"))
-    q = emb.select("vec_id", "label", _quant(F.col("embedding")).alias("q"))
+    q = emb.select("vec_id", "label", fx.quantize_embedding(F.col("embedding")).alias("q"))
     sums = (
         q.select("label", F.posexplode("q").alias("pos0", "qv"))
         .groupBy("label", "pos0")
@@ -1027,7 +950,7 @@ def _pq_qtables(base: DataFrame) -> DataFrame:
     )
 
 
-def _pq_adc_scores(base: DataFrame, codes: DataFrame | None = None) -> DataFrame:
+def _pq_adc_scores(base: DataFrame) -> DataFrame:
     """(query_id, vec_id, adist2): asymmetric distance of every
     (query, candidate) pair — PQ_M table lookups per pair, computed
     where the codes live (the broadcast query tables come to them)."""
@@ -1040,10 +963,8 @@ def _pq_adc_scores(base: DataFrame, codes: DataFrame | None = None) -> DataFrame
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    if codes is None:
-        codes = pq_codes(base)
     return (
-        codes.crossJoin(F.broadcast(_pq_qtables(base)))
+        pq_codes(base).crossJoin(F.broadcast(_pq_qtables(base)))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", adist.alias("adist2"))
     )
@@ -1116,7 +1037,7 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("query_id"),
             "cid",
-            (_dot("q", "cv").cast("double") / (F.col("norm") * F.col("cnorm"))).alias("csim"),
+            (fx.dot("q", "cv").cast("double") / (F.col("norm") * F.col("cnorm"))).alias("csim"),
         )
         .withColumn("prank", F.row_number().over(qw))
         .filter(F.col("prank") <= N_PROBE)
@@ -1391,7 +1312,7 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("nb_label"),
             "vec_id",
             F.round(
-                _dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
+                fx.dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
             ).alias("cos"),
         )
     )
@@ -1760,7 +1681,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             F.round(
-                _dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
+                fx.dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")), 6
             ).alias("cos"),
         )
     )
@@ -1822,7 +1743,7 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 def _planes_sql(n_planes: int) -> str:
-    rows = _plane_weights(n_planes)
+    rows = fx.lsh_planes(n_planes, DIM)
     return "[" + ", ".join("[" + ", ".join(str(w) for w in r) + "]" for r in rows) + "]"
 
 
@@ -1837,7 +1758,7 @@ def _sketch_sql(vec: str, n_planes: int) -> str:
 def _sketch_slice_sql(vec: str, start: int, n_planes: int) -> str:
     """Sketch over the [start, start+n) slice of the shared codebook —
     one OR-banding table's bucket id."""
-    rows = _plane_weights(start + n_planes)[start : start + n_planes]
+    rows = fx.lsh_planes(start + n_planes, DIM)[start : start + n_planes]
     planes = "[" + ", ".join("[" + ", ".join(str(w) for w in r) + "]" for r in rows) + "]"
     return f"""CAST(list_sum(list_transform(range(0, {n_planes}),
         p -> CASE WHEN list_sum(list_transform(range(1, {DIM} + 1),
@@ -2646,7 +2567,7 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         frame = base.select(
             "vec_id",
             qcol.alias("qd"),
-        ).withColumn("nd", F.sqrt(_dot("qd", "qd").cast("double")))
+        ).withColumn("nd", F.sqrt(fx.dot("qd", "qd").cast("double")))
         queries = frame.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
             F.col("qd").alias("qv"),
@@ -2659,7 +2580,7 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "query_id",
                 "vec_id",
                 F.round(
-                    _dot("qd", "qv").cast("double") / (F.col("nd") * F.col("qnorm")),
+                    fx.dot("qd", "qv").cast("double") / (F.col("nd") * F.col("qnorm")),
                     6,
                 ).alias("cos"),
             )

@@ -9,7 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flinkproj_spark.operators.relational import TD_MOD, _cents
+from flinkproj_spark import functions as fx
+from flinkproj_spark.operators.relational import _cents
 from flinkproj_spark.sources.tables import load_table
 
 def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,7 +450,7 @@ def corr_pairs_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames are 3 rows and ride broadcasts.
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda w: w != F.lit(""))
+    words = fx.tokenize_ws()
     m = docs.select(
         F.col("n_chars").cast("long").alias("nc"),
         F.size(words).cast("long").alias("nw"),

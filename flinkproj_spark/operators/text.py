@@ -22,10 +22,6 @@ from pyspark.sql import functions as F
 from flinkproj_spark import functions as fx
 from flinkproj_spark.sources.tables import fan_out, load_table
 
-# Canonical implementations live in the public function library
-# (flinkproj_spark/functions.py); aliases keep module-local names.
-_words = fx.tokenize_ws
-
 _WORDS_SQL = "list_filter(string_split(text, ' '), w -> w != '')"
 
 _TOKEN_RE = fx.TOKEN_RE
@@ -49,7 +45,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.size(_words()).alias("n_words"),
+        F.size(fx.tokenize_ws()).alias("n_words"),
         F.regexp_count("text", F.lit(_TOKEN_RE)).alias("n_tokens"),
     )
 
@@ -64,7 +60,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (aggregate/filter over the split array) re-evaluates the split per
     # statistic in interpreted eval (measured ~10s -> ~1s at sf0.1).
     # Docs with zero words vanish at explode, matching `n_words > 0`.
-    tok = docs.select("doc_id", F.explode(_words()).alias("w"))
+    tok = docs.select("doc_id", F.explode(fx.tokenize_ws()).alias("w"))
     base = tok.groupBy("doc_id").agg(
         F.count("*").alias("n_words"),
         F.sum(F.length("w")).alias("_tl"),
@@ -93,7 +89,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     One scan, no shuffle; markers are a compile-time constant array.
     Map-only and marker-matching-heavy → fan the single-split scan out."""
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = F.transform(_words(), lambda w: F.lower(w))
+    words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
     sel = [F.col("doc_id")]
     for lang in _LANG_ORDER:
         marker_arr = F.array(*[F.lit(m) for m in _LANG_MARKERS[lang]])
@@ -117,7 +113,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the doc)."""
     docs = load_table(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.lower("text"), "\\s+", " "))
-    words = _words()
+    words = fx.tokenize_ws()
     n = F.size(words)
     # 3-shingles built in O(n) per doc: zip the word array against its
     # two shifted tails (the transform-over-sequence + slice(words, i, 3)
@@ -152,7 +148,7 @@ def text_tf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select("doc_id", F.explode(_words()).alias("w"))
+        docs.select("doc_id", F.explode(fx.tokenize_ws()).alias("w"))
         .select("doc_id", F.lower("w").alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
@@ -170,7 +166,7 @@ def ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zip words with their tail — one pass, no index loop), explode,
     one combined count shuffle, top-k with deterministic tiebreak."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.transform(_words(), lambda w: F.lower(w))
+    words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
     bigrams = F.zip_with(
         F.slice(words, 1, F.greatest(F.size(words) - 1, F.lit(0))),
         F.slice(words, 2, F.greatest(F.size(words) - 1, F.lit(0))),
@@ -282,7 +278,7 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collapse; the column itself is never read.
     staged = docs.select(
         "doc_id",
-        positional_shingle_hashes(_words()).alias("hs"),
+        positional_shingle_hashes(fx.tokenize_ws()).alias("hs"),
         F.monotonically_increasing_id().alias("_nc"),
     )
     return winnow_fps_from_hashes(staged)
@@ -319,9 +315,9 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the tokenize runs once per row — CollapseProject would otherwise
     # inline it into every slice of the n-gram builders (re-evaluations
     # of split per row; see doc_winnow_fingerprints).
-    staged = docs.filter(F.size(_words()) >= 3).select(
+    staged = docs.filter(F.size(fx.tokenize_ws()) >= 3).select(
         "doc_id",
-        F.transform(_words(), lambda w: F.lower(w)).alias("ws"),
+        F.transform(fx.tokenize_ws(), lambda w: F.lower(w)).alias("ws"),
         F.monotonically_increasing_id().alias("_nc"),
     )
     ws = F.col("ws")
@@ -404,7 +400,7 @@ def bigram_pmi_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE, identical in DuckDB (at 100 TB token counts the products
     need DECIMAL(38,0) instead; the shape is unchanged)."""
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = F.transform(_words(), lambda w: F.lower(w))
+    words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
     tok = docs.select(F.explode(words).alias("w"))
     uni = tok.groupBy("w").agg(F.count("*").alias("c"))
     total = uni.agg(F.sum("c").alias("n_tokens"))
@@ -498,7 +494,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     a corpus-derived frame is safe by construction. Coverage is a
     combined groupBy(lang) over token flags; OOV ppm is integer."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("lang", F.explode(_words()).alias("w")).select(
+    tok = docs.select("lang", F.explode(fx.tokenize_ws()).alias("w")).select(
         "lang", F.lower("w").alias("w")
     )
     vocab = (
@@ -538,7 +534,7 @@ def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict come from the shared gopher_stat_aggs/gopher_keep_col so
     the funnel report (operators/curation.py) observes the SAME rules."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(_words()).alias("w"))
+    tok = docs.select("doc_id", F.explode(fx.tokenize_ws()).alias("w"))
     base = tok.groupBy("doc_id").agg(*gopher_stat_aggs())
     keep = gopher_keep_col()
     return base.select(
@@ -568,7 +564,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange carries (pair, partial count) — bounded by alphabet²,
     independent of corpus size."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(_words()).alias("w0")).select(
+    tok = docs.select(F.explode(fx.tokenize_ws()).alias("w0")).select(
         F.lower("w0").alias("w")
     )
     pairs = tok.filter(F.length("w") >= 2).select(
@@ -822,7 +818,7 @@ def quality_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(_words()).alias("w"))
+    tok = docs.select("doc_id", F.explode(fx.tokenize_ws()).alias("w"))
     base = tok.groupBy("doc_id").agg(*gopher_stat_aggs())
     *_, score = _qc_score_exprs()
     scored = base.select(
@@ -887,7 +883,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.size(ids).cast("long").alias("t"),
         F.size(F.filter(ids, lambda i: i < 0)).cast("long").alias("o"),
-        F.size(_words()).cast("long").alias("w"),
+        F.size(fx.tokenize_ws()).cast("long").alias("w"),
     )
     return (
         per.groupBy("lang")
@@ -987,7 +983,7 @@ def doc_length_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.size(_words()).alias("n_tokens"))
+        docs.select(F.size(fx.tokenize_ws()).alias("n_tokens"))
         .groupBy("n_tokens")
         .agg(F.count("*").alias("n_docs"))
     )
@@ -1045,7 +1041,7 @@ def quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers (gopher_stat_aggs), one map-side-combined groupBy, zero
     joins."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(_words()).alias("w"))
+    tok = docs.select("doc_id", F.explode(fx.tokenize_ws()).alias("w"))
     base = tok.groupBy("doc_id").agg(*gopher_stat_aggs())
     stop_ppm, alpha_ppm, len_pen, score = _qc_score_exprs()
     return base.select(
@@ -1232,7 +1228,7 @@ def _quality_drift_core(docs: DataFrame) -> DataFrame:
         "is_new", (F.col("doc_id") * 2 > F.col("_max_id")).cast("long")
     )
     tok = tagged.select(
-        "doc_id", "source", "is_new", F.explode(_words()).alias("w")
+        "doc_id", "source", "is_new", F.explode(fx.tokenize_ws()).alias("w")
     )
     base = tok.groupBy("doc_id", "source", "is_new").agg(*gopher_stat_aggs())
     *_, score = _qc_score_exprs()
@@ -1362,7 +1358,7 @@ def vocab_prune_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     wc = (
-        docs.select(F.explode(_words()).alias("w"))
+        docs.select(F.explode(fx.tokenize_ws()).alias("w"))
         .select(F.lower("w").alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c"))
@@ -2117,7 +2113,7 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from flinkproj_spark.functions import bucketed_cumsum
     docs = load_table(spark, sf_dir, "documents")
-    words = F.transform(_words(), lambda w: F.lower(w))
+    words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
     bucket = (F.col("doc_id") / VG_CHECKPOINT).cast("long") + 1  # cp index
     base = docs.select("doc_id", words.alias("ws")).withColumn("cp", bucket)
 
@@ -2216,7 +2212,7 @@ def kn_bigram_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the only data-sized stage is the first bigram groupBy —
     map-side combined, vocabulary² keys at most."""
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = F.transform(_words(), lambda w: F.lower(w))
+    words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
     m = F.greatest(F.size(words) - 1, F.lit(0))
     bigrams = F.zip_with(
         F.slice(words, 1, m), F.slice(words, 2, m),
@@ -2359,7 +2355,7 @@ def zipf_fit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkproj_spark.functions import bucketed_row_number
 
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = F.transform(_words(), lambda w: F.lower(w))
+    words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
     counts = (
         docs.select(F.explode(words).alias("w"))
         .groupBy("w")
@@ -2422,7 +2418,7 @@ def simpson_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(c^2) stay inside int64 while C < 3e9 tokens per source; past
     that the sums go DECIMAL(38) unchanged (they are plain sums)."""
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = F.transform(_words(), lambda w: F.lower(w))
+    words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
     wc = (
         docs.select("source", F.explode(words).alias("w"))
         .groupBy("source", "w")
@@ -2696,7 +2692,7 @@ def hapax_rate_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer ppm via div. At 100 TB the type table is the only moved
     data — vocabulary grows ~Heaps' law, sublinear in corpus size."""
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = F.transform(_words(), lambda w: F.lower(w))
+    words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
     types = (
         docs.select("lang", F.explode(words).alias("w"))
         .groupBy("lang", "w")
@@ -2762,7 +2758,7 @@ def lang_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     langs × (n_langs+1) — corpus-size-independent, one map-side-combined
     exchange. Map-heavy scan → fanned out like text_lang_id."""
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = F.transform(_words(), lambda w: F.lower(w))
+    words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
     hits = []
     for lang in _LANG_ORDER:
         arr = F.array(*[F.lit(m) for m in _LANG_MARKERS[lang]])

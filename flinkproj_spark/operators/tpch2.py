@@ -35,15 +35,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkproj_spark.operators.relational import _cents
+from flinkproj_spark.operators.tpch import _REV_E4_SQL, _rev_e4
 from flinkproj_spark.sources.tables import load_table
 
-_REV_E4_SQL = ("CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) * "
-               "(100 - CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT))")
 _QTY_C_SQL = "CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)"
-
-
-def _rev_e4():
-    return _cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))
 
 
 def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -147,12 +147,3 @@ def report_late_split(parsed: DataFrame, watermark_ts) -> tuple[DataFrame, DataF
     )
     return on_time, late
 
-
-def run_clean(spark, events_json: DataFrame, dim: DataFrame) -> DataFrame:
-    """Batch driver for Pipeline 1."""
-    return clean_transform(events_json, dim)
-
-
-def run_report(spark, events_json: DataFrame) -> DataFrame:
-    """Batch driver for Pipeline 2."""
-    return report_aggregate(report_parse(events_json))

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkproj_spark.functions import cache_scope
+from flinkproj_spark.streaming.warehouse import _fs_and_path
 
 UPSERT_HASH_BUCKETS = 16
 # the reference's doc id opens with its window's max event time,
@@ -57,12 +58,9 @@ def read_buckets(
     are read by literal path with the caller's schema: nothing else in
     the result is listed — a glob over `kb=` lists every bucket — and no
     job infers a schema."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(result_dir).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
+    fs, _ = _fs_and_path(spark, result_dir)
     paths = [f"{result_dir}/kb={b}" for b in buckets]
-    present = [p for p in paths if fs.exists(jvm.org.apache.hadoop.fs.Path(p))]
+    present = [p for p in paths if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(p))]
     if not present:
         return None
     return spark.read.schema(schema).option("basePath", result_dir).parquet(*present)
@@ -98,12 +96,15 @@ def upsert_keyed(batch: DataFrame, result_dir: str, key: str = "doc_id") -> None
         touched = [r.kb for r in staged.select("kb").distinct().collect()]
         if not touched:
             return
-        spark_b.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         existing = read_buckets(spark_b, result_dir, touched, staged.schema)
         if existing is not None:
             survivors = existing.join(staged.select(key).distinct(), key, "left_anti")
             staged = staged.unionByName(survivors.localCheckpoint(eager=True))
-        staged.write.mode("overwrite").partitionBy("kb").parquet(result_dir)
+        # dynamic on this writer only: a session-wide setting would turn
+        # every later overwrite in the session into a partition merge
+        staged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("kb").parquet(result_dir)
 
 
 def write_partitioned(df: DataFrame, path: str, *partition_cols: str) -> None:

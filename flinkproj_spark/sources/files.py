@@ -1,5 +1,5 @@
-"""File-format sources beyond parquet: CSV and JSON-lines, batch and
-streaming.
+"""File-format sources beyond parquet: CSV and JSON-lines batch scans
+and a streaming JSON-lines reader.
 
 The reference reads only Kafka JSON strings (SURVEY.md §2.1); a user
 migrating onto this engine lands files too. Rules that matter at
@@ -10,7 +10,7 @@ migrating onto this engine lands files too. Rules that matter at
   * JSON/CSV are ingestion formats, not working formats: read once,
     write parquet (columnar, splittable, pushdown-able) and run the
     engine on that — `ingest_to_parquet` is that one-liner;
-  * the streaming variants use maxFilesPerTrigger so a huge backfill
+  * the streaming reader uses maxFilesPerTrigger so a huge backfill
     directory drains in bounded micro-batches instead of one giant
     first batch.
 
@@ -58,26 +58,6 @@ def read_jsonl(
         schema = schema.add("_corrupt_record", "string")
         options = {"columnNameOfCorruptRecord": "_corrupt_record", **options}
     return spark.read.schema(schema).options(mode="PERMISSIVE", **options).json(path)
-
-
-def stream_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str,
-    max_files_per_trigger: int = 16,
-    header: bool = True,
-    **options: str,
-) -> DataFrame:
-    """Streaming CSV directory source, bounded micro-batches."""
-    return (
-        spark.readStream.schema(schema)
-        .options(
-            header=str(header).lower(),
-            maxFilesPerTrigger=str(max_files_per_trigger),
-            **options,
-        )
-        .csv(path)
-    )
 
 
 def stream_jsonl(

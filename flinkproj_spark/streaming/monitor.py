@@ -119,19 +119,13 @@ def stream_source_sketch(docs: DataFrame) -> DataFrame:
     the sketch streams and the exact-Jaccard audit column cannot.
     Run in complete/update mode; downstream, pairwise signature
     agreement is the same 20-row self-join as the batch matrix."""
-    from flinkproj_spark.operators.dedup import (
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_P,
-        _shingles,
-        _words,
-    )
+    from flinkproj_spark.operators.dedup import MINHASH_A, MINHASH_B, MINHASH_P
 
-    words = _words()
+    words = fx.tokenize_ws()
     base = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
     staged = (
         docs.filter(F.size(words) >= 3)
-        .select("source", F.explode(_shingles(words)).alias("sh"))
+        .select("source", F.explode(fx.shingles(words, 3)).alias("sh"))
         .select("source", base.alias("x"))
     )
     return staged.groupBy("source").agg(

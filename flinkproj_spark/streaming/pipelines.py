@@ -124,24 +124,35 @@ def stream_report_with_late_split(
     writes are done. A failure between those writes and the record
     still applies the epoch twice on replay (its late rows and counts)."""
     from flinkproj_spark.sinks import read_buckets, upsert_bucket, upsert_keyed
+    from flinkproj_spark.streaming.warehouse import _fs_and_path
 
     parsed = report_parse(raw_stream)
     # Watermark state must survive query restarts exactly like Spark's
     # own (checkpointed) watermark — persist max event time, and the
-    # last applied epoch, beside the checkpoint dir.
-    wm_file = os.path.join(checkpoint_dir, "_late_split_watermark.json")
+    # last applied epoch, beside the checkpoint, through the Hadoop FS
+    # API so an hdfs:// or file:// checkpoint keeps it on its own file
+    # system.
+    fs, wm_file = _fs_and_path(
+        spark, os.path.join(checkpoint_dir, "_late_split_watermark.json")
+    )
 
     def _load_state() -> dict:
-        try:
-            with open(wm_file) as f:
-                return json.load(f)
-        except (OSError, ValueError):
+        if not fs.exists(wm_file):
             return {}
+        stream = fs.open(wm_file)
+        try:
+            return json.loads(stream.readAllBytes())
+        except ValueError:
+            return {}
+        finally:
+            stream.close()
 
     def _store_state(max_ts: str, epoch_id: int) -> None:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        with open(wm_file, "w") as f:
-            json.dump({"max_ts": max_ts, "epoch": epoch_id}, f)
+        out = fs.create(wm_file, True)
+        try:
+            out.write(json.dumps({"max_ts": max_ts, "epoch": epoch_id}).encode())
+        finally:
+            out.close()
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         state = _load_state()
@@ -178,10 +189,3 @@ def stream_report_with_late_split(
         .start()
     )
 
-
-def make_json_stream_from_events(spark: SparkSession, src_dir: str, schema_dir: str | None = None) -> DataFrame:
-    """File-source streaming DataFrame of auditLog-style JSON lines
-    fabricated from the events table (batch-written by tests)."""
-    return (
-        spark.readStream.schema("value string").format("text").load(src_dir)
-    )

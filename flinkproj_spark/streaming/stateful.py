@@ -485,7 +485,6 @@ def stream_twap(events: DataFrame) -> DataFrame:
 
 FUNNEL_OUTPUT_SCHEMA = "user_id long, stage int, ts timestamp"
 FUNNEL_STATE_SCHEMA = "t1 long, t2 long, t3 long"
-_FUNNEL_STAGES = ("view", "click", "purchase")
 
 
 def _funnel_for_key(

@@ -189,3 +189,46 @@ def test_plan_lint_whitelist_is_live():
     for k, flags in WHITELIST.items():
         assert k in keys, f"whitelisted key {k} not in registry"
         assert set(flags) <= known_flags, (k, flags)
+
+
+def test_every_engine_definition_is_referenced():
+    """Dead-code guard: every non-dunder top-level name the engine
+    defines (a function, class or assigned name in flinkproj_spark/)
+    is referenced — as a name, an attribute or an import — somewhere in
+    flinkproj_spark/, tools/, deploy/, bench.py or tests/. A name that
+    only its own definition mentions is unreached code: delete it."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    engine = root / "flinkproj_spark"
+    files = [root / "bench.py"] + [
+        p for d in ("flinkproj_spark", "tools", "deploy", "tests")
+        for p in sorted((root / d).rglob("*.py"))
+    ]
+    used: set[str] = set()
+    defined: dict[str, str] = {}
+    for path in files:
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.name.rsplit(".", 1)[-1])
+        if not path.is_relative_to(engine):
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+            else:
+                continue
+            for name in names:
+                if not (name.startswith("__") and name.endswith("__")):
+                    defined[name] = f"{path.relative_to(root)}:{node.lineno}"
+    dead = sorted(f"{where} {name}" for name, where in defined.items() if name not in used)
+    assert not dead, "unreferenced engine definitions:\n" + "\n".join(dead)

@@ -1175,21 +1175,19 @@ def test_semdedup_greedy_resurrects_planted_chain(spark, tmp_path):
     spark.catalog.clearCache()
 
 
-def test_greedy_keep_chain_semantics(spark):
+def test_greedy_keep_chain_semantics():
     """Exact greedy on a planted chain 1-2-3-4 plus an isolated pair
     (5,6): keep 1, drop 2, resurrect 3, drop 4; keep 5, drop 6 —
-    the textbook sequential kept-set the frontier loop must replay."""
-    from flinkproj_spark.functions import cache_scope
-    from flinkproj_spark.operators.similarity import _greedy_keep_from_edges
+    the textbook sequential kept-set semdedup_greedy_keep's per-cell
+    grouped map must replay."""
+    import pandas as pd
 
-    verts = spark.createDataFrame([(i,) for i in range(1, 7)], "vec_id long")
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (5, 6)], "va long, vb long"
-    )
-    with cache_scope() as scope:
-        kept_df = _greedy_keep_from_edges(scope, scope.hold(verts), scope.hold(edges))
-        kept = sorted(r.vec_id for r in kept_df.collect())
-    assert kept == [1, 3, 5]
+    from flinkproj_spark.operators.similarity import _greedy_keep_cell
+
+    edges = pd.DataFrame({"va": [1, 2, 3, 5], "vb": [2, 3, 4, 6]})
+    out = _greedy_keep_cell(edges)
+    assert list(out["vec_id"]) == [1, 2, 3, 4, 5, 6]
+    assert sorted(out.loc[out["is_kept"] == 1, "vec_id"]) == [1, 3, 5]
 
 
 def test_bpe_learn_merges_invariants(spark, sf_dir):
@@ -1635,16 +1633,13 @@ def test_vocab_prune_sweep_matches_bruteforce_topn(spark, sf_dir):
     """The histogram formulation must equal the naive 'sort the vocab,
     take top N' computation — covered tokens, kept types, and the
     marginal word's frequency, for every swept budget."""
-    from flinkproj_spark.operators.text import (
-        _PRUNE_SIZES,
-        _words,
-        vocab_prune_sweep,
-    )
+    from flinkproj_spark import functions as fx
+    from flinkproj_spark.operators.text import _PRUNE_SIZES, vocab_prune_sweep
 
     wc: dict[str, int] = {}
     tok = (
         load_table(spark, sf_dir, "documents")
-        .select(F.explode(_words()).alias("w"))
+        .select(F.explode(fx.tokenize_ws()).alias("w"))
         .select(F.lower("w").alias("w"))
     )
     for r in tok.collect():
@@ -1728,22 +1723,21 @@ def test_source_minhash_sketch_is_mergeable(spark, sf_dir):
     signatures from raw shingle hashes in Python and pin both the
     per-source sketches and the merge identity; cross-check the
     reported signature agreement."""
+    from flinkproj_spark import functions as fx
     from flinkproj_spark.operators.dedup import (
         MINHASH_A,
         MINHASH_B,
         MINHASH_P,
         N_HASHES,
-        _shingles,
-        _words,
         source_jaccard_matrix,
     )
     import hashlib
 
     docs = load_table(spark, sf_dir, "documents")
-    words = _words()
+    words = fx.tokenize_ws()
     rows = (
         docs.filter(F.size(words) >= 3)
-        .select("source", F.explode(_shingles(words)).alias("sh"))
+        .select("source", F.explode(fx.shingles(words, 3)).alias("sh"))
         .distinct()
         .collect()
     )
@@ -1821,10 +1815,10 @@ def test_hard_negatives_are_wrong_label_and_score_consistent(spark, sf_dir):
     rank contiguously per query, score identically to the brute-force
     cosine for the same pair, and the positive baseline must equal
     the max same-label cosine."""
+    from flinkproj_spark import functions as fx
     from flinkproj_spark.operators.similarity import (
         N_QUERIES,
         TOP_K,
-        _dot,
         _quantized,
         hard_negative_mining,
     )
@@ -1843,7 +1837,7 @@ def test_hard_negatives_are_wrong_label_and_score_consistent(spark, sf_dir):
         .select(
             "query_id", "vec_id", "label", "qlabel",
             F.round(
-                _dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")),
+                fx.dot("q", "qv").cast("double") / (F.col("norm") * F.col("qnorm")),
                 6,
             ).alias("cos"),
         )

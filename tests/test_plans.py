@@ -481,6 +481,23 @@ def test_upsert_keyed_bucket_ignores_session_time_zone(spark, tmp_path):
         "kb=201803110230", "kb=201811040130"]
 
 
+def test_upsert_keyed_leaves_session_overwrite_mode_static(spark, tmp_path):
+    """upsert_keyed overwrites partitions dynamically on its own writer
+    only: a later plain overwrite in the same session still replaces
+    the whole directory."""
+    from flinkproj_spark.sinks import upsert_keyed, write_partitioned
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(conf)
+    upsert_keyed(_report_rows(spark, [("2018-01-01 10:00:05", 1)]),
+                 str(tmp_path / "upsert"))
+    assert spark.conf.get(conf).upper() == "STATIC"
+    out = str(tmp_path / "by_k")
+    write_partitioned(spark.createDataFrame([("x", 1)], "k string, v int"), out, "k")
+    write_partitioned(spark.createDataFrame([("y", 2)], "k string, v int"), out, "k")
+    assert sorted(d for d in os.listdir(out) if d.startswith("k=")) == ["k=y"]
+
+
 def test_global_topk_is_heap_not_full_sort(spark, sf_dir):
     from flinkproj_spark.operators.relational import global_topk
 
@@ -1394,8 +1411,8 @@ def test_semdedup_assignment_corpus_side_never_shuffles(spark, sf_dir):
     # a groupBy(vec_id); now the only hash exchange is on `grp` inside
     # the k-row (√N) codebook build, and no exchange is keyed on
     # vec_id. Pair generation's SMJ lives in semdedup_cells, not here.
-    from flinkproj_spark.operators.similarity import semdedup_assignments
+    from flinkproj_spark.operators.similarity import _quantized, _with_cells
 
-    plan = _plan(semdedup_assignments(spark, sf_dir))
+    plan = _plan(_with_cells(_quantized(spark, sf_dir)).select("vec_id", "cell"))
     assert "hashpartitioning(vec_id" not in plan, plan
     assert "SortMergeJoin" not in plan, plan

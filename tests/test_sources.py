@@ -101,6 +101,16 @@ def test_stream_jsonl_drains_to_batch_result(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == ev.count()
 
 
+def test_rate_generators_are_json_line_streams(spark):
+    """The two rate-source producers build streaming frames of one
+    string `value` column (the JSON line); no query is started."""
+    from flinkproj_spark.sources.generators import alldata_stream, auditlog_stream
+
+    for df in (alldata_stream(spark), auditlog_stream(spark)):
+        assert df.isStreaming
+        assert df.dtypes == [("value", "string")]
+
+
 def test_orc_roundtrip_matches_parquet(spark, sf_dir, tmp_path):
     from flinkproj_spark.sources.files import read_orc, stream_orc, write_orc
 

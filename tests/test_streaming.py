@@ -110,15 +110,37 @@ class TestStreamReport:
         assert "black" not in res_types  # late record kept out of results
 
 
-    def _run_late_split(self, spark, tmp_path, files):
-        """Each (name, lines) file is its own trigger, in order."""
+    # a window over two triggers, then a late row in the second trigger
+    _REPLAY_FILES = [("b0", [_audit("2018-01-01 10:10:05")]),
+                     ("b1", [_audit("2018-01-01 10:10:10"),
+                             _audit("2018-01-01 10:00:00", typ="black")])]
+
+    def _run_late_split(self, spark, tmp_path, files, ckpt_scheme=""):
+        """Each (name, lines) file is its own trigger, in order. The
+        checkpoint is passed as `ckpt_scheme` + its local path."""
         src, res, late, ckpt = (str(tmp_path / d) for d in ("src", "res", "late", "ckpt"))
         for i, (name, lines) in enumerate(files):
             _write_lines(spark, src, lines, name)
             os.utime(os.path.join(src, f"{name}.txt"), (1_000_000 + i, 1_000_000 + i))
         raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
-        stream_report_with_late_split(spark, raw, res, late, ckpt).awaitTermination(120)
+        stream_report_with_late_split(
+            spark, raw, res, late, ckpt_scheme + ckpt).awaitTermination(120)
         return src, res, late, ckpt
+
+    def _snapshot(self, spark, res, late):
+        return (sorted(map(tuple, spark.read.parquet(res).drop("kb").collect())),
+                sorted(r.value for r in spark.read.text(late).collect()))
+
+    def _replay_last_epoch(self, spark, src, res, late, ckpt, ckpt_scheme=""):
+        """Delete the last commit (and its .crc) and restart the query:
+        Spark re-runs that epoch. Returns the re-run batch ids."""
+        last = max(int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit())
+        for name in (str(last), f".{last}.crc"):
+            os.remove(os.path.join(ckpt, "commits", name))
+        raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
+        q = stream_report_with_late_split(spark, raw, res, late, ckpt_scheme + ckpt)
+        q.awaitTermination(120)
+        return last, [json.loads(p.json)["batchId"] for p in q.recentProgress]
 
     def test_late_split_window_over_two_triggers_converges(self, spark, tmp_path):
         """A window whose rows arrive over two triggers gets the batch
@@ -138,27 +160,35 @@ class TestStreamReport:
         """Losing the last commit makes Spark re-run that epoch on
         restart; the recorded epoch id keeps the re-run from counting
         its rows (or writing its late rows) a second time."""
-        files = [("b0", [_audit("2018-01-01 10:10:05")]),
-                 ("b1", [_audit("2018-01-01 10:10:10"), _audit("2018-01-01 10:00:00", typ="black")])]
-        src, res, late, ckpt = self._run_late_split(spark, tmp_path, files)
-
-        def snapshot():
-            return (sorted(map(tuple, spark.read.parquet(res).drop("kb").collect())),
-                    sorted(r.value for r in spark.read.text(late).collect()))
-
-        before = snapshot()
+        src, res, late, ckpt = self._run_late_split(spark, tmp_path, self._REPLAY_FILES)
+        before = self._snapshot(spark, res, late)
         assert ("2018-01-01 10:10:10", "shelf", "AREA_US", 2,
                 "2018-01-01_10:10:10-shelf-AREA_US") in before[0]
         assert len(before[1]) == 1
-        last = max(int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit())
-        for name in (str(last), f".{last}.crc"):
-            os.remove(os.path.join(ckpt, "commits", name))
-        raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
-        q = stream_report_with_late_split(spark, raw, res, late, ckpt)
-        q.awaitTermination(120)
+        last, rerun = self._replay_last_epoch(spark, src, res, late, ckpt)
         # the epoch did re-run (its rows unread, so numInputRows is 0)
-        assert [json.loads(p.json)["batchId"] for p in q.recentProgress] == [last]
-        assert snapshot() == before
+        assert rerun == [last]
+        assert self._snapshot(spark, res, late) == before
+
+    def test_late_split_state_stays_on_a_file_uri_checkpoint(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A `file://` checkpoint keeps the watermark and replay-guard
+        state in the checkpoint directory, on the checkpoint's file
+        system, not in a `file:` directory under the process's working
+        directory; a replayed epoch after the restart is still a no-op."""
+        monkeypatch.chdir(tmp_path)
+        src, res, late, ckpt = self._run_late_split(
+            spark, tmp_path, self._REPLAY_FILES, "file://")
+        state = os.path.join(ckpt, "_late_split_watermark.json")
+        with open(state) as f:
+            assert json.load(f)["max_ts"] == "2018-01-01 10:10:10.000000"
+        assert not os.path.exists(tmp_path / "file:")
+        before = self._snapshot(spark, res, late)
+        last, rerun = self._replay_last_epoch(spark, src, res, late, ckpt, "file://")
+        assert rerun == [last]
+        assert self._snapshot(spark, res, late) == before
+        assert not os.path.exists(tmp_path / "file:")
 
 
 class TestStreamClean:

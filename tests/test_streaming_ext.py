@@ -883,13 +883,12 @@ class TestStreamSourceSketch:
         merge state."""
         import pyspark.sql.functions as F
 
+        from flinkproj_spark import functions as fx
         from flinkproj_spark.operators.dedup import (
             MINHASH_A,
             MINHASH_B,
             MINHASH_P,
             N_HASHES,
-            _shingles,
-            _words,
         )
         from flinkproj_spark.sources.tables import load_table
         from flinkproj_spark.streaming.monitor import stream_source_sketch
@@ -919,12 +918,12 @@ class TestStreamSourceSketch:
             r.source: tuple(r[f"s{i}"] for i in range(N_HASHES))
             for r in spark.sql("select * from source_sketch").collect()
         }
-        words = _words()
+        words = fx.tokenize_ws()
         base = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
         want = {
             r.source: tuple(r[f"s{i}"] for i in range(N_HASHES))
             for r in docs.filter(F.size(words) >= 3)
-            .select("source", F.explode(_shingles(words)).alias("sh"))
+            .select("source", F.explode(fx.shingles(words, 3)).alias("sh"))
             .select("source", base.alias("x"))
             .groupBy("source")
             .agg(
