@@ -41,9 +41,21 @@ class CacheScope:
         stages no cross-task fill lock, so each of the k subtrees
         recomputes the partitions — measured r13: pair_strategy_agreement
         at x10 ran 135.7 s against a ~50 s stage sum)."""
+        df = self._persist(df)
+        df.count()
+        return df
+
+    def hold_values(self, df: DataFrame, col: str) -> tuple[DataFrame, list]:
+        """`hold`, but the job that fills df also returns the distinct
+        values of col: a scan of a held frame builds every column of
+        every partition, so listing col costs no second job (and, in a
+        micro-batch, no second run of the stateful plan)."""
+        df = self._persist(df)
+        return df, [r[0] for r in df.select(col).distinct().collect()]
+
+    def _persist(self, df: DataFrame) -> DataFrame:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         self._held.append(df)
-        df.count()
         return df
 
     def release(self, df: DataFrame) -> None:

@@ -71,6 +71,19 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        # Checkpoint files (offset/commit logs, state commits) through the
+        # FileSystem API. The default FileContext manager resolves
+        # symlinks on every rename, and without the native Hadoop library
+        # the local file system forks a `readlink` for that: a 9-trigger
+        # report stream forked 808 of them on a 4-core host, and its
+        # offset-log commits took 31-52 ms against 7-24 ms here. These
+        # sessions are local, where FileSystem.rename is a POSIX rename:
+        # atomic, and it replaces the target. HDFS rename does not replace
+        # an existing target, so the cluster jobs (deploy/) keep Spark's
+        # default manager.
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -22,7 +22,7 @@ Spark-native equivalents here:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkproj_spark.functions import cache_scope
@@ -73,36 +73,44 @@ def upsert_keyed(batch: DataFrame, result_dir: str, key: str = "doc_id") -> None
     MERGE). Re-writing the same keys converges to one value — the
     reference's ES doc-id semantics (K3).
 
-    A rewritten bucket carries batch rows PLUS the surviving stored
-    rows of that bucket (anti-joined on the key): overwriting with
+    A rewritten bucket carries the batch rows PLUS the stored rows of
+    that bucket whose key the batch does not carry: overwriting with
     batch rows alone would silently delete every previously-upserted
-    key that shares a bucket with any batch key. The survivor read
-    opens only the touched buckets. For the report's doc ids those are
-    event-time minutes, and under the watermark a trigger touches the
-    newest one or two, so the read, its localCheckpoint (which truncates
-    the lineage so Spark permits writing the path it was read from) and
-    the write are bounded by the batch however long the result grows.
-    At 100 TB swap this store for Delta/Iceberg MERGE INTO and keep the
-    call sites.
+    key that shares a bucket with any batch key. For the report's doc
+    ids the buckets are event-time minutes, and under the watermark a
+    trigger touches the newest one or two, so the call is bounded by
+    the batch however long the result grows. At 100 TB swap this store
+    for Delta/Iceberg MERGE INTO and keep the call sites.
 
-    The batch is held in a cache scope, so a streaming micro-batch's
-    plan runs ONCE per call: its bucket list, survivor anti join and
-    write all read the cache, where each action on the bare batch would
-    re-run the stateful plan and count its watermark drops again."""
-    spark_b = batch.sparkSession
+    Two Spark jobs per call (inside foreachBatch, where Structured
+    Streaming turns adaptive execution off, so an exchange is a stage
+    and not a job of its own):
+      1. `hold_values` runs the batch's plan once: the one action fills
+         the held cache and lists the touched buckets, so a streaming
+         micro-batch's stateful plan runs, and counts its watermark
+         drops, once per call;
+      2. the write reads the held batch and the stored rows of the
+         touched buckets, shuffles both by bucket — one task then sees
+         a whole bucket, keeps per key the batch's rows if it has any
+         and the stored ones otherwise, and writes the bucket as one
+         file. The job reads the directories it overwrites; dynamic
+         overwrite commits them only after every task has read."""
     with cache_scope() as scope:
-        staged = scope.hold(batch.withColumn("kb", upsert_bucket(key)))
-        # one job; a trigger touches a bounded number of buckets
-        touched = [r.kb for r in staged.select("kb").distinct().collect()]
+        staged, touched = scope.hold_values(batch.withColumn("kb", upsert_bucket(key)), "kb")
         if not touched:
             return
-        existing = read_buckets(spark_b, result_dir, touched, staged.schema)
+        rows = staged.withColumn("_new", F.lit(True))
+        existing = read_buckets(batch.sparkSession, result_dir, touched, staged.schema)
         if existing is not None:
-            survivors = existing.join(staged.select(key).distinct(), key, "left_anti")
-            staged = staged.unionByName(survivors.localCheckpoint(eager=True))
+            rows = rows.unionByName(existing.withColumn("_new", F.lit(False)))
+        # a null key replaces nothing, as in SQL equality
+        keep = (F.col("_new") | ~F.max("_new").over(Window.partitionBy("kb", key))
+                | F.col(key).isNull())
+        # the window reuses this shuffle: its key groups lie inside one bucket
+        rows = rows.repartition(len(touched), "kb").withColumn("_keep", keep)
         # dynamic on this writer only: a session-wide setting would turn
         # every later overwrite in the session into a partition merge
-        staged.write.mode("overwrite").option(
+        rows.filter("_keep").drop("_new", "_keep").write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("kb").parquet(result_dir)
 

@@ -174,8 +174,9 @@ def stream_report_with_late_split(
             wm = F.to_timestamp(F.lit(cur)) - F.expr(f"INTERVAL {WATERMARK}")
             on_time, late = report_late_split(batch, wm)
             late.write.mode("append").text(late_dir)
-            partial = scope.hold(report_aggregate(on_time).withColumn("kb", upsert_bucket()))
-            touched = [r.kb for r in partial.select("kb").distinct().collect()]
+            partial, touched = scope.hold_values(
+                report_aggregate(on_time).withColumn("kb", upsert_bucket()), "kb"
+            )
             if touched:
                 stored = read_buckets(spark, result_dir, touched, partial.schema)
                 merged = partial.drop("kb") if stored is None else report_merge(partial, stored)

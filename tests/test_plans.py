@@ -498,6 +498,78 @@ def test_upsert_keyed_leaves_session_overwrite_mode_static(spark, tmp_path):
     assert sorted(d for d in os.listdir(out) if d.startswith("k=")) == ["k=y"]
 
 
+def _micro_batch_session(spark):
+    """A session shaped like the one foreachBatch hands its batch:
+    Structured Streaming runs micro-batches with adaptive execution off,
+    so an exchange is a stage of its job, not a job of its own."""
+    session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.enabled", "false")
+    return session
+
+
+def _report_batch(session, rows):
+    """Report rows spread over four partitions, so a minute's rows sit
+    in several tasks of the batch."""
+    return _report_rows(session, rows).repartition(4)
+
+
+def test_upsert_keyed_two_jobs_one_file_per_touched_minute(spark, tmp_path):
+    """Upserting into an existing store is two jobs — fill the batch
+    cache and list its minutes; merge and write — and each rewritten
+    minute directory holds one parquet file."""
+    from flinkproj_spark.sinks import upsert_keyed
+
+    session = _micro_batch_session(spark)
+    out = str(tmp_path / "upsert")
+    upsert_keyed(_report_batch(session, [("2018-01-01 10:00:05", 1), ("2018-01-01 10:00:40", 1),
+                                         ("2018-01-01 10:01:05", 1), ("2018-01-01 10:01:40", 1),
+                                         ("2018-01-01 10:02:05", 1)]), out)
+    before = _minute_files(out)
+    batch = _report_batch(session, [("2018-01-01 10:00:40", 2), ("2018-01-01 10:00:50", 1),
+                                    ("2018-01-01 10:01:05", 2), ("2018-01-01 10:01:50", 1)])
+    sc = spark.sparkContext
+    sc.setJobGroup("upsert_two_jobs", "upsert into an existing store")
+    try:
+        upsert_keyed(batch, out)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("upsert_two_jobs")) == 2
+    after = _minute_files(out)
+    for minute in ("kb=201801011000", "kb=201801011001"):
+        assert len([f for f in after[minute] if f.endswith(".parquet")]) == 1
+    assert after["kb=201801011002"] == before["kb=201801011002"]
+    assert spark.read.parquet(out).count() == 7
+
+
+def test_upsert_keyed_three_upserts_into_one_minute(spark, tmp_path):
+    """Three upserts into one minute, with the stored rows read and
+    overwritten by the same job (no checkpoint of them in between): a
+    re-sent key is replaced, the keys sharing its minute survive, the
+    untouched minute keeps its files, and no persisted RDD is left.
+    A batch that carries one key twice stores both rows, as the
+    anti-join merge did: the sink replaces keys, it does not dedupe a
+    batch."""
+    from flinkproj_spark.sinks import upsert_keyed
+
+    session = _micro_batch_session(spark)
+    out = str(tmp_path / "upsert")
+    cached = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    upsert_keyed(_report_batch(session, [("2018-01-01 10:00:05", 1), ("2018-01-01 10:00:40", 1),
+                                         ("2018-01-01 10:01:05", 1)]), out)
+    untouched = _minute_files(out)["kb=201801011001"]
+    upsert_keyed(_report_batch(session, [("2018-01-01 10:00:40", 2)]), out)
+    upsert_keyed(_report_batch(session, [("2018-01-01 10:00:05", 3),
+                                         ("2018-01-01 10:00:05", 4)]), out)
+
+    rows = sorted((r.doc_id, r["count"]) for r in spark.read.parquet(out).collect())
+    assert rows == [("2018-01-01_10:00:05-shelf-AREA_US", 3),
+                    ("2018-01-01_10:00:05-shelf-AREA_US", 4),
+                    ("2018-01-01_10:00:40-shelf-AREA_US", 2),
+                    ("2018-01-01_10:01:05-shelf-AREA_US", 1)]
+    assert _minute_files(out)["kb=201801011001"] == untouched
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == cached
+
+
 def test_global_topk_is_heap_not_full_sort(spark, sf_dir):
     from flinkproj_spark.operators.relational import global_topk
 

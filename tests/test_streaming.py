@@ -94,6 +94,32 @@ class TestStreamReport:
         }
         assert dropped == {0: 0, 1: 0, 2: k}
 
+    def test_checkpoint_leaves_no_temp_file_and_restart_resumes(self, spark, tmp_path):
+        """build_session writes checkpoint files through the FileSystem
+        API: each log and state file is renamed into place, so no
+        temp file is left, and a query restarted on the checkpoint
+        resumes at the next batch id."""
+        assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass").endswith(
+            ".FileSystemBasedCheckpointFileManager")
+        src, res, late, ckpt = (str(tmp_path / d) for d in ("src", "res", "late", "ckpt"))
+
+        def run(names):
+            for name in names:
+                _write_lines(spark, src, [_audit(f"2018-01-01 10:0{name[1]}:05")], name)
+                os.utime(os.path.join(src, f"{name}.txt"), (1_000_000 + int(name[1]),) * 2)
+            raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
+            q = stream_report(spark, raw, res, late, ckpt)
+            q.awaitTermination(120)
+            return [json.loads(p.json)["batchId"] for p in q.recentProgress]
+
+        first = run(["b0", "b1"])  # two data batches, then a no-data one
+        assert [f for _, _, fs in os.walk(ckpt) for f in fs if ".tmp" in f] == []
+        committed = max(int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit())
+        assert committed == max(first)
+        assert run(["b2"])[0] == committed + 1
+        assert {r.doc_id for r in spark.read.parquet(res).collect()} == {
+            f"2018-01-01_10:0{m}:05-shelf-AREA_US" for m in range(3)}
+
     def test_late_split_side_output(self, spark, tmp_path):
         src, res, late, ckpt = (str(tmp_path / d) for d in ("src", "res", "late", "ckpt"))
         _write_lines(spark, src, [_audit("2018-01-01 10:10:00")], "b0")
