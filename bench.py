@@ -46,7 +46,8 @@ def warm_up(spark, sf_dir: str) -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
     # Warm the parquet reader + FS classes with a 1-row peek per table
     # (footer read only) — otherwise whichever query runs first absorbs
-    # one-time class-loading that isn't part of its plan.
+    # one-time class-loading that isn't part of its plan. The peek also
+    # fills load_table's schema memo, so no key pays a table's inference.
     for t in TABLES:
         try:
             load_table(spark, sf_dir, t).limit(1).collect()

@@ -10,9 +10,11 @@ DataReport.java:88 read raw JSON strings record-at-a-time).
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, TimestampNTZType
 
 TABLES = (
     "region",
@@ -29,13 +31,17 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Per session: {(absolute path, st_mtime_ns, st_size): inferred StructType}.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def fan_out(spark: SparkSession, sf_dir: str, name: str, df: DataFrame) -> DataFrame:
     """Opt-in scan redistribution for operators whose MAP side is the hot
     path (per-row JSON round-trips, shingling, Arrow UDF batches).
 
     The driver corpus writes each table as ONE parquet row group, which
     Spark cannot split — so a scan arrives as a single populated split
-    and the whole map side runs on one core of local[32]. The split
+    and the whole map side runs on one of the session's cores. The split
     count is predicted from the file size (driver-side, free — calling
     .rdd.getNumPartitions() here would compile the plan and cost ~0.1 s
     per call) and the exchange is added only when the scan is
@@ -64,6 +70,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one corpus table. Plain parquet scan — Catalyst prunes
     columns and pushes filters into it from whatever plan sits on top.
 
+    The parquet schema is inferred once per (session, absolute path,
+    file (st_mtime_ns, st_size)) and every later call reads with it:
+    inference is a Spark job, a schema-given read starts none, and a
+    rewritten file is inferred again. The schema is memoized, not the
+    DataFrame — each call builds a fresh relation, so two loads of one
+    table keep distinct attribute ids and self-joins resolve. A path
+    os.stat cannot see (file://, hdfs://) is inferred on every call.
+
     Corpus timestamp columns have appeared in two physical encodings
     across driver revisions: parquet TIMESTAMP(NANOS) (no native Spark
     type; nanosAsLong surfaces int64, normalized below) and naive
@@ -81,10 +95,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # no matter the host timezone. Must be set BEFORE the cast below so
     # ntz -> ltz is an identity on the underlying micros.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+        key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = None
+    memo = _SCHEMAS.setdefault(spark, {})
+    schema = memo.get(key) or spark.read.parquet(path).schema
+    if key is not None:
+        memo[key] = schema
+    df = spark.read.schema(schema).parquet(path)
+    types = {f.name: f.dataType for f in schema}
+    if name == "events" and isinstance(types.get("ts"), LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
+    ntz_cols = [c for c, t in types.items() if isinstance(t, TimestampNTZType)]
     if ntz_cols:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
     return df

@@ -232,3 +232,40 @@ def test_every_engine_definition_is_referenced():
                     defined[name] = f"{path.relative_to(root)}:{node.lineno}"
     dead = sorted(f"{where} {name}" for name, where in defined.items() if name not in used)
     assert not dead, "unreferenced engine definitions:\n" + "\n".join(dead)
+
+
+def test_only_the_table_loader_reads_corpus_files():
+    """Every corpus read goes through load_table and its schema memo:
+    no engine module but sources/tables.py builds a table path under an
+    sf_dir — os.path.join(sf_dir, f"{name}.parquet") or an f-string
+    that opens with {sf_dir} and ends in .parquet. An SQL string that
+    only embeds such a path (the DuckDB oracle views) is not a path."""
+    import ast
+    from pathlib import Path
+
+    def is_sf_dir(node):
+        return (isinstance(node, ast.Name) and node.id == "sf_dir") or (
+            isinstance(node, ast.Attribute) and node.attr == "sf_dir")
+
+    def ends_parquet(node):
+        last = node.values[-1] if isinstance(node, ast.JoinedStr) and node.values else node
+        return isinstance(last, ast.Constant) and str(last.value).endswith(".parquet")
+
+    def is_table_path(node):
+        if isinstance(node, ast.Call) and ast.unparse(node.func) == "os.path.join":
+            return bool(node.args) and is_sf_dir(node.args[0]) and ends_parquet(node.args[-1])
+        return (isinstance(node, ast.JoinedStr) and len(node.values) > 1
+                and isinstance(node.values[0], ast.FormattedValue)
+                and is_sf_dir(node.values[0].value) and ends_parquet(node))
+
+    root = Path(__file__).resolve().parent.parent
+    readers = {
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted((root / "flinkproj_spark").rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if is_table_path(node)
+    }
+    loader = {r for r in readers if r.startswith("flinkproj_spark/sources/tables.py:")}
+    assert loader, "the scan no longer finds load_table's own read"
+    assert readers == loader, "corpus reads outside load_table:\n" + "\n".join(
+        sorted(readers - loader))

@@ -406,3 +406,74 @@ def test_write_compacted_files_executes_the_plan(spark, sf_dir, tmp_path):
         assert g.n_rows == p.n_rows
         assert (g.first_day, g.last_day) == (p.first_day, p.last_day)
     assert back.count() == load_table(spark, sf_dir, "events").count()
+
+
+def test_repeat_load_starts_no_job(spark, sf_dir):
+    """The first load of a table infers its schema (a Spark job); a
+    repeat load reads with the memoized schema and starts none."""
+    load_table(spark, sf_dir, "lineitem")
+    sc = spark.sparkContext
+    sc.setJobGroup("repeat_load", "second load of one table")
+    try:
+        load_table(spark, sf_dir, "lineitem")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup("repeat_load") == []
+
+
+def test_two_loads_of_one_table_self_join(spark, sf_dir):
+    """Each load is a fresh relation with its own attribute ids, so a
+    self-join on two loads resolves both sides' columns."""
+    a = load_table(spark, sf_dir, "orders")
+    b = load_table(spark, sf_dir, "orders")
+    joined = a.join(b, a.o_orderkey == b.o_orderkey).select(a.o_custkey, b.o_custkey)
+    assert joined.count() == a.count()
+
+
+def test_rewritten_table_is_inferred_again(spark, tmp_path):
+    """A table rewritten with a new schema (new mtime) loads with its
+    new columns, not the memoized ones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"],
+                             "r_comment": ["x", "y"]}), path)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    again = load_table(spark, str(tmp_path), "region")
+    assert again.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(r.r_comment for r in again.collect()) == ["x", "y"]
+
+
+def test_naive_timestamp_loads_as_timestamp_on_repeat(spark, tmp_path):
+    """A naive timestamp[us] column (parquet isAdjustedToUTC=false,
+    inferred TIMESTAMP_NTZ) loads as timestamp with its epoch micros
+    unchanged, on the inferring call and on the memoized one."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    micros = [0, 1_500_000_123_456, 1_704_067_207_179_575]
+    ts = [datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=m) for m in micros]
+    pq.write_table(pa.table({"o_orderkey": [1, 2, 3],
+                             "o_orderdate": pa.array(ts, pa.timestamp("us"))}),
+                   str(tmp_path / "orders.parquet"))
+    for _ in range(2):
+        df = load_table(spark, str(tmp_path), "orders")
+        assert dict(df.dtypes)["o_orderdate"] == "timestamp"
+        got = df.orderBy("o_orderkey").select(F.unix_micros("o_orderdate")).collect()
+        assert [r[0] for r in got] == micros
+
+
+def test_file_uri_load_matches_plain_path(spark, sf_dir):
+    """An sf_dir os.stat cannot see (a file:// URI) skips the memo and
+    infers on every call; it loads the same rows as the plain path."""
+    for name in ("orders", "events"):
+        plain = load_table(spark, sf_dir, name)
+        uri = load_table(spark, "file://" + os.path.abspath(sf_dir), name)
+        assert uri.dtypes == plain.dtypes
+        assert sorted(map(tuple, uri.collect())) == sorted(map(tuple, plain.collect()))
