@@ -8,7 +8,7 @@ core the process may run on.
 With no KEY it times every registered key, prints the full record
     {"metric": ..., "value": total_sec, "unit": "sec",
      "queries": {name: sec, ...}, "build": {name: sec, ...},
-     "sf": ..., "config": {...}}
+     "compiles": {name: count, ...}, "sf": ..., "config": {...}}
 writes it to the timed checkout's BENCH_FULL.json, and ends with ONE
 compact summary line for the driver. With KEYs it times only those and
 prints only the record. `--repo DIR` imports the engine from another
@@ -61,9 +61,11 @@ def warm_up(spark, sf_dir: str) -> None:
 
 def time_keys(
     spark, sf_dir: str, queries: dict[str, Callable], passes: int
-) -> tuple[dict[str, float], dict[str, float]]:
+) -> tuple[dict[str, float], dict[str, float], dict[str, int]]:
     """Per-key minimum over `passes` of (total, build) seconds; -1 for a
-    key that raised on any pass."""
+    key that raised on any pass. The third map is each key's Janino
+    compiles on the last pass: 0 once its generated classes are cached,
+    more for a key whose generated code changes from run to run."""
     # The first pass at each key is still a cold plan (fresh Catalyst
     # analysis + codegen); the minimum rejects host-noise outliers (CPU
     # steal / page-cache stalls measured at 10-15 s on ~0.5 s queries,
@@ -72,8 +74,13 @@ def time_keys(
     # BASELINE.md declares.
     times: dict[str, float] = {}
     build: dict[str, float] = {}
+    compiles: dict[str, int] = {}
+    # JVM-wide count of generated classes Janino has compiled so far
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount
     for _pass in range(passes):
         for name, fn in queries.items():
+            c0 = compiled()
             t0 = time.perf_counter()
             try:
                 df = fn(spark, sf_dir)
@@ -92,7 +99,8 @@ def time_keys(
                 # sweep; each key pays its own materialization, none
                 # inherits another's cache
                 spark.catalog.clearCache()
-    return times, build
+                compiles[name] = compiled() - c0
+    return times, build, compiles
 
 
 def main() -> None:
@@ -127,7 +135,7 @@ def main() -> None:
     spark = build_session("flinkproj_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     warm_up(spark, sf_dir)
-    times, build = time_keys(spark, sf_dir, queries, a.passes)
+    times, build, compiles = time_keys(spark, sf_dir, queries, a.passes)
 
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
@@ -145,6 +153,7 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "build": build,
+        "compiles": compiles,
         "sf": sf,
         "config": config,
     }
@@ -177,6 +186,7 @@ def main() -> None:
         "p95_sec": round(ok[int(len(ok) * 0.95)], 3) if ok else None,
         "max_sec": round(ok[-1], 3) if ok else None,
         "slowest": slowest,
+        "compiles": sum(compiles.values()),
         "queries_full_file": "BENCH_FULL.json",
         "config": config,
     }))

@@ -84,6 +84,17 @@ def build_session(
         .config("spark.sql.streaming.checkpointFileManagerClass",
                 "org.apache.spark.sql.execution.streaming.checkpointing."
                 "FileSystemBasedCheckpointFileManager")
+        # Compiled codegen classes live in one JVM-wide LRU of this many
+        # entries (default 100). The catalog outgrows it: the 18
+        # perfbench catalog_small keys compile ~195 distinct classes and
+        # one bench.py pass over every key at sf0.1 4,159, so with the
+        # default each pass recompiled them all (188 Janino compiles,
+        # ~3 ms each, per catalog_small pass; 6,421 in a full pass 2).
+        # 8192 is the smallest power of two that holds the registry and
+        # a pass of run-to-run drift: at 4096 a full pass 2 still compiled
+        # 2,785, at 8192 337. The report stream's 74 classes fit the
+        # default, so deploy/ keeps it.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -49,12 +49,15 @@ def stream_clean(
 ):
     """Streaming Pipeline 1: per-micro-batch dim reload (S2's 60 s Redis
     poll becomes a reload per batch — strictly fresher) + the shared
-    clean core, parquet sink. Returns the StreamingQuery."""
+    clean core, parquet sink. Each epoch overwrites its own
+    `out_dir/epoch=<id>`, so an epoch replayed after a lost commit
+    replaces its output instead of appending it twice. Returns the
+    StreamingQuery."""
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         dim = dim_loader(batch.sparkSession)
         cleaned = clean_transform(batch, dim)
-        cleaned.write.mode("append").parquet(out_dir)
+        cleaned.write.mode("overwrite").parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
 
     return (
         raw_stream.writeStream.foreachBatch(process)

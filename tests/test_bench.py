@@ -20,17 +20,27 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_build_share_is_within_total(spark, sf_dir):
     key = "window_count"
-    times, build = bench.time_keys(
+    times, build, _ = bench.time_keys(
         spark, sf_dir, {key: registry.queries()[key]}, passes=2
     )
     assert 0 <= build[key] <= times[key]
+
+
+def test_stable_key_compiles_nothing_on_its_second_pass(spark, sf_dir):
+    # the codegen cache holds the key's classes from pass 1
+    key = "tpch_q6"
+    times, _, compiles = bench.time_keys(
+        spark, sf_dir, {key: registry.queries()[key]}, passes=2
+    )
+    assert times[key] >= 0
+    assert compiles == {key: 0}
 
 
 def test_raising_key_records_minus_one_and_the_next_key_runs(spark, sf_dir):
     def boom(spark, sf_dir):
         raise RuntimeError("boom")
 
-    times, build = bench.time_keys(
+    times, build, _ = bench.time_keys(
         spark, sf_dir, {"boom": boom, "after": lambda s, _: s.range(5)}, passes=1
     )
     assert times["boom"] == build["boom"] == -1.0
@@ -40,7 +50,7 @@ def test_raising_key_records_minus_one_and_the_next_key_runs(spark, sf_dir):
 def test_caller_owned_cache_is_dropped_after_its_key(spark, sf_dir):
     key = "semdedup_cells"  # tests/test_cache_scope.py::CALLER_OWNED
     spark.catalog.clearCache()
-    times, _ = bench.time_keys(
+    times, _, _ = bench.time_keys(
         spark, sf_dir, {key: registry.queries()[key]}, passes=1
     )
     assert times[key] >= 0

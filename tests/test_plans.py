@@ -1488,3 +1488,21 @@ def test_semdedup_assignment_corpus_side_never_shuffles(spark, sf_dir):
     plan = _plan(_with_cells(_quantized(spark, sf_dir)).select("vec_id", "cell"))
     assert "hashpartitioning(vec_id" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def test_codegen_cache_outlives_a_pass_of_distinct_plans(spark):
+    """A plan's generated classes survive 300 other plans: the
+    session's codegen cache is sized to the engine's working set, not
+    Spark's 100-entry default that evicts every class before reuse."""
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount
+
+    def run(k):
+        spark.range(3).selectExpr(f"id * 1000 + {k} AS v").collect()
+
+    run(1000)
+    for k in range(2000, 2300):  # differ only in the literal
+        run(k)
+    before = compiled()
+    run(1000)
+    assert compiled() == before

@@ -231,6 +231,34 @@ class TestStreamClean:
         assert recs == [{"type": "s1", "score": 0.3, "level": "A",
                          "area": "AREA_CT", "dt": "2018-01-01 11:11:11"}]
 
+    def test_replayed_epoch_replaces_its_output(self, spark, tmp_path):
+        """Delete the last commit and restart: Spark re-runs that epoch,
+        and the store still equals the replay-free run."""
+        src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+        for i, code in enumerate(("TW", "US")):
+            _write_lines(spark, src, [json.dumps({
+                "dt": f"2018-01-01 11:11:1{i}", "countryCode": code,
+                "data": [{"type": "s1", "score": 0.3, "level": "A"}],
+            })], f"b{i}")
+            os.utime(os.path.join(src, f"b{i}.txt"), (1_000_000 + i, 1_000_000 + i))
+
+        def run():
+            raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
+            q = stream_clean(spark, raw, dim_area, out, ckpt)
+            q.awaitTermination(120)
+            return [json.loads(p.json)["batchId"] for p in q.recentProgress]
+
+        def store():
+            return sorted(map(tuple, spark.read.parquet(out).collect()))
+
+        assert run() == [0, 1]
+        before = store()
+        assert len(before) == 2
+        for name in ("1", ".1.crc"):
+            os.remove(os.path.join(ckpt, "commits", name))
+        assert run() == [1]
+        assert store() == before
+
 
 class TestStatefulSessionize:
     def _feed(self, spark, src, rows, name):
