@@ -16,7 +16,7 @@ import argparse
 import sys
 
 from flinkproj_spark import registry
-from flinkproj_spark.sources.tables import DEFAULT_SF_DIR, TABLES
+from flinkproj_spark.sources.tables import DEFAULT_SF_DIR, register_oracle_views
 
 
 def _cmd_list(args: argparse.Namespace) -> int:
@@ -66,10 +66,7 @@ def _cmd_oracle(args: argparse.Namespace) -> int:
               file=sys.stderr)
         return 2
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
+    register_oracle_views(con, args.sf_dir)
     print(con.execute(sql).fetchdf().to_string(index=False))
     return 0
 

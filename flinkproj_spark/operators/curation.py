@@ -32,7 +32,7 @@ literally in the DuckDB oracles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkproj_spark import functions as fx
@@ -45,7 +45,10 @@ from flinkproj_spark.operators.dedup import (
     _MINHASH_PAIRS_SQL,
     _SHINGLES_SQL,
     _WORDS_SQL,
+    md5_long,
+    minhash_mins,
     minhash_signatures,
+    shingle_hashes,
 )
 from flinkproj_spark.sources.tables import fan_out, load_table
 
@@ -537,6 +540,12 @@ DSIR_SCALE = 1_000_000_000  # ppb fixed point
 DSIR_TARGET_LANG = "en"
 
 
+def dsir_bucket(w: Column | str) -> Column:
+    """A word's DSIR hash bucket: the salted md5 of its lower-cased
+    form, as a long, mod DSIR_BUCKETS."""
+    return md5_long(F.concat(F.lit(DSIR_SALT), F.lower(w))) % DSIR_BUCKETS
+
+
 def _dsir_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared tokenize+hash stage: (doc_id, lang, bk) per token."""
     docs = fan_out(
@@ -546,20 +555,7 @@ def _dsir_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.explode(fx.tokenize_ws()).alias("w0"),
-    ).select(
-        "doc_id",
-        "lang",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(DSIR_SALT), F.lower("w0"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % DSIR_BUCKETS
-        ).alias("bk"),
-    )
+    ).select("doc_id", "lang", dsir_bucket("w0").alias("bk"))
 
 
 def dsir_bucket_model(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1206,22 +1202,10 @@ def minhash_containment_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkproj_spark.operators.dedup import lsh_candidate_pairs
 
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = fx.tokenize_ws()
-    base = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
     sig = (
-        docs.filter(F.size(words) >= 3)
-        .select("doc_id", F.explode(fx.shingles(words, 3)).alias("sh"))
-        .select("doc_id", base.alias("x"))
+        shingle_hashes(docs, "doc_id")
         .groupBy("doc_id")
-        .agg(
-            *[
-                F.min(
-                    (F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MINHASH_P)
-                ).alias(f"s{i}")
-                for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-            ],
-            F.countDistinct("x").alias("sz"),
-        )
+        .agg(*minhash_mins(), F.countDistinct("x").alias("sz"))
         # marker keeps this cached plan from hijacking the shared
         # signature subtree of other minhash keys (CacheManager
         # substitutes logically-equal subtrees — see

@@ -25,7 +25,7 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkproj_spark import functions as fx
@@ -84,26 +84,46 @@ def dedup_keyed_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def md5_long(s: Column | str) -> Column:
+    """The 32-bit base hash of a string: its md5's first 8 hex digits
+    as a long — what every shingle and token hash in the engine is."""
+    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
+
+
+def minhash_perms(x: Column) -> list[Column]:
+    """The N_HASHES affine permutations (A[i]*x + B[i]) mod P of a base
+    hash x — the one definition of the minhash family."""
+    return [
+        (F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_P)
+        for a, b in zip(MINHASH_A, MINHASH_B)
+    ]
+
+
+def minhash_mins() -> list[Column]:
+    """The signature aggregates s0..s{N_HASHES-1}: each permutation's
+    min over a base-hash column `x` (min is associative, so they
+    combine map-side and merge exactly across micro-batches)."""
+    return [F.min(h).alias(f"s{i}") for i, h in enumerate(minhash_perms(F.col("x")))]
+
+
+def shingle_hashes(docs: DataFrame, key: str) -> DataFrame:
+    """(key, x): one row per word 3-shingle of every doc with ≥ 3 words,
+    x the shingle's md5_long — the input of every minhash sketch."""
+    words = fx.tokenize_ws()
+    return (
+        docs.filter(F.size(words) >= 3)
+        .select(key, F.explode(fx.shingles(words, 3)).alias("sh"))
+        .select(key, md5_long("sh").alias("x"))
+    )
+
+
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, s0..s{N_HASHES-1}) minhash signatures: explode shingles
     → ONE codegen'd md5 per shingle → N_HASHES affine permutations as N
     min aggregates in a single map-side-combined groupBy (no 9× row
     blow-up, no per-hash md5). Shared by dedup_minhash_lsh and the
     Jaccard-estimate verifier."""
-    words = fx.tokenize_ws()
-    base = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
-    return (
-        docs.filter(F.size(words) >= 3)
-        .select("doc_id", F.explode(fx.shingles(words, 3)).alias("sh"))
-        .select("doc_id", base.alias("x"))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"s{i}")
-                for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-            ]
-        )
-    )
+    return shingle_hashes(docs, "doc_id").groupBy("doc_id").agg(*minhash_mins())
 
 
 def lsh_candidate_pairs(sig: DataFrame, band_rows: int = BAND_ROWS) -> DataFrame:
@@ -315,8 +335,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy — the nested-HOF formulation re-evaluates the hash array
     # per bit (measured 10s -> ~1s at sf0.1). bit_j(h) = (h div 2^j) % 2.
     tok = docs.select("doc_id", F.explode(words).alias("w")).select(
-        "doc_id",
-        F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long").alias("h"),
+        "doc_id", md5_long("w").alias("h")
     )
     weights = tok.groupBy("doc_id").agg(
         *[
@@ -546,13 +565,9 @@ def pair_strategy_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[
             F.when(
                 n_sh >= 1,
-                F.array_min(
-                    F.transform(
-                        "hs", lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-                    )
-                ),
+                F.array_min(F.transform("hs", lambda h: minhash_perms(h)[i])),
             ).alias(f"s{i}")
-            for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
+            for i in range(N_HASHES)
         ],
         F.when(n_sh >= _WINNOW_W, fps).alias("fps"),
         F.lit(1).alias("_psa"),
@@ -1664,23 +1679,8 @@ def source_jaccard_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # slower at sf0.1 (5.4 s vs 3.7 s warm) than letting the distinct
     # exchange parallelize the downstream work.
     docs = load_table(spark, sf_dir, "documents")
-    words = fx.tokenize_ws()
-    base = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
-    sh = (
-        docs.filter(F.size(words) >= 3)
-        .select("source", F.explode(fx.shingles(words, 3)).alias("sh"))
-        .select("source", base.alias("x"))
-        .distinct()
-    )
-    sigs = sh.groupBy("source").agg(
-        F.count("*").alias("n_shingles"),
-        *[
-            F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MINHASH_P)).alias(
-                f"s{i}"
-            )
-            for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-        ],
-    )
+    sh = shingle_hashes(docs, "source").distinct()
+    sigs = sh.groupBy("source").agg(F.count("*").alias("n_shingles"), *minhash_mins())
     a = sigs.select(
         F.col("source").alias("src_a"),
         F.col("n_shingles").alias("na"),

@@ -11,7 +11,7 @@ Java's shortest-repr double formatting is read back exactly).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkproj_spark import functions as fx
@@ -89,33 +89,36 @@ def pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return report_aggregate(report_parse(raw))
 
 
-def _curate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The funnel's gate stage alone: language-evidence filter →
-    length/quality filter, emitting (doc_id, lang, n_words, _fp). The
-    two filters fuse into the scan (one codegen'd pass) and the
-    map-heavy lang/quality stage is fanned out; the content md5 is
-    projected here — BEFORE any dedup exchange — so document bodies
-    never travel through a shuffle."""
-    from flinkproj_spark.operators.text import _LANG_MARKERS, _LANG_ORDER, _STOPWORDS
+def curate_gate_cond() -> Column:
+    """The curation gate over a `text` column: marker-word evidence for
+    some language, ≥ 20 words, and quality ≥ 0.3, where quality is
+    min(n_words / 100, 1) · (1 − stopword share)."""
+    from flinkproj_spark.operators.text import _STOPWORDS, lang_marker_hits
 
-    docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
     words = fx.tokenize_ws()
     lower = F.transform(words, lambda w: F.lower(w))
     stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    def _hits(markers: list[str]):
-        arr = F.array(*[F.lit(x) for x in markers])
-        return F.size(F.filter(lower, lambda w: F.array_contains(arr, w)))
-
-    marker_hits = F.greatest(*[_hits(_LANG_MARKERS[lang]) for lang in _LANG_ORDER])
+    marker_hits = F.greatest(*lang_marker_hits(lower))
     n_words = F.size(words)
     n_stop = F.size(F.filter(lower, lambda w: F.array_contains(stop_arr, w)))
     quality = (
         F.least(n_words.cast("double") / F.lit(100.0), F.lit(1.0))
         * (F.lit(1.0) - n_stop.cast("double") / n_words.cast("double"))
     )
+    return (marker_hits > 0) & (n_words >= 20) & (quality >= 0.3)
+
+
+def _curate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The funnel's gate stage alone: curate_gate_cond's language-
+    evidence and length/quality filter, emitting (doc_id, lang,
+    n_words, _fp). The filter fuses into the scan (one codegen'd pass)
+    and the map-heavy lang/quality stage is fanned out; the content md5
+    is projected here — BEFORE any dedup exchange — so document bodies
+    never travel through a shuffle."""
+    docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
     return (
-        docs.select("doc_id", "lang", "text", n_words.alias("n_words"))
-        .filter((marker_hits > 0) & (n_words >= 20) & (quality >= 0.3))
+        docs.select("doc_id", "lang", "text", F.size(fx.tokenize_ws()).alias("n_words"))
+        .filter(curate_gate_cond())
         .select("doc_id", "lang", "n_words", F.md5("text").alias("_fp"))
     )
 

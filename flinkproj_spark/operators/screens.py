@@ -6,7 +6,7 @@ round 10 (pure move)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkproj_spark.operators.relational import _cents
@@ -818,6 +818,18 @@ CONF_SALT = "conf0"
 CONF_PCT = 90
 
 
+def srm_variant() -> Column:
+    """A user's experiment variant: the first hex digit of the salted
+    md5 of user_id, below '8' → control, else treatment (50/50)."""
+    return F.when(
+        F.substring(
+            F.md5(F.concat(F.col("user_id").cast("string"), F.lit(SRM_SALT))), 1, 1
+        )
+        < "8",
+        F.lit("control"),
+    ).otherwise(F.lit("treatment"))
+
+
 def srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B experiment health check: deterministic 50/50 hash
     assignment of users to control/treatment, per-variant user/event/
@@ -837,13 +849,6 @@ def srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast 1-row pivot of that same 2-row frame. ppm/chi²
     numerators route through DECIMAL(38,0)."""
     ev = load_table(spark, sf_dir, "events")
-    variant = F.when(
-        F.substring(
-            F.md5(F.concat(F.col("user_id").cast("string"), F.lit(SRM_SALT))), 1, 1
-        )
-        < "8",
-        F.lit("control"),
-    ).otherwise(F.lit("treatment"))
     per_user = (
         ev.groupBy("user_id")
         .agg(
@@ -852,7 +857,7 @@ def srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("event_type") == "purchase", 1).otherwise(0)
             ).alias("n_purch"),
         )
-        .select(variant.alias("variant"), "n_ev", "n_purch")
+        .select(srm_variant().alias("variant"), "n_ev", "n_purch")
     )
     per_var = per_user.groupBy("variant").agg(
         F.count("*").alias("n_users"),

@@ -35,13 +35,16 @@ N_PLANES_NEARDUP = 4   # 16 buckets
 NEARDUP_MIN_COS = 0.25
 
 
-def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        "label",
-        fx.quantize_embedding(F.col("embedding")).alias("q"),
+def quantized_vectors(vecs: DataFrame, *keep: str) -> DataFrame:
+    """The keep columns of a frame with an `embedding` column, plus its
+    quantized vector `q` and that vector's L2 `norm`."""
+    return vecs.select(
+        *keep, fx.quantize_embedding(F.col("embedding")).alias("q")
     ).withColumn("norm", F.sqrt(fx.dot("q", "q").cast("double")))
+
+
+def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return quantized_vectors(load_table(spark, sf_dir, "embeddings"), "vec_id", "label")
 
 
 def ann_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -552,7 +555,15 @@ def _with_cells(base: DataFrame) -> DataFrame:
     centroids — instead of emitting a NULL cell; the oracle's assign
     CTE mirrors this with a LEFT JOIN + COALESCE(cid, grp) so both
     engines degrade identically on the orphan path."""
-    staged = base.crossJoin(F.broadcast(_semdedup_codebook(base)))
+    return assign_cells(base, _semdedup_codebook(base))
+
+
+def assign_cells(vecs: DataFrame, codebook: DataFrame) -> DataFrame:
+    """`vecs` (with q and norm) plus the `cell` the broadcast two-level
+    codebook row assigns each vector: the coarse argmax picks the
+    group, the fine argmax over that group's centroids picks the cell,
+    and an orphaned group falls back to its own id (see _with_cells)."""
+    staged = vecs.crossJoin(F.broadcast(codebook))
     staged = staged.withColumn(
         "_grp",
         _argmax_cos(

@@ -6,7 +6,7 @@ same oracles, same hashes)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkproj_spark import functions as fx
@@ -306,6 +306,23 @@ ORACLE["chi2_lang_source"] = """
 # ---------------------------------------------------------------------------
 # Exact OLS monthly trend fit (round 7)
 # ---------------------------------------------------------------------------
+def month_index() -> Column:
+    """An order's month index: months since 1995-01 of o_orderdate."""
+    return (
+        (F.year("o_orderdate") - F.lit(1995)) * 12 + F.month("o_orderdate") - 1
+    ).cast("long")
+
+
+def monthly_revenue(orders: DataFrame) -> DataFrame:
+    """The monthly revenue series: (month_ym, mi, rev_c) — 'yyyy-MM',
+    month_index and that month's o_totalprice in exact cents. One
+    map-side-combined groupBy onto the calendar-bounded month grid."""
+    return orders.groupBy(
+        F.date_format("o_orderdate", "yyyy-MM").alias("month_ym"),
+        month_index().alias("mi"),
+    ).agg(F.sum(_cents("o_totalprice")).alias("rev_c"))
+
+
 def ols_trend_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer OLS trend fit of monthly revenue (cents) against
     the month index: per month, the observed revenue, the fitted value
@@ -332,17 +349,7 @@ def ols_trend_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     (80 rows here, thousands at most ever) with 1-row broadcast
     pivots/statistics — no second scan, no driver loop.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.date_format("o_orderdate", "yyyy-MM").alias("month_ym"),
-        (
-            (F.year("o_orderdate") - F.lit(1995)) * 12
-            + F.month("o_orderdate")
-            - 1
-        )
-        .cast("long")
-        .alias("mi"),
-    ).agg(F.sum(_cents("o_totalprice")).alias("rev_c"))
+    monthly = monthly_revenue(load_table(spark, sf_dir, "orders"))
     pivots = monthly.agg(
         F.count("*").alias("n"),
         F.expr("sum(mi) div count(*)").alias("cx"),
@@ -1082,15 +1089,9 @@ def theil_sen_trend_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded histograms. dy*1e6 routes through DECIMAL(38,0)
     (monthly revenue cents ×1e6 passes BIGINT at 100 TB)."""
     orders = load_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        (
-            (F.year("o_orderdate") - F.lit(1995)) * 12
-            + F.month("o_orderdate")
-            - 1
-        )
-        .cast("long")
-        .alias("mi")
-    ).agg(F.sum(_cents("o_totalprice")).alias("rev_c"))
+    monthly = orders.groupBy(month_index().alias("mi")).agg(
+        F.sum(_cents("o_totalprice")).alias("rev_c")
+    )
     a, b = monthly.alias("a"), monthly.alias("b")
     pairs = a.join(F.broadcast(b), F.col("b.mi") > F.col("a.mi")).select(
         F.expr(

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkproj_spark import functions as fx
+from flinkproj_spark.operators.dedup import md5_long
 from flinkproj_spark.sources.tables import fan_out, load_table
 
 _WORDS_SQL = "list_filter(string_split(text, ' '), w -> w != '')"
@@ -37,6 +38,17 @@ _LANG_MARKERS = {
     "zh": ["de", "shi", "zai", "he"],
 }
 _LANG_ORDER = ["en", "de", "es", "fr", "zh"]
+
+
+def lang_marker_hits(lower_words: Column) -> list[Column]:
+    """Per language in _LANG_ORDER, how many words of a lower-cased word
+    array are that language's marker words — counted in-row against a
+    compile-time constant array, no explode."""
+    hits = []
+    for lang in _LANG_ORDER:
+        arr = F.array(*[F.lit(m) for m in _LANG_MARKERS[lang]])
+        hits.append(F.size(F.filter(lower_words, lambda w: F.array_contains(arr, w))))
+    return hits
 
 
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,13 +102,10 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only and marker-matching-heavy → fan the single-split scan out."""
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
     words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
-    sel = [F.col("doc_id")]
-    for lang in _LANG_ORDER:
-        marker_arr = F.array(*[F.lit(m) for m in _LANG_MARKERS[lang]])
-        sel.append(
-            F.size(F.filter(words, lambda w: F.array_contains(marker_arr, w))).alias(f"_s_{lang}")
-        )
-    scored = docs.select(*sel)
+    scored = docs.select(
+        "doc_id",
+        *[h.alias(f"_s_{lang}") for lang, h in zip(_LANG_ORDER, lang_marker_hits(words))],
+    )
     best = F.greatest(*[F.col(f"_s_{l}") for l in _LANG_ORDER])
     pred = F.lit("unknown")
     for lang in reversed(_LANG_ORDER):  # earlier langs win ties
@@ -234,9 +243,7 @@ def positional_shingle_hashes(words: Column) -> Column:
         pairs, F.slice(words, 3, m),
         lambda ab, c: F.concat(ab, F.lit(" "), c),
     )
-    return F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-    )
+    return F.transform(sh, md5_long)
 
 
 def winnow_fps_from_hashes(staged: DataFrame) -> DataFrame:
@@ -738,8 +745,15 @@ def bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy BPE pair merging — identical semantics in Spark and DuckDB,
     no regex, no lookaround. At 100 TB this is a pure map stage:
     scales with scan bandwidth, zero exchange."""
-    counted = _bpe_ids(spark, sf_dir).select(
-        "doc_id",
+    return bpe_encode_stats(_bpe_ids(spark, sf_dir), "doc_id")
+
+
+def bpe_encode_stats(encoded: DataFrame, *keep: str) -> DataFrame:
+    """The keep columns of an encoded frame (an `ids` id-array column)
+    plus its encode stats: n_tokens, n_oov (ids < 0), the order-exact
+    ids_fp fingerprint and the integer oov_ppm."""
+    counted = encoded.select(
+        *keep,
         F.size("ids").cast("long").alias("n_tokens"),
         F.size(F.filter("ids", lambda i: i < 0)).cast("long").alias("n_oov"),
         F.md5(
@@ -1009,9 +1023,10 @@ QC_THRESHOLD = 0  # keep when score_e6 > 0
 
 def _qc_score_exprs() -> tuple[Column, Column, Column, Column]:
     """(stop_ppm, alpha_ppm, len_penalty_e6, score_e6) expressions over
-    a gopher_stat_aggs frame — shared by quality_classifier_linear and
-    quality_drift_by_source so the monitored score can never drift
-    from the deployed classifier's."""
+    a frame with the gopher_stat_aggs columns — shared by
+    quality_classifier_linear, quality_drift_by_source and the
+    streaming stream_quality_scores, so neither the monitored nor the
+    ingest-time score can drift from the deployed classifier's."""
     stop_ppm = F.expr("stop_hits * 1000000 div n_words")
     alpha_ppm = F.expr("alpha_words * 1000000 div n_words")
     # |mean word length - 5| in e6: abs(word_chars*1e6 div n_words - 5e6)
@@ -2758,13 +2773,7 @@ def lang_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     langs × (n_langs+1) — corpus-size-independent, one map-side-combined
     exchange. Map-heavy scan → fanned out like text_lang_id."""
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
-    words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
-    hits = []
-    for lang in _LANG_ORDER:
-        arr = F.array(*[F.lit(m) for m in _LANG_MARKERS[lang]])
-        hits.append(
-            F.size(F.filter(words, lambda w: F.array_contains(arr, w)))
-        )
+    hits = lang_marker_hits(F.transform(fx.tokenize_ws(), lambda w: F.lower(w)))
     n_langs = sum((h > 0).cast("int") for h in hits)
     total = sum(hits)
     per_doc = docs.select(

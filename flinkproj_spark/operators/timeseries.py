@@ -13,7 +13,7 @@ from flinkproj_spark.sources.tables import load_table
 # seasonality_profile composes the OLS trend fit (function AND oracle),
 # which lives in the stats seam module since the round-10 split
 from flinkproj_spark.operators.stats import ORACLE as _STATS_ORACLE
-from flinkproj_spark.operators.stats import ols_trend_monthly
+from flinkproj_spark.operators.stats import monthly_revenue, ols_trend_monthly
 
 def time_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style multi-resolution rollup (the continuous-aggregate
@@ -459,6 +459,17 @@ ORACLE["seasonality_profile"] = f"""
 ACF_LAGS = (1, 2, 3, 7, 14, 28)
 
 
+def daily_revenue(orders: DataFrame) -> DataFrame:
+    """The daily revenue grid: (di, rev_c) — days since 1995-01-01 and
+    that day's o_totalprice in exact cents. One map-side-combined
+    groupBy; the grid is calendar-bounded (~2.4k rows)."""
+    return orders.groupBy(
+        F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01"))
+        .cast("long")
+        .alias("di")
+    ).agg(F.sum(_cents("o_totalprice")).alias("rev_c"))
+
+
 def autocorr_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact autocorrelation function of daily revenue at the classic
     lags (1,2,3 days; 1,2,4 weeks): acf_ppm(k) = 1e6 * sum((y_t-c)
@@ -473,12 +484,7 @@ def autocorr_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) then self-joins on di+k per broadcast lag — grid-sized work;
     pivot and denominator ride 1-row broadcasts. Deviation products
     bound everything by n_days*max_dev^2 (shift-invariance again)."""
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01"))
-        .cast("long")
-        .alias("di")
-    ).agg(F.sum(_cents("o_totalprice")).alias("rev_c"))
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"))
     pivot = daily.agg(
         F.expr("sum(rev_c) div count(*)").alias("cy"),
         F.count("*").alias("n_days"),
@@ -556,12 +562,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs over the ~2.4k-row date grid (plan-lint whitelisted global
     window over a date-bounded frame); peak extraction is a 1-row
     broadcast aggregate of the same grid."""
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01"))
-        .cast("long")
-        .alias("di")
-    ).agg(F.sum(_cents("o_totalprice")).alias("rev_c"))
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"))
     pivot = daily.agg(
         F.expr("sum(rev_c) div count(*)").alias("cy"),
         F.count("*").alias("n_days"),
@@ -633,12 +634,7 @@ def runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     run-boundary lag runs over that date-bounded grid (plan-lint
     whitelisted), and the expected-runs arithmetic is a 1-row
     aggregate: runs_ratio_ppm = obs_runs * n * 1e6 div (n + 2*n1*n2)."""
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01"))
-        .cast("long")
-        .alias("di")
-    ).agg(F.sum(_cents("o_totalprice")).alias("rev_c"))
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"))
     piv = daily.agg(F.expr("sum(rev_c) div count(*)").alias("cy"))
     signed = daily.crossJoin(F.broadcast(piv)).select(
         "di", (F.col("rev_c") > F.col("cy")).cast("int").alias("s")
@@ -711,17 +707,7 @@ def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one orders scan collapses to the month grid; the lag-12
     self-join and every later stage run on that calendar-bounded frame
     as broadcast joins — no window at all."""
-    orders = load_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.date_format("o_orderdate", "yyyy-MM").alias("month_ym"),
-        (
-            (F.year("o_orderdate") - F.lit(1995)) * 12
-            + F.month("o_orderdate")
-            - 1
-        )
-        .cast("long")
-        .alias("mi"),
-    ).agg(F.sum(_cents("o_totalprice")).alias("rev_c"))
+    monthly = monthly_revenue(load_table(spark, sf_dir, "orders"))
     prior = monthly.select(
         (F.col("mi") + 12).alias("mi"), F.col("rev_c").alias("fcst_c")
     )

@@ -4,9 +4,9 @@ content dedup.
 
 The reference has no document pipeline at all (its streams are JSON
 event records, SURVEY.md §2.10); this is the LLM-data extension running
-as a stream: the same language-evidence + length/quality filters as the
-batch funnel — stateless, so they fuse into the scan exactly like the
-batch plan — followed by exact content dedup keyed on the normalized
+as a stream: the batch funnel's own language-evidence + length/quality
+filter (e2e.curate_gate_cond) — stateless, so it fuses into the scan
+exactly like the batch plan — followed by exact content dedup keyed on the normalized
 text's md5, with state bounded by the watermark horizon
 (dropDuplicatesWithinWatermark keeps ONE state row per content hash and
 evicts it when the watermark passes — at 100 TB/day the state store
@@ -25,30 +25,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flinkproj_spark import functions as fx
-from flinkproj_spark.operators.text import _LANG_MARKERS, _LANG_ORDER, _STOPWORDS
+from flinkproj_spark.operators.e2e import curate_gate_cond
 
 
 def curate_gate(docs: DataFrame) -> DataFrame:
-    """The stateless filter stage, shared verbatim by batch and stream:
-    language evidence present, ≥ 20 words, quality ≥ 0.3. Adds the
-    content fingerprint column the dedup stage keys on."""
-    words = fx.tokenize_ws()
-    lower = F.transform(words, lambda w: F.lower(w))
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-
-    def _hits(markers: list[str]):
-        arr = F.array(*[F.lit(x) for x in markers])
-        return F.size(F.filter(lower, lambda w: F.array_contains(arr, w)))
-
-    marker_hits = F.greatest(*[_hits(_LANG_MARKERS[lang]) for lang in _LANG_ORDER])
-    n_words = F.size(words)
-    quality = (
-        F.least(n_words.cast("double") / F.lit(100.0), F.lit(1.0))
-        * (F.lit(1.0) - F.size(F.filter(lower, lambda w: F.array_contains(stop_arr, w))).cast("double") / n_words.cast("double"))
+    """The stateless filter stage: the batch funnel's own
+    e2e.curate_gate_cond (language evidence present, ≥ 20 words,
+    quality ≥ 0.3). Adds the content fingerprint column the dedup
+    stage keys on."""
+    return docs.filter(curate_gate_cond()).withColumn(
+        "content_fp", F.md5(fx.normalize_text())
     )
-    return docs.filter(
-        (marker_hits > 0) & (n_words >= 20) & (quality >= 0.3)
-    ).withColumn("content_fp", F.md5(fx.normalize_text()))
 
 
 def stream_curate(docs: DataFrame, horizon: str = "1 hour") -> DataFrame:
@@ -136,35 +123,19 @@ def stream_ivf_assign(new_vectors: DataFrame, centroids: DataFrame) -> DataFrame
 
     Input stream needs (vec_id, ts, embedding); centroids is the
     static frame (cid, cv, cnorm) with quantized vectors as in the
-    batch operator. The fold tiebreaks like the batch argmax: higher
+    batch operator. Staging is similarity.quantized_vectors and the
+    fold is similarity._argmax_cos, the batch argmax itself: higher
     cosine wins, then the SMALLER cid."""
+    from flinkproj_spark.operators.similarity import _argmax_cos, quantized_vectors
+
     cent_row = centroids.groupBy().agg(
         F.array_sort(
             F.collect_list(F.struct("cid", "cv", "cnorm"))
         ).alias("_cents")
     )
-    q = fx.quantize_embedding(F.col("embedding"))
-    staged = new_vectors.withColumn("_q", q).withColumn(
-        "_norm", F.sqrt(fx.dot(F.col("_q"), F.col("_q")).cast("double"))
-    )
-    best = F.aggregate(
-        "_cents",
-        F.struct(
-            F.lit(-2.0).alias("csim"), F.lit(-1).cast("long").alias("cell")
-        ),
-        lambda acc, c: F.when(
-            (fx.dot(c["cv"], F.col("_q")).cast("double")
-             / (c["cnorm"] * F.col("_norm"))) > acc["csim"],
-            F.struct(
-                (fx.dot(c["cv"], F.col("_q")).cast("double")
-                 / (c["cnorm"] * F.col("_norm"))).alias("csim"),
-                c["cid"].cast("long").alias("cell"),
-            ),
-        ).otherwise(acc),
-    )
-    return staged.join(F.broadcast(cent_row)).select(
-        "vec_id", "ts", best["cell"].alias("cell")
-    )
+    staged = quantized_vectors(new_vectors, "vec_id", "ts")
+    cell = _argmax_cos(F.col("_cents"), "cid", "cv", "cnorm", F.col("q"), F.col("norm"))
+    return staged.join(F.broadcast(cent_row)).select("vec_id", "ts", cell.alias("cell"))
 
 
 def build_semdedup_model(spark, sf_dir: str) -> dict:
@@ -236,7 +207,8 @@ def stream_semdedup_gate(new_vectors: DataFrame, model: dict) -> DataFrame:
     admission verdict — the continuous-ingest gate for the one
     curation stage that had no streaming counterpart: an arriving
     embedding is assigned its cell IN-ROW via the frozen broadcast
-    codebook (the same two-level argmax as batch), judged against the
+    codebook (similarity.assign_cells, the batch assignment), judged
+    against the
     FROZEN base corpus's cell-mates via a stream-static equi-join on
     cell, and the verdict (n_similar_prior, max_prior_cos, is_dropped)
     is an in-row fold over the mate array — ZERO streaming state: no
@@ -264,47 +236,25 @@ def stream_semdedup_gate(new_vectors: DataFrame, model: dict) -> DataFrame:
     extreme N where one cell's array outgrows a row, the same verdict
     decomposes over the exploded (cell, mate) layout with a
     (count, max) register per arrival — the register/finisher split
-    the monitor family uses. The fine-stage lookup COALESCEs to the
-    coarse group id exactly like the batch _with_cells guard (a
-    double-rounding orphaned group must degrade identically in both
-    engines or replay convergence breaks), and the mates-null branch
-    is handled too. Input stream needs (vec_id, ts, embedding)."""
+    the monitor family uses. Calling the batch assign_cells keeps its
+    orphaned-group COALESCE too (a double-rounding orphaned group must
+    degrade identically in both engines or replay convergence breaks),
+    and the mates-null branch is handled here. Input stream needs
+    (vec_id, ts, embedding)."""
     from flinkproj_spark.operators.similarity import (
         SEMDEDUP_MIN_COS,
-        _argmax_cos,
+        assign_cells,
+        quantized_vectors,
     )
 
-    staged = (
-        new_vectors.withColumn("_q", fx.quantize_embedding(F.col("embedding")))
-        .withColumn("_norm", F.sqrt(fx.dot("_q", "_q").cast("double")))
-        .crossJoin(F.broadcast(model["codebook"]))
-    )
-    staged = staged.withColumn(
-        "_grp",
-        _argmax_cos(
-            F.col("_coarse"), "ccid", "ccv", "ccnorm",
-            F.col("_q"), F.col("_norm"),
-        ),
-    )
-    staged = (
-        staged.withColumn(
-            "cell",
-            F.coalesce(
-                _argmax_cos(
-                    F.element_at(F.col("_cmap"), F.col("_grp")),
-                    "cid", "cv", "cnorm", F.col("_q"), F.col("_norm"),
-                ),
-                F.col("_grp"),
-            ),
-        )
-        .drop("_coarse", "_cmap", "_grp")
-        .crossJoin(F.broadcast(model["max_id"]))
-    )
+    staged = assign_cells(
+        quantized_vectors(new_vectors, "vec_id", "ts"), model["codebook"]
+    ).crossJoin(F.broadcast(model["max_id"]))
 
     def _cos(m):
         return F.round(
-            fx.dot(m["mq"], F.col("_q")).cast("double")
-            / (m["mnorm"] * F.col("_norm")),
+            fx.dot(m["mq"], F.col("q")).cast("double")
+            / (m["mnorm"] * F.col("norm")),
             6,
         )
 
@@ -347,17 +297,13 @@ def stream_quality_scores(new_docs: DataFrame) -> DataFrame:
     """Streaming twin of operators/text.py::quality_classifier_linear:
     score every incoming doc with the same integer-ppm linear model at
     ingest time, so the quarantine/keep routing happens before storage
-    instead of in a batch sweep. Entirely stateless — the features are
-    per-document aggregates computed IN-ROW over the token array (no
-    exploded groupBy, which would need streaming aggregation state),
-    arithmetically identical to the batch operator's exploded
-    formulation. Input stream needs (doc_id, ts, text)."""
-    from flinkproj_spark.operators.text import (
-        QC_BIAS,
-        QC_THRESHOLD,
-        QC_WEIGHTS,
-        _STOPWORDS,
-    )
+    instead of in a batch sweep. Entirely stateless — the four
+    gopher_stat_aggs statistics are computed IN-ROW over the token
+    array (no exploded groupBy, which would need streaming aggregation
+    state) under their batch names, and the score is the batch
+    operator's own text._qc_score_exprs over them. Input stream needs
+    (doc_id, ts, text)."""
+    from flinkproj_spark.operators.text import QC_THRESHOLD, _STOPWORDS, _qc_score_exprs
 
     words = fx.tokenize_ws()
     lower = F.transform(words, lambda w: F.lower(w))
@@ -374,19 +320,11 @@ def stream_quality_scores(new_docs: DataFrame) -> DataFrame:
         "doc_id",
         "ts",
         n.cast("long").alias("n_words"),
-        (stops.cast("long") * 1000000).alias("_stop_n"),
-        (alpha.cast("long") * 1000000).alias("_alpha_n"),
-        word_chars.alias("_wc"),
+        stops.cast("long").alias("stop_hits"),
+        alpha.cast("long").alias("alpha_words"),
+        word_chars.alias("word_chars"),
     )
-    stop_ppm = F.expr("_stop_n div n_words")
-    alpha_ppm = F.expr("_alpha_n div n_words")
-    len_pen = F.abs(F.expr("_wc * 1000000 div n_words") - F.lit(5_000_000))
-    score = (
-        F.lit(QC_WEIGHTS["stop_ppm"]) * stop_ppm
-        + F.lit(QC_WEIGHTS["alpha_ppm"]) * alpha_ppm
-        + F.lit(QC_WEIGHTS["len_penalty"]) * len_pen
-        + F.lit(QC_BIAS)
-    )
+    *_, score = _qc_score_exprs()
     return staged.select(
         "doc_id",
         "ts",
@@ -403,23 +341,12 @@ def stream_bpe_encode(new_docs: DataFrame) -> DataFrame:
     writer consumes. Entirely stateless (the merge table is a plan
     literal; the whole replace-chain encode is in-row), so it composes
     with readStream unchanged and needs no watermark or state store.
-    Input stream needs (doc_id, ts, text); output is the batch
-    operator's row shape plus the event time."""
-    from flinkproj_spark.operators.text import bpe_id_expr
+    Input stream needs (doc_id, ts, text); the row is the batch
+    operator's text.bpe_encode_stats plus the event time."""
+    from flinkproj_spark.operators.text import bpe_encode_stats, bpe_id_expr
 
     staged = new_docs.select("doc_id", "ts", bpe_id_expr().alias("ids"))
-    counted = staged.select(
-        "doc_id",
-        "ts",
-        F.size("ids").cast("long").alias("n_tokens"),
-        F.size(F.filter("ids", lambda i: i < 0)).cast("long").alias("n_oov"),
-        F.md5(
-            F.array_join(F.transform("ids", lambda i: i.cast("string")), ",")
-        ).alias("ids_fp"),
-    )
-    return counted.withColumn(
-        "oov_ppm", F.expr("n_oov * 1000000 div greatest(n_tokens, 1)")
-    )
+    return bpe_encode_stats(staged, "doc_id", "ts")
 
 
 def build_dsir_model(spark, sf_dir: str) -> dict:
@@ -503,28 +430,16 @@ def stream_dsir_gate(new_docs: DataFrame, model: dict) -> DataFrame:
     target-like pool. Entirely stateless: the 512-bucket model and the
     corpus threshold compile into codegen literals, the per-token
     bucket lookup and evidence sum run IN-ROW over the token array (no
-    exploded groupBy state), arithmetically identical to the batch
-    operator per document. The verdict uses the threshold frozen at
+    exploded groupBy state), and each token's bucket is
+    curation.dsir_bucket, the batch scorer's own. The verdict uses the threshold frozen at
     model-build time — the deployed-model semantics (a drifting stream
     mean would make admission non-deterministic). Input stream needs
     (doc_id, ts, text)."""
-    from flinkproj_spark.operators.curation import DSIR_BUCKETS, DSIR_SALT
+    from flinkproj_spark.operators.curation import dsir_bucket
 
     words = fx.tokenize_ws()
     diff_arr = F.array(*[F.lit(int(d)) for d in model["diffs"]])
-    bks = F.transform(
-        words,
-        lambda w: (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(DSIR_SALT), F.lower(w))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % DSIR_BUCKETS
-        ),
-    )
+    bks = F.transform(words, dsir_bucket)
     ssum = F.aggregate(
         bks,
         F.lit(0).cast("long"),
@@ -577,14 +492,13 @@ def stream_lang_mix_gate(new_docs: DataFrame) -> DataFrame:
     contaminated docs away from the monolingual pools before storage.
 
     Entirely stateless (compile-time constant marker arrays, no
-    explode, no state store), arithmetically identical to the batch
-    operator per document — the same frozen-constant contract as
-    stream_dsir_gate. Input stream needs (doc_id, ts, text)."""
-    words = F.transform(fx.tokenize_ws(), lambda w: F.lower(w))
-    hits = []
-    for lang in _LANG_ORDER:
-        arr = F.array(*[F.lit(m) for m in _LANG_MARKERS[lang]])
-        hits.append(F.size(F.filter(words, lambda w: F.array_contains(arr, w))))
+    explode, no state store); the per-language counts are
+    text.lang_marker_hits, the batch operator's own — the same
+    frozen-constant contract as stream_dsir_gate. Input stream needs
+    (doc_id, ts, text)."""
+    from flinkproj_spark.operators.text import lang_marker_hits
+
+    hits = lang_marker_hits(F.transform(fx.tokenize_ws(), lambda w: F.lower(w)))
     n_langs = sum((h > 0).cast("int") for h in hits)
     total = sum(hits)
     return new_docs.select(

@@ -107,9 +107,10 @@ def stream_cms_sketch(events: DataFrame) -> DataFrame:
 
 def stream_source_sketch(docs: DataFrame) -> DataFrame:
     """Streaming per-source MinHash sketch — the ingest-time twin of
-    operators/dedup.py::source_jaccard_matrix's sketch stage. Shingle
-    hashing runs stateless per document; the streaming aggregation
-    keeps N_HASHES running minima per source. min is associative and
+    operators/dedup.py::source_jaccard_matrix's sketch stage, built
+    from the batch sketch's own dedup.shingle_hashes and
+    dedup.minhash_mins. Shingle hashing runs stateless per document;
+    the streaming aggregation keeps N_HASHES running minima per source. min is associative and
     commutative, so micro-batch merging is exact (the streamed sketch
     equals the batch signature over the same documents — pinned in
     tests/test_streaming_ext.py) and state is sources × N_HASHES
@@ -119,23 +120,9 @@ def stream_source_sketch(docs: DataFrame) -> DataFrame:
     the sketch streams and the exact-Jaccard audit column cannot.
     Run in complete/update mode; downstream, pairwise signature
     agreement is the same 20-row self-join as the batch matrix."""
-    from flinkproj_spark.operators.dedup import MINHASH_A, MINHASH_B, MINHASH_P
+    from flinkproj_spark.operators.dedup import minhash_mins, shingle_hashes
 
-    words = fx.tokenize_ws()
-    base = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
-    staged = (
-        docs.filter(F.size(words) >= 3)
-        .select("source", F.explode(fx.shingles(words, 3)).alias("sh"))
-        .select("source", base.alias("x"))
-    )
-    return staged.groupBy("source").agg(
-        *[
-            F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MINHASH_P)).alias(
-                f"s{i}"
-            )
-            for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-        ]
-    )
+    return shingle_hashes(docs, "source").groupBy("source").agg(*minhash_mins())
 
 
 def stream_quantile_sketch(orders: DataFrame) -> DataFrame:
@@ -328,23 +315,16 @@ def stream_srm_monitor(events: DataFrame, horizon: str = "40 days") -> DataFrame
     exactly across micro-batches. Run in complete/update mode and
     feed the two counters into the same (a−b)²·1e6/(a+b) decision the
     batch check applies — an assignment bug shows up DURING the ramp,
-    not in tomorrow's experiment readout. The variant coin is the
-    SHARED srm expression (same salt), so monitor and nightly check
-    can never disagree on assignment. Input stream needs
+    not in tomorrow's experiment readout. The variant coin is
+    screens.srm_variant, the batch check's own, so monitor and nightly
+    check can never disagree on assignment. Input stream needs
     (user_id, ts)."""
-    from flinkproj_spark.operators.screens import SRM_SALT
+    from flinkproj_spark.operators.screens import srm_variant
 
-    variant = F.when(
-        F.substring(
-            F.md5(F.concat(F.col("user_id").cast("string"), F.lit(SRM_SALT))), 1, 1
-        )
-        < "8",
-        F.lit("control"),
-    ).otherwise(F.lit("treatment"))
     first_seen = events.withWatermark("ts", horizon).dropDuplicatesWithinWatermark(
         ["user_id"]
     )
-    return first_seen.select(variant.alias("variant")).groupBy("variant").agg(
+    return first_seen.select(srm_variant().alias("variant")).groupBy("variant").agg(
         F.count("*").alias("n_users")
     )
 

@@ -122,6 +122,10 @@ def stream_report_with_late_split(
     the merge goes through `upsert_keyed` — so a window whose rows
     arrive over several triggers converges to its batch-twin count.
 
+    The query runs on Spark's default trigger until it is stopped, as
+    the deployed report job does (DataReport.java runs until
+    cancelled); tests drive it with processAllAvailable() and stop().
+
     A replayed epoch (the sink ran but its commit was lost) is a no-op:
     the last applied epoch id is recorded beside max_ts once the epoch's
     writes are done. A failure between those writes and the record
@@ -189,7 +193,6 @@ def stream_report_with_late_split(
     return (
         parsed.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
         .start()
     )
 

@@ -316,6 +316,9 @@ def stream_cluster_labels(
     work is proportional to the batch + touched components, never the
     accumulated graph. Labels converge to the batch dedup_cluster
     canonical min-id labeling (pinned in tests/test_streaming_ext.py).
+    Each round's labels are held in a cache_scope and the superseded
+    round is released, as in dedup_cluster, so no round outlives its
+    micro-batch.
     Input rows: (doc_a, doc_b). Returns the started StreamingQuery."""
 
     def merge(batch: DataFrame, epoch_id: int) -> None:
@@ -348,56 +351,52 @@ def stream_cluster_labels(
             .select("a", "b")
             .unionAll(e.unionAll(virt).select(F.col("b").alias("a"), F.col("a").alias("b")))
         )
-        labels = (
-            und.select(F.col("a").alias("node"))
-            .unionAll(und.select(F.col("b").alias("node")))
-            .distinct()
-            .withColumn("label", F.col("node"))
-            .localCheckpoint()
-        )
-        while True:  # the feedback iteration, batch-local, bounded
-            prop = (
-                und.join(labels, und.a == labels.node)
-                .groupBy(F.col("b").alias("node"))
-                .agg(F.min("label").alias("nbr"))
+        with cache_scope() as scope:
+            labels = scope.hold(
+                und.select(F.col("a").alias("node"))
+                .unionAll(und.select(F.col("b").alias("node")))
+                .distinct()
+                .withColumn("label", F.col("node"))
             )
-            nxt = (
-                labels.join(prop, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        "label", F.coalesce("nbr", F.col("label"))
-                    ).alias("label"),
+            while True:  # the feedback iteration, batch-local, bounded
+                prop = (
+                    und.join(labels, und.a == labels.node)
+                    .groupBy(F.col("b").alias("node"))
+                    .agg(F.min("label").alias("nbr"))
                 )
-                .localCheckpoint()
-            )
-            changed = (
-                nxt.join(labels.withColumnRenamed("label", "_old"), "node")
-                .filter(F.col("label") < F.col("_old"))
-                .count()
-            )
-            labels = nxt
-            if changed == 0:
-                break
-        # Relabel the whole store via the old-label -> new-label map,
-        # then upsert the batch nodes.
-        final_nodes = labels
-        if cur is None:
-            merged = final_nodes
-        else:
-            lab_map = final_nodes.select(
-                F.col("node").alias("_from"), F.col("label").alias("_to")
-            )
-            untouched = cur.join(
-                final_nodes.select("node"), "node", "left_anti"
-            )
-            remapped = untouched.join(
-                lab_map, untouched.label == lab_map._from, "left"
-            ).select(
-                "node", F.coalesce("_to", "label").alias("label")
-            )
-            merged = remapped.unionByName(final_nodes)
-        _commit_version(merged, state_dir, epoch_id)
+                nxt = scope.hold(
+                    labels.join(prop, "node", "left").select(
+                        "node",
+                        F.least(
+                            "label", F.coalesce("nbr", F.col("label"))
+                        ).alias("label"),
+                    )
+                )
+                changed = (
+                    nxt.join(labels.withColumnRenamed("label", "_old"), "node")
+                    .filter(F.col("label") < F.col("_old"))
+                    .count()
+                )
+                scope.release(labels)  # superseded: at most two rounds live
+                labels = nxt
+                if changed == 0:
+                    break
+            # Relabel the whole store via the old-label -> new-label map,
+            # then upsert the batch nodes.
+            if cur is None:
+                merged = labels
+            else:
+                lab_map = labels.select(
+                    F.col("node").alias("_from"), F.col("label").alias("_to")
+                )
+                untouched = cur.join(labels.select("node"), "node", "left_anti")
+                remapped = untouched.join(
+                    lab_map, untouched.label == lab_map._from, "left"
+                ).select(
+                    "node", F.coalesce("_to", "label").alias("label")
+                )
+                merged = remapped.unionByName(labels)
+            _commit_version(merged, state_dir, epoch_id)
 
     return (
         edges.writeStream.foreachBatch(merge)

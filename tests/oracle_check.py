@@ -42,14 +42,11 @@ def main() -> int:
 
     from flinkproj_spark import registry
     from flinkproj_spark.session import build_session
-    from flinkproj_spark.sources.tables import TABLES
+    from flinkproj_spark.sources.tables import register_oracle_views
 
     spark = build_session("oracle_check", cpus=8)
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    register_oracle_views(con, sf_dir)
 
     qs, oracles = registry.queries(), registry.oracle_sql()
     failures = 0

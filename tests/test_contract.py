@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flinkproj_spark import registry
-from flinkproj_spark.sources.tables import TABLES
+from flinkproj_spark.sources.tables import register_oracle_views
 
 
 def test_every_query_key_analyzes(spark, sf_dir):
@@ -28,10 +28,7 @@ def test_every_query_key_analyzes(spark, sf_dir):
 def test_every_oracle_sql_parses(sf_dir):
     """EXPLAIN every oracle statement against the real table schemas."""
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    register_oracle_views(con, sf_dir)
     failures = {}
     for key, sql in registry.oracle_sql().items():
         try:
@@ -238,8 +235,8 @@ def test_only_the_table_loader_reads_corpus_files():
     """Every corpus read goes through load_table and its schema memo:
     no engine module but sources/tables.py builds a table path under an
     sf_dir — os.path.join(sf_dir, f"{name}.parquet") or an f-string
-    that opens with {sf_dir} and ends in .parquet. An SQL string that
-    only embeds such a path (the DuckDB oracle views) is not a path."""
+    with {sf_dir} followed by .parquet, also inside an SQL string: the
+    DuckDB oracle views are registered by register_oracle_views."""
     import ast
     from pathlib import Path
 
@@ -251,12 +248,19 @@ def test_only_the_table_loader_reads_corpus_files():
         last = node.values[-1] if isinstance(node, ast.JoinedStr) and node.values else node
         return isinstance(last, ast.Constant) and str(last.value).endswith(".parquet")
 
+    def embeds_table_path(node):
+        after_sf_dir = False
+        for v in node.values:
+            if isinstance(v, ast.FormattedValue) and is_sf_dir(v.value):
+                after_sf_dir = True
+            elif after_sf_dir and isinstance(v, ast.Constant) and ".parquet" in str(v.value):
+                return True
+        return False
+
     def is_table_path(node):
         if isinstance(node, ast.Call) and ast.unparse(node.func) == "os.path.join":
             return bool(node.args) and is_sf_dir(node.args[0]) and ends_parquet(node.args[-1])
-        return (isinstance(node, ast.JoinedStr) and len(node.values) > 1
-                and isinstance(node.values[0], ast.FormattedValue)
-                and is_sf_dir(node.values[0].value) and ends_parquet(node))
+        return isinstance(node, ast.JoinedStr) and embeds_table_path(node)
 
     root = Path(__file__).resolve().parent.parent
     readers = {
@@ -269,3 +273,55 @@ def test_only_the_table_loader_reads_corpus_files():
     assert loader, "the scan no longer finds load_table's own read"
     assert readers == loader, "corpus reads outside load_table:\n" + "\n".join(
         sorted(readers - loader))
+
+
+#: Each shared column primitive, by the constants that define it, and
+#: the one engine function that may read them.
+ONE_BUILDER = {
+    ("MINHASH_A", "MINHASH_B"): "flinkproj_spark/operators/dedup.py::minhash_perms",
+    ("_LANG_MARKERS",): "flinkproj_spark/operators/text.py::lang_marker_hits",
+    ("QC_WEIGHTS",): "flinkproj_spark/operators/text.py::_qc_score_exprs",
+    ("DSIR_SALT",): "flinkproj_spark/operators/curation.py::dsir_bucket",
+    ("SRM_SALT",): "flinkproj_spark/operators/screens.py::srm_variant",
+}
+
+
+def test_each_shared_primitive_has_one_builder():
+    """A streaming twin calls its batch key's builder instead of
+    re-deriving the expression: in engine code each primitive's
+    constants are read by exactly one function. The DuckDB oracles
+    are the reference and may spell a primitive out: the `ORACLE` dict
+    and its values, module-level `*_SQL` strings and functions named
+    `*_oracle` or `*_sql` are not readers."""
+    import ast
+    from pathlib import Path
+
+    guarded = {name: group for group in ONE_BUILDER for name in group}
+    readers = {group: set() for group in ONE_BUILDER}
+
+    def is_oracle(stmt):
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        return any(
+            (isinstance(t, ast.Subscript) and ast.unparse(t.value) == "ORACLE")
+            or (isinstance(t, ast.Name) and (t.id == "ORACLE" or t.id.endswith("_SQL")))
+            for t in targets
+        )
+
+    def scan(node, rel, owner=None):
+        """owner: the top-level function being scanned, None at module level."""
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if not child.name.endswith(("_oracle", "_sql")):
+                    scan(child, rel, owner or f"{rel}::{child.name}")
+            elif owner is None and isinstance(child, (ast.Assign, ast.AnnAssign)) and is_oracle(child):
+                continue
+            else:
+                if (isinstance(child, ast.Name) and isinstance(child.ctx, ast.Load)
+                        and child.id in guarded):
+                    readers[guarded[child.id]].add(owner or f"{rel}::<module>")
+                scan(child, rel, owner)
+
+    root = Path(__file__).resolve().parent.parent
+    for path in sorted((root / "flinkproj_spark").rglob("*.py")):
+        scan(ast.parse(path.read_text(), str(path)), str(path.relative_to(root)))
+    assert readers == {group: {builder} for group, builder in ONE_BUILDER.items()}, readers

@@ -31,6 +31,14 @@ def _read_stream(spark, path):
     return spark.readStream.format("text").load(path).withColumnRenamed("value", "value")
 
 
+def _drain(q):
+    """Run a query on the default trigger until its source is drained,
+    then stop it."""
+    q.processAllAvailable()
+    q.stop()
+    return q
+
+
 class TestStreamReport:
     def test_converges_to_batch(self, spark, tmp_path):
         lines = [
@@ -123,12 +131,10 @@ class TestStreamReport:
     def test_late_split_side_output(self, spark, tmp_path):
         src, res, late, ckpt = (str(tmp_path / d) for d in ("src", "res", "late", "ckpt"))
         _write_lines(spark, src, [_audit("2018-01-01 10:10:00")], "b0")
-        q = stream_report_with_late_split(spark, _read_stream(spark, src), res, late, ckpt)
-        q.awaitTermination(120)
+        _drain(stream_report_with_late_split(spark, _read_stream(spark, src), res, late, ckpt))
         # > 40 s older than max seen event time → late channel (W4)
         _write_lines(spark, src, [_audit("2018-01-01 10:00:00", typ="black")], "b1")
-        q = stream_report_with_late_split(spark, _read_stream(spark, src), res, late, ckpt)
-        q.awaitTermination(120)
+        _drain(stream_report_with_late_split(spark, _read_stream(spark, src), res, late, ckpt))
 
         late_lines = [r.value for r in spark.read.text(late).collect()]
         assert any("black" in l for l in late_lines)
@@ -149,8 +155,7 @@ class TestStreamReport:
             _write_lines(spark, src, lines, name)
             os.utime(os.path.join(src, f"{name}.txt"), (1_000_000 + i, 1_000_000 + i))
         raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
-        stream_report_with_late_split(
-            spark, raw, res, late, ckpt_scheme + ckpt).awaitTermination(120)
+        _drain(stream_report_with_late_split(spark, raw, res, late, ckpt_scheme + ckpt))
         return src, res, late, ckpt
 
     def _snapshot(self, spark, res, late):
@@ -159,14 +164,29 @@ class TestStreamReport:
 
     def _replay_last_epoch(self, spark, src, res, late, ckpt, ckpt_scheme=""):
         """Delete the last commit (and its .crc) and restart the query:
-        Spark re-runs that epoch. Returns the re-run batch ids."""
+        Spark re-runs that epoch. Returns the ids of the batches that ran
+        (an idle trigger's progress has no addBatch)."""
         last = max(int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit())
         for name in (str(last), f".{last}.crc"):
             os.remove(os.path.join(ckpt, "commits", name))
         raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
-        q = stream_report_with_late_split(spark, raw, res, late, ckpt_scheme + ckpt)
-        q.awaitTermination(120)
-        return last, [json.loads(p.json)["batchId"] for p in q.recentProgress]
+        q = _drain(stream_report_with_late_split(spark, raw, res, late, ckpt_scheme + ckpt))
+        return last, [p["batchId"] for p in map(json.loads, (p.json for p in q.recentProgress))
+                      if "addBatch" in p["durationMs"]]
+
+    def test_late_split_runs_until_stopped(self, spark, tmp_path):
+        """The late split runs on the default trigger, like the deployed
+        report job: a drained source leaves the query active."""
+        src, res, late, ckpt = (str(tmp_path / d) for d in ("src", "res", "late", "ckpt"))
+        _write_lines(spark, src, [_audit("2018-01-01 10:10:00")], "b0")
+        q = stream_report_with_late_split(spark, _read_stream(spark, src), res, late, ckpt)
+        try:
+            q.processAllAvailable()
+            assert not q.awaitTermination(2)
+            assert q.isActive
+        finally:
+            q.stop()
+        assert spark.read.parquet(res).count() == 1
 
     def test_late_split_window_over_two_triggers_converges(self, spark, tmp_path):
         """A window whose rows arrive over two triggers gets the batch

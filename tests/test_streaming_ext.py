@@ -1010,6 +1010,7 @@ class TestStreamClusterLabels:
             rank_in_comp[comp] = rk + 1
             halves[rk % 2].append((a, b))
         assert halves[1], "no component has >= 2 edges - nothing straddles"
+        persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
         for half in (0, 1):
             spark.createDataFrame(
                 halves[half], "doc_a long, doc_b long"
@@ -1020,6 +1021,8 @@ class TestStreamClusterLabels:
                 ckpt,
             )
             q.awaitTermination(180)
+        # each round's labels live only in the micro-batch's cache scope
+        assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == persisted
 
         got = {r.node: r.label for r in cluster_state_view(spark, store).collect()}
         assert len(got) > 0

@@ -55,13 +55,12 @@ sys.path.insert(0, "tests")
 from oracle_check import _canon
 from flinkproj_spark import registry
 from flinkproj_spark.session import build_session
-from flinkproj_spark.sources.tables import TABLES
+from flinkproj_spark.sources.tables import register_oracle_views
 sf_dir = sys.argv[1]
 spark = build_session("oddpart", cpus=5,
                       extra_conf={"spark.sql.shuffle.partitions": "7"})
 con = duckdb.connect()
-for t in TABLES:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+register_oracle_views(con, sf_dir)
 qs, oracles = registry.queries(), registry.oracle_sql()
 bad = []
 for k, fn in qs.items():
