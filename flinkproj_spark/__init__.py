@@ -10,7 +10,7 @@ express the semantics.
 Layout:
     sources/    table loaders, dimension builders, synthetic generators
     operators/  the operator library (SURVEY.md §2 + LLM-pipeline extensions)
-    plans/      plan-inspection helpers (broadcast/pushdown assertions)
+    plans/      plan-inspection helpers (executed plan, no-Python assertion)
     streaming/  Structured Streaming pipeline twins (watermark, upsert, late split)
     pipelines   the two reference pipelines' batch transforms
 """

@@ -108,17 +108,16 @@ def tokenize_ws(col: Column | str = "text") -> Column:
     return F.filter(F.split(c, " "), lambda w: w != "")
 
 
-def token_count(col: Column | str = "text") -> Column:
-    """BPE-ish token count via one regexp_count pass (no array built)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_count(c, F.lit(TOKEN_RE))
+def token_count() -> Column:
+    """BPE-ish token count of `text` via one regexp_count pass (no
+    array built)."""
+    return F.regexp_count(F.col("text"), F.lit(TOKEN_RE))
 
 
-def normalize_text(col: Column | str = "text") -> Column:
-    """Lowercase, collapse whitespace runs, trim — the canonical form
-    used by exact-dup hashing and fingerprints."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(F.lower(c), "\\s+", " "))
+def normalize_text() -> Column:
+    """Lowercase, collapse whitespace runs, trim `text` — the canonical
+    form used by exact-dup hashing and fingerprints."""
+    return F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
 
 
 def ngrams(words: Column, n: int) -> Column:
@@ -136,17 +135,22 @@ def ngrams(words: Column, n: int) -> Column:
     return out
 
 
-def shingles(words: Column, n: int = 3) -> Column:
-    """Distinct word n-shingles (see ngrams for the O(len) shape)."""
-    return F.array_distinct(ngrams(words, n))
+SHINGLE_WORDS = 3  # words per shingle in every near-dup/overlap operator
+QUANT_PLACES = 3  # decimals kept when an embedding is quantized
 
 
-def quantize_embedding(col: Column, places: int = 3) -> Column:
-    """float embedding → exact int64 at `places` decimals. All
+def shingles(words: Column) -> Column:
+    """Distinct word SHINGLE_WORDS-shingles (see ngrams for the O(len)
+    shape)."""
+    return F.array_distinct(ngrams(words, SHINGLE_WORDS))
+
+
+def quantize_embedding(col: Column) -> Column:
+    """float embedding → exact int64 at QUANT_PLACES decimals. All
     similarity math downstream is integer-exact, which is what makes
     cosine results hash-comparable against a SQL oracle (float
     summation order would differ between engines)."""
-    scale = float(10**places)
+    scale = float(10**QUANT_PLACES)
     return F.transform(
         col, lambda x: F.floor(x.cast("double") * F.lit(scale) + F.lit(0.5)).cast("long")
     )
@@ -301,14 +305,13 @@ def bucketed_cumsum(
     bucket: Column,
     order: Sequence[Column],
     cols: Sequence[str],
-    prefix: str = "cum_",
 ) -> DataFrame:
     """Skew-safe running total over an ordered frame: same two-pass
     shape as bucketed_row_number but for cumulative SUMS — coarse
     per-bucket totals, a cumulative window over the bucket frame
     (domain-bounded, `len(cols)` longs per row), then the fine
     cumulative window WITHIN each bucket plus the bucket's offset.
-    For each name in `cols` the result gains `prefix+name` =
+    For each name in `cols` the result gains `cum_<name>` =
     sum of that column over all rows at-or-before the row in the
     (bucket, *order) total order — bit-identical to a single
     unpartitioned cumulative window. `bucket` must be weakly monotone
@@ -340,6 +343,6 @@ def bucketed_cumsum(
     res = work.join(F.broadcast(offsets), "_csb")
     for c in cols:
         res = res.withColumn(
-            prefix + c, F.sum(c).over(wfine) + F.col(f"_co_{c}")
+            f"cum_{c}", F.sum(c).over(wfine) + F.col(f"_co_{c}")
         )
     return res.drop("_csb", *[f"_co_{c}" for c in cols])

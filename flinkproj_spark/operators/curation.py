@@ -471,8 +471,8 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"))
     words = fx.tokenize_ws()
     sh = (
-        docs.filter(F.size(words) >= 3)
-        .select("doc_id", F.explode(fx.shingles(words, 3)).alias("s"))
+        docs.filter(F.size(words) >= fx.SHINGLE_WORDS)
+        .select("doc_id", F.explode(fx.shingles(words)).alias("s"))
         .select("doc_id", F.md5("s").alias("h"))
     )
     return (

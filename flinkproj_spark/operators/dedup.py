@@ -111,8 +111,8 @@ def shingle_hashes(docs: DataFrame, key: str) -> DataFrame:
     x the shingle's md5_long — the input of every minhash sketch."""
     words = fx.tokenize_ws()
     return (
-        docs.filter(F.size(words) >= 3)
-        .select(key, F.explode(fx.shingles(words, 3)).alias("sh"))
+        docs.filter(F.size(words) >= fx.SHINGLE_WORDS)
+        .select(key, F.explode(fx.shingles(words)).alias("sh"))
         .select(key, md5_long("sh").alias("x"))
     )
 
@@ -228,7 +228,7 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     components are tiny (diameter 2-3), so 2-4 rounds in practice.
 
     Fault tolerance: RELIABLE checkpoints (spark checkpoint dir — HDFS/S3
-    on a real cluster, set SPARK_GRAFT_CHECKPOINT_DIR or call
+    on a real cluster, set the `spark.checkpoint.dir` conf or call
     setCheckpointDir first), not localCheckpoint: localCheckpoint stores
     blocks only on executors with no lineage, so one lost executor kills
     a cluster job mid-iteration with no recompute path. Edges and the
@@ -241,21 +241,17 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_minhash_lsh(spark, sf_dir)
     sc = spark.sparkContext
     if sc.getCheckpointDir() is None:
-        env_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-        if env_dir is None and not sc.master.startswith("local"):
+        if not sc.master.startswith("local"):
             # A tempdir fallback on a CLUSTER writes checkpoint blocks to
             # each executor's own local disk — an executor loss then loses
             # them, silently recreating the exact localCheckpoint failure
             # this operator exists to avoid. Fail fast and say why.
             raise RuntimeError(
                 "dedup_cluster needs a RELIABLE checkpoint dir on a cluster "
-                f"(master={sc.master!r}): set SPARK_GRAFT_CHECKPOINT_DIR to "
-                "an HDFS/S3 path or call spark.sparkContext.setCheckpointDir"
+                f"(master={sc.master!r}): set spark.checkpoint.dir to an "
+                "HDFS/S3 path or call spark.sparkContext.setCheckpointDir"
             )
-        sc.setCheckpointDir(
-            env_dir
-            or os.path.join(tempfile.gettempdir(), "flinkproj_spark_ckpt")
-        )
+        sc.setCheckpointDir(os.path.join(tempfile.gettempdir(), "flinkproj_spark_ckpt"))
     # Symmetrize by ONE explode (round-13, the pagerank/LPA lesson):
     # the self-union form referenced the LSH pair pipeline twice and
     # ran it twice inside the eager checkpoint below when exchange
@@ -746,8 +742,8 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline_curate."""
     docs = load_table(spark, sf_dir, "documents")
     words = fx.tokenize_ws()
-    sh = docs.filter(F.size(words) >= 3).select(
-        "doc_id", F.explode(fx.shingles(words, 3)).alias("s")
+    sh = docs.filter(F.size(words) >= fx.SHINGLE_WORDS).select(
+        "doc_id", F.explode(fx.shingles(words)).alias("s")
     ).select("doc_id", F.md5("s").alias("h"))
     eval_hashes = sh.filter(F.col("doc_id") % EVAL_MOD == 0).select("h").distinct()
     train = sh.filter(F.col("doc_id") % EVAL_MOD != 0)
@@ -785,8 +781,8 @@ def eval_leak_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     and never shuffles text."""
     docs = load_table(spark, sf_dir, "documents")
     words = fx.tokenize_ws()
-    sh = docs.filter(F.size(words) >= 3).select(
-        "doc_id", F.explode(fx.shingles(words, 3)).alias("s")
+    sh = docs.filter(F.size(words) >= fx.SHINGLE_WORDS).select(
+        "doc_id", F.explode(fx.shingles(words)).alias("s")
     ).select("doc_id", F.md5("s").alias("h"))
     eval_sh = (
         sh.filter(F.col("doc_id") % EVAL_MOD == 0)

@@ -364,7 +364,9 @@ def pipeline_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction); everything else reduces to the calendar-bounded
     inventory grid, 1-row digest aggregates, and a broadcast
     probes×bins range join."""
+    import atexit
     import os
+    import shutil
     import tempfile
 
     from flinkproj_spark.operators.relational import TD_MOD, td_row_hash
@@ -375,11 +377,15 @@ def pipeline_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkproj_spark.sources.files import write_compacted_files
 
     events = load_table(spark, sf_dir, "events")
-    out_path = os.path.join(
-        tempfile.gettempdir(),
-        "flinkproj_spark_lake",
-        os.path.basename(os.path.normpath(sf_dir)),
+    # one scratch lake per application and corpus: a concurrent session
+    # on the same corpus must not overwrite the files this one reads
+    # back. The lake goes when the driver process exits.
+    lake = os.path.join(
+        tempfile.gettempdir(), "flinkproj_spark_lake", spark.sparkContext.applicationId
     )
+    if not os.path.isdir(lake):
+        atexit.register(shutil.rmtree, lake, True)
+    out_path = os.path.join(lake, os.path.basename(os.path.normpath(sf_dir)))
     write_compacted_files(spark, sf_dir, out_path)
     compacted = spark.read.parquet(out_path)
 

@@ -26,7 +26,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkproj_spark import functions as fx
@@ -186,6 +186,10 @@ def packing_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SLIDE_WINDOW = "30 seconds"
+SLIDE_STEP = "10 seconds"
+
+
 def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping-window count over events: 30 s windows sliding every 10 s,
     per event_type. Each event lands in exactly 3 windows; the expansion
@@ -194,7 +198,7 @@ def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     agg = (
         events.groupBy(
-            F.window("ts", "30 seconds", "10 seconds").alias("w"), "event_type"
+            F.window("ts", SLIDE_WINDOW, SLIDE_STEP).alias("w"), "event_type"
         )
         .agg(F.count("*").alias("cnt"))
     )
@@ -257,6 +261,17 @@ _N_SHARDS = 8
 _SHUFFLE_SALT = "shard0"
 
 
+def shard_assignment() -> tuple[Column, Column]:
+    """THE training-shard assignment of a doc_id: its shuffle key
+    md5(doc_id || _SHUFFLE_SALT) and its shard, the key's first 32
+    bits mod _N_SHARDS. The layout key, its writers
+    (sources/files.py), the shard-balance audit and the streaming
+    publisher all call this, so a doc lands in the same shard however
+    it is written or audited."""
+    key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(_SHUFFLE_SALT)))
+    return key, F.conv(F.substring(key, 1, 8), 16, 10).cast("long") % _N_SHARDS
+
+
 def train_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global shuffle + sharding of the corpus for
     training output: every doc gets a pseudo-random but reproducible
@@ -270,12 +285,8 @@ def train_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard sorts independently and writes one training file — the
     classic shuffle-shard-write layout; no global sort ever happens."""
     docs = load_table(spark, sf_dir, "documents")
-    key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(_SHUFFLE_SALT)))
-    keyed = docs.select(
-        "doc_id",
-        key.alias("_k"),
-        (F.conv(F.substring(key, 1, 8), 16, 10).cast("long") % _N_SHARDS).alias("shard"),
-    )
+    key, shard = shard_assignment()
+    keyed = docs.select("doc_id", key.alias("_k"), shard.alias("shard"))
     w = Window.partitionBy("shard").orderBy("_k", "doc_id")
     return keyed.select(
         "doc_id", "shard", F.row_number().over(w).cast("long").alias("pos")
@@ -1124,9 +1135,11 @@ def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def event_day_inventory(events: DataFrame) -> DataFrame:
     """THE (event_type, day) ingest-inventory grid: row/byte counters
     per cell. One shared derivation for the batch planner
-    (compaction_plan), the streaming monitor (stream_file_inventory),
-    and the executor (write_compacted_files) — the three can never
-    disagree on what a "file" weighs."""
+    (compaction_plan), the executor (write_compacted_files) and the
+    streaming monitor, which runs this function on the event stream in
+    complete/update mode (decomposable count/sum, so micro-batches
+    merge exactly and state is the calendar x type grid) — the three
+    can never disagree on what a "file" weighs."""
     return events.groupBy(
         "event_type", F.date_trunc("day", "ts").cast("date").alias("d")
     ).agg(
@@ -1230,8 +1243,8 @@ def vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vacuum_sweep(inv: DataFrame) -> DataFrame:
     """Retention rollup from a (event_type, d, n_rows, bytes)
     inventory frame — shared by the batch planner (vacuum_plan) and
-    the streaming small-files monitor (streaming/monitor.py::
-    stream_file_inventory feeds exactly converged inputs), the same
+    the streaming small-files monitor (event_day_inventory run on the
+    stream feeds exactly converged inputs), the same
     one-derivation rule as compaction_bins: the live "what would a
     vacuum reclaim right now" dashboard can never disagree with the
     nightly sweep."""
@@ -1268,10 +1281,11 @@ def lake_file_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-files without retuning a constant.
 
     Not in the reference (SURVEY.md §2.9); lake-operations extension.
-    The streaming twin is streaming/monitor.py::stream_vacuum_monitor —
-    the SAME lake_file_verdicts_from_inventory finisher read over the
-    live stream_file_inventory state, so the dashboard's verdicts can
-    never disagree with the nightly plan.
+    The streaming twin is the SAME lake_file_verdicts_from_inventory
+    finisher read over the live state of event_day_inventory run on the
+    event stream, so the dashboard's verdicts can never disagree with
+    the nightly plan. The max-day anchor and per-type means recompute
+    per read over the inventory grid only, never event rows.
 
     Shape: one map-side-combined scan collapse to the calendar-bounded
     inventory, then a broadcast ≤|event_type|-row totals join and a
@@ -1284,7 +1298,7 @@ def lake_file_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lake_file_verdicts_from_inventory(inv: DataFrame) -> DataFrame:
     """Verdict derivation from a (event_type, d, n_rows, bytes)
     inventory frame — shared by the batch key (lake_file_verdicts) and
-    the streaming monitor read (stream_vacuum_monitor), the same
+    the streaming monitor's read of the live inventory, the same
     one-derivation rule as compaction_bins / vacuum_sweep."""
     mx = inv.agg(F.max("d").alias("max_d"))
     # Per-type totals via a window PARTITIONED by event_type (frame =
@@ -1378,13 +1392,12 @@ def shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shard_doc_counts(docs: DataFrame) -> DataFrame:
     """THE per-shard (n_docs, n_tokens) registers: one shared
     derivation for the batch audit (shard_balance_report) and the
-    streaming monitor (streaming/monitor.py::stream_shard_balance) —
-    decomposable count/sum on the SAME md5-bucket assignment
-    expression as train_shard_shuffle, so the live view, the nightly
-    audit, and the layout itself can never disagree on which shard a
-    doc belongs to."""
-    key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(_SHUFFLE_SALT)))
-    shard = (F.conv(F.substring(key, 1, 8), 16, 10).cast("long") % _N_SHARDS)
+    streaming monitor, which runs this function on the doc stream in
+    complete/update mode — decomposable count/sum on the SAME
+    shard_assignment as train_shard_shuffle, so the live view, the
+    nightly audit, and the layout itself can never disagree on which
+    shard a doc belongs to."""
+    _, shard = shard_assignment()
     return docs.select(
         shard.alias("shard"),
         F.size(fx.tokenize_ws()).cast("long").alias("toks"),

@@ -133,16 +133,16 @@ def approx_percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def histogram_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of events.value (width 10): per bucket, row
     count and exact sum (value quantized to e6 integer units pre-sum).
-    The streaming twin is streaming/monitor.py::stream_value_histogram
-    — the SAME histogram_registers derivation maintained at ingest."""
+    The streaming twin is the SAME histogram_registers derivation run
+    on the event stream in complete/update mode."""
     events = load_table(spark, sf_dir, "events")
     return histogram_from_registers(histogram_registers(events))
 
 
 def histogram_registers(events: DataFrame) -> DataFrame:
     """THE per-bucket (n, _sum_e6) registers: one shared derivation for
-    the batch key (histogram_value) and the streaming monitor
-    (stream_value_histogram) — decomposable count/sum on the same
+    the batch key (histogram_value) and the streaming monitor (this
+    function on a stream) — decomposable count/sum on the same
     width-10 bucket expression, so the live histogram and the nightly
     one can never disagree on binning or quantization."""
     v_e6 = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")

@@ -20,7 +20,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkproj_spark import functions as fx
-from flinkproj_spark.operators.dedup import md5_long
 from flinkproj_spark.sources.tables import fan_out, load_table
 
 _WORDS_SQL = "list_filter(string_split(text, ' '), w -> w != '')"
@@ -233,6 +232,9 @@ def positional_shingle_hashes(words: Column) -> Column:
     MinHash signatures are affine minima over it (min over the
     positional multiset == min over the distinct set), which is what
     lets one shared scan feed both strategies."""
+    # function-local: dedup composes text's ORACLE at import time
+    from flinkproj_spark.operators.dedup import md5_long
+
     n = F.size(words)
     m = F.greatest(n - F.lit(2), F.lit(0))
     pairs = F.zip_with(
@@ -679,14 +681,13 @@ BPE_MERGES = [
 BPE_VOCAB = list("abcdefghiklmnoprstuwy") + [a + b for a, b in BPE_MERGES]
 
 
-def bpe_id_expr(text: Column | str = "text") -> Column:
-    """The whole encode as ONE in-row Column: lowercase → word/char
-    symbol string → the BPE_MERGES replace chain → BPE_VOCAB id lookup
-    (-1 = OOV). Shared by the batch stage (_bpe_ids) and the streaming
-    twin (streaming/curate.py::stream_bpe_encode) so the two can never
-    drift."""
-    c = F.col(text) if isinstance(text, str) else text
-    words = fx.tokenize_ws(F.lower(c))
+def bpe_id_expr() -> Column:
+    """The whole encode of `text` as ONE in-row Column: lowercase →
+    word/char symbol string → the BPE_MERGES replace chain → BPE_VOCAB
+    id lookup (-1 = OOV). Shared by the batch stage (_bpe_ids) and the
+    streaming twin (streaming/curate.py::stream_bpe_encode) so the two
+    can never drift."""
+    words = fx.tokenize_ws(F.lower(F.col("text")))
     word_syms = F.transform(
         words, lambda w: F.array_join(F.split(w, "(?!^)"), "||")
     )

@@ -1,15 +1,3 @@
-from flinkproj_spark.plans.checks import (
-    executed_plan,
-    formatted_plan,
-    assert_broadcast_join,
-    assert_no_python_eval,
-    assert_pushed_filters,
-)
+from flinkproj_spark.plans.checks import executed_plan, assert_no_python_eval
 
-__all__ = [
-    "executed_plan",
-    "formatted_plan",
-    "assert_broadcast_join",
-    "assert_no_python_eval",
-    "assert_pushed_filters",
-]
+__all__ = ["executed_plan", "assert_no_python_eval"]

@@ -1,10 +1,8 @@
-"""Physical-plan inspection helpers — the `.explain("formatted")`
-feedback loop as assertable code.
-
-These are the scale-survival invariants (SURVEY.md §4, task mandate):
-broadcast joins stay broadcast, predicates reach the parquet scan,
-hot paths never fall back to row-at-a-time Python. Used by tests and
-available to users auditing their own compositions.
+"""Physical-plan inspection helpers — the `.explain()` feedback loop
+as assertable code: the executed plan as a string, and the
+scale-survival invariant (SURVEY.md §4) that hot paths never fall
+back to row-at-a-time Python. Used by tests and available to users
+auditing their own compositions.
 """
 
 from __future__ import annotations
@@ -17,22 +15,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def formatted_plan(df: DataFrame) -> str:
-    """explain('formatted') output — includes PushedFilters / ReadSchema
-    per scan node."""
-    return df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
-def assert_broadcast_join(df: DataFrame) -> None:
-    """The dimension side must be broadcast — a SortMergeJoin here means
-    the fact stream shuffles for enrichment (fatal at 100 TB)."""
-    plan = executed_plan(df)
-    if "BroadcastHashJoin" not in plan and "BroadcastNestedLoopJoin" not in plan:
-        raise AssertionError(f"no broadcast join in plan:\n{plan}")
-
-
 def assert_no_python_eval(df: DataFrame) -> None:
     """No row-at-a-time or Arrow Python eval in the plan (Pandas UDF
     nodes like MapInPandas are allowed only where declared)."""
@@ -41,17 +23,3 @@ def assert_no_python_eval(df: DataFrame) -> None:
         if node in plan:
             raise AssertionError(f"{node} found in plan:\n{plan}")
 
-
-def assert_pushed_filters(df: DataFrame, *columns: str) -> None:
-    """Each named column must appear in some scan's PushedFilters —
-    i.e. the predicate reached the parquet reader."""
-    plan = formatted_plan(df)
-    pushed = [
-        line.split("PushedFilters:")[1]
-        for line in plan.splitlines()
-        if "PushedFilters:" in line
-    ]
-    blob = " ".join(pushed)
-    for col in columns:
-        if col not in blob:
-            raise AssertionError(f"filter on {col!r} not pushed; pushed: {blob}")

@@ -29,6 +29,7 @@ from flinkproj_spark.functions import cache_scope
 from flinkproj_spark.streaming.warehouse import _fs_and_path
 
 UPSERT_HASH_BUCKETS = 16
+TABLE_BUCKETS = 8  # write_bucketed's bucket count: co-bucketed tables must agree
 # the reference's doc id opens with its window's max event time,
 # `yyyy-MM-dd_HH:mm:ss` (DataReport.java:181)
 _MINUTE_KEY = r"^\d{4}-\d{2}-\d{2}_\d{2}:\d{2}"
@@ -122,18 +123,11 @@ def write_partitioned(df: DataFrame, path: str, *partition_cols: str) -> None:
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 8,
-    sort: bool = True,
-) -> None:
-    """Bucketed managed table: rows are hash-distributed into n_buckets
-    files by bucket_col at write time. Two tables bucketed the same way
-    join with ZERO exchanges (and zero sorts if sorted); the shuffle is
-    paid once at ingest instead of per query."""
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.saveAsTable(table)
+def write_bucketed(df: DataFrame, table: str, bucket_col: str) -> None:
+    """Bucketed managed table: rows are hash-distributed into
+    TABLE_BUCKETS files by bucket_col and sorted by it at write time.
+    Two tables bucketed this way join with ZERO exchanges and zero
+    sorts; the shuffle is paid once at ingest instead of per query."""
+    df.write.mode("overwrite").format("parquet").bucketBy(
+        TABLE_BUCKETS, bucket_col
+    ).sortBy(bucket_col).saveAsTable(table)

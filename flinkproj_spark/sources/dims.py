@@ -22,10 +22,10 @@ AREA_HASH: dict[str, str] = {
 }
 
 
-def dim_area(spark: SparkSession, area_hash: dict[str, str] | None = None) -> DataFrame:
-    """country→area dimension: invert {area: "C1,C2"} by exploding the
-    comma list. 7 rows for the reference hash; always broadcast-sized."""
-    rows = [(a, cs) for a, cs in (area_hash or AREA_HASH).items()]
+def dim_area(spark: SparkSession) -> DataFrame:
+    """country→area dimension: invert AREA_HASH's {area: "C1,C2"} by
+    exploding the comma list. 7 rows; always broadcast-sized."""
+    rows = list(AREA_HASH.items())
     raw = spark.createDataFrame(rows, "area string, countries string")
     return _invert(raw)
 

@@ -25,18 +25,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+MAX_FILES_PER_TRIGGER = 16  # files one micro-batch of a file stream reads
+TARGET_FILE_BYTES = 128 * 1024 * 1024  # compact_small_files' output size
+ZORDER_FILES = 8  # files write_zorder_layout cuts the curve into
+
 
 def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str,
-    header: bool = True,
-    **options: str,
+    spark: SparkSession, path: str, schema: StructType | str, **options: str
 ) -> DataFrame:
-    """Batch CSV scan with a declared schema (never inferred)."""
+    """Batch CSV scan of headered files with a declared schema (never
+    inferred)."""
     return (
         spark.read.schema(schema)
-        .options(header=str(header).lower(), mode="PERMISSIVE", **options)
+        .options(header="true", mode="PERMISSIVE", **options)
         .csv(path)
     )
 
@@ -61,47 +62,39 @@ def read_jsonl(
 
 
 def stream_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str,
-    max_files_per_trigger: int = 16,
-    **options: str,
+    spark: SparkSession, path: str, schema: StructType | str, **options: str
 ) -> DataFrame:
-    """Streaming JSON-lines directory source, bounded micro-batches."""
+    """Streaming JSON-lines directory source, micro-batches bounded by
+    MAX_FILES_PER_TRIGGER."""
     return (
         spark.readStream.schema(schema)
-        .options(maxFilesPerTrigger=str(max_files_per_trigger), **options)
+        .options(maxFilesPerTrigger=str(MAX_FILES_PER_TRIGGER), **options)
         .json(path)
     )
 
 
-def parse_xml_column(
-    df: DataFrame, col: str, schema: str, out: str = "xml"
-) -> DataFrame:
-    """Parse an XML-string column with a declared schema (Spark 4's
-    built-in from_xml — expression-level, codegen-friendly, no external
-    package). The wire twin of the pipelines' from_json edge for
-    XML-framed feeds; malformed fragments parse to all-null structs,
-    so a null-check on any required field dead-letters them exactly
-    like the JSON path."""
+def parse_xml_column(df: DataFrame, col: str, schema: str) -> DataFrame:
+    """Parse an XML-string column into an `xml` struct column with a
+    declared schema (Spark 4's built-in from_xml — expression-level,
+    codegen-friendly, no external package). The wire twin of the
+    pipelines' from_json edge for XML-framed feeds; malformed
+    fragments parse to all-null structs, so a null-check on any
+    required field dead-letters them exactly like the JSON path."""
     from pyspark.sql import functions as F
 
-    return df.withColumn(out, F.from_xml(F.col(col), schema))
+    return df.withColumn("xml", F.from_xml(F.col(col), schema))
 
 
 def read_xml_lines(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    out: str = "xml",
-    **options: str,
+    spark: SparkSession, path: str, schema: str, **options: str
 ) -> DataFrame:
     """Batch scan of line-framed XML records (one document per line —
     the streaming-friendly framing): read as text, parse per-line with
-    from_xml. For multi-line documents use a real rowTag-based reader;
-    line framing is what a Kafka-style wire carries."""
+    from_xml into `xml`. For multi-line documents use a real
+    rowTag-based reader; line framing is what a Kafka-style wire
+    carries."""
     raw = spark.read.options(**options).text(path)
-    return parse_xml_column(raw, "value", schema, out)
+    return parse_xml_column(raw, "value", schema)
 
 
 def read_orc(spark: SparkSession, path: str, **options: str) -> DataFrame:
@@ -112,17 +105,13 @@ def read_orc(spark: SparkSession, path: str, **options: str) -> DataFrame:
 
 
 def stream_orc(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str,
-    max_files_per_trigger: int = 16,
-    **options: str,
+    spark: SparkSession, path: str, schema: StructType | str, **options: str
 ) -> DataFrame:
     """Streaming ORC directory source (file streams always need a
-    declared schema), bounded micro-batches."""
+    declared schema), micro-batches bounded by MAX_FILES_PER_TRIGGER."""
     return (
         spark.readStream.schema(schema)
-        .options(maxFilesPerTrigger=str(max_files_per_trigger), **options)
+        .options(maxFilesPerTrigger=str(MAX_FILES_PER_TRIGGER), **options)
         .orc(path)
     )
 
@@ -148,30 +137,25 @@ def ingest_to_parquet(
     w.parquet(out_path)
 
 
-def write_training_shards(
-    docs: DataFrame, out_path: str, n_shards: int = 8, salt: str = "shard0"
-) -> None:
+def write_training_shards(docs: DataFrame, out_path: str) -> None:
     """Materialize the train_shard_shuffle layout: hash-partition the
-    corpus into `n_shards` deterministic pseudo-random shards, sort each
-    shard by its shuffle key, and write ONE file per shard
-    (`shard=<k>/part-*.parquet`), so a trainer streams uniformly
-    shuffled data by reading shard files front to back.
+    corpus into sampling._N_SHARDS deterministic pseudo-random shards
+    (sampling.shard_assignment), sort each shard by its shuffle key,
+    and write ONE file per shard (`shard=<k>/part-*.parquet`), so a
+    trainer streams uniformly shuffled data by reading shard files
+    front to back.
 
     Scale shape: repartition on the shard column (one hash shuffle) +
     sortWithinPartitions (in-partition sort, never global) + partitioned
-    write. At 100 TB raise n_shards to O(10k): each shard sorts and
+    write. At 100 TB raise _N_SHARDS to O(10k): each shard sorts and
     writes independently, and file size stays at the 1-10 GB sweet spot.
     """
-    import pyspark.sql.functions as F
+    from flinkproj_spark.operators.sampling import _N_SHARDS, shard_assignment
 
-    key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(salt)))
+    key, shard = shard_assignment()
     (
-        docs.withColumn("_k", key)
-        .withColumn(
-            "shard",
-            (F.conv(F.substring("_k", 1, 8), 16, 10).cast("long") % n_shards),
-        )
-        .repartition(n_shards, "shard")
+        docs.withColumns({"_k": key, "shard": shard})
+        .repartition(_N_SHARDS, "shard")
         # lead with the partition column: FileFormatWriter requires rows
         # sorted by partition columns and would otherwise insert its own
         # (non-stable) sort, scrambling the in-shard order
@@ -183,9 +167,7 @@ def write_training_shards(
     )
 
 
-def write_tokenized_shards(
-    spark, sf_dir: str, out_path: str, n_shards: int = 8
-) -> None:
+def write_tokenized_shards(spark, sf_dir: str, out_path: str) -> None:
     """The training pipeline's last mile: encode every document with
     the fixed BPE merge table (operators/text.py::bpe_apply's shared
     stage) and write the (doc_id, ids) rows through the deterministic
@@ -196,7 +178,7 @@ def write_tokenized_shards(
     from flinkproj_spark.operators.text import _bpe_ids
 
     ids = _bpe_ids(spark, sf_dir).drop("_nc")
-    write_training_shards(ids, out_path, n_shards)
+    write_training_shards(ids, out_path)
 
 
 def _manifest_terms(df: DataFrame):
@@ -217,7 +199,7 @@ def _manifest_terms(df: DataFrame):
         n_tok = F.size("ids").cast("long")
     else:
         payload = F.col("text")
-        n_tok = fx.token_count("text").cast("long")
+        n_tok = fx.token_count().cast("long")
     fp = F.conv(
         F.substring(
             F.md5(F.concat_ws(":", F.col("doc_id").cast("string"), payload)),
@@ -283,18 +265,12 @@ def corpus_receipt(df: DataFrame) -> DataFrame:
     )
 
 
-def write_zorder_layout(
-    df: DataFrame,
-    out_path: str,
-    col_x: str,
-    col_y,
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
+def write_zorder_layout(df: DataFrame, out_path: str, col_x: str, col_y) -> None:
     """Materialize a Z-order (Morton-curve) data-skipping layout:
-    interleave the low bits of two dimensions (functions.morton2),
+    interleave the low screens._Z_BITS bits of two dimensions
+    (functions.morton2, the curve the `zorder_layout` audit scores),
     range-partition the rows by curve position, sort each partition by
-    it, and write one parquet file per range. Rows close in BOTH
+    it, and write one parquet file per range (ZORDER_FILES). Rows close in BOTH
     dimensions land in the same file, so every file's min-max
     statistics span a narrow rectangle and a predicate on EITHER
     column prunes most files — the layout the `zorder_layout` query
@@ -304,7 +280,7 @@ def write_zorder_layout(
     balanced boundaries (one range exchange — the same cost any
     sorted write pays), the sort is per-partition (never global), and
     the curve column is dropped before the write so the layout is
-    invisible to readers. At 100 TB raise n_files so each file stays
+    invisible to readers. At 100 TB raise ZORDER_FILES so each file stays
     in the 1-10 GB sweet spot; the boundaries stay balanced because
     they come from sampling, not fixed splits.
 
@@ -313,11 +289,12 @@ def write_zorder_layout(
     import pyspark.sql.functions as F
 
     from flinkproj_spark import functions as fx
+    from flinkproj_spark.operators.screens import _Z_BITS
 
     y = F.col(col_y) if isinstance(col_y, str) else col_y
     (
-        df.withColumn("_z", fx.morton2(F.col(col_x), y, bits))
-        .repartitionByRange(n_files, "_z")
+        df.withColumn("_z", fx.morton2(F.col(col_x), y, _Z_BITS))
+        .repartitionByRange(ZORDER_FILES, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
         .write.mode("overwrite")
@@ -329,11 +306,10 @@ def compact_small_files(
     spark: SparkSession,
     path: str,
     out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
     sort_cols: tuple[str, ...] = (),
 ) -> int:
     """Lake maintenance: rewrite a parquet directory's many small files
-    into ~target-size files, returning the file count written. Small
+    into ~TARGET_FILE_BYTES files, returning the file count written. Small
     files are the silent scan killer at 100 TB — per-file open/footer
     costs dominate, and a 1000-executor stage over 10-KB files spends
     its time in scheduling, not IO.
@@ -351,7 +327,7 @@ def compact_small_files(
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
     total = fs.getContentSummary(jvm_path).getLength()
-    n_files = max(1, math.ceil(total / target_file_bytes))
+    n_files = max(1, math.ceil(total / TARGET_FILE_BYTES))
     df = spark.read.parquet(path)
     if sort_cols:
         df = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(

@@ -19,6 +19,7 @@ LEVELS = ["A", "A+", "B", "C", "D"]                        # kafkaProducer.java:
 SCORES = [0.1, 0.2, 0.3, 0.5, 0.8]                         # kafkaProducer.java:64
 AUDIT_TYPES = ["shelf", "unshelf", "black", "chlid_shelf", "child_unshelf"]
 AUDIT_AREAS = ["AREA_US", "AREA_CT", "AREA_AR", "AREA_IN", "AREA_ID"]
+ROWS_PER_SECOND = 10  # rate of each generator stream
 
 
 def _pick(pool: list, key) -> F.Column:
@@ -61,17 +62,17 @@ def auditlog_record(v: F.Column, ts: F.Column) -> F.Column:
     )
 
 
-def alldata_stream(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
+def alldata_stream(spark: SparkSession) -> DataFrame:
     """allData-style JSON lines riding the rate source (clean job input)."""
-    rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
+    rate = spark.readStream.format("rate").option("rowsPerSecond", ROWS_PER_SECOND).load()
     return rate.select(
         alldata_record(F.col("value"), F.col("timestamp")).alias("value")
     )
 
 
-def auditlog_stream(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
+def auditlog_stream(spark: SparkSession) -> DataFrame:
     """auditLog-style JSON lines riding the rate source (report job input)."""
-    rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
+    rate = spark.readStream.format("rate").option("rowsPerSecond", ROWS_PER_SECOND).load()
     return rate.select(
         auditlog_record(F.col("value"), F.col("timestamp")).alias("value")
     )

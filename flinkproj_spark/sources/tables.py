@@ -115,10 +115,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_oracle_views(con, sf_dir: str) -> None:
     """Register every corpus table as a view of its parquet file on a
     DuckDB connection `con` — the layout the oracle SQL reads."""

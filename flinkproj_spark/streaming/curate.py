@@ -27,6 +27,10 @@ from pyspark.sql import functions as F
 from flinkproj_spark import functions as fx
 from flinkproj_spark.operators.e2e import curate_gate_cond
 
+# Event-time horizon of every ingest gate's within-stream dedup state
+# (here and streaming/multimodal.py::stream_phash_gate).
+INGEST_HORIZON = "1 hour"
+
 
 def curate_gate(docs: DataFrame) -> DataFrame:
     """The stateless filter stage: the batch funnel's own
@@ -38,21 +42,19 @@ def curate_gate(docs: DataFrame) -> DataFrame:
     )
 
 
-def stream_curate(docs: DataFrame, horizon: str = "1 hour") -> DataFrame:
+def stream_curate(docs: DataFrame) -> DataFrame:
     """Streaming curation: quality gate → exact content dedup within the
     watermark horizon. Keeps the first arrival of each normalized
     content; re-deliveries and byte-identical near-in-time copies drop.
 
     Input needs columns (doc_id, ts, text); all columns pass through
     plus content_fp."""
-    return curate_gate(docs).withWatermark("ts", horizon).dropDuplicatesWithinWatermark(
+    return curate_gate(docs).withWatermark("ts", INGEST_HORIZON).dropDuplicatesWithinWatermark(
         ["content_fp"]
     )
 
 
-def stream_snapshot_dedup(
-    new_docs: DataFrame, base_docs: DataFrame, horizon: str = "1 hour"
-) -> DataFrame:
+def stream_snapshot_dedup(new_docs: DataFrame, base_docs: DataFrame) -> DataFrame:
     """Streaming twin of operators/curation.py::cross_snapshot_dedup —
     continuous ingest deduped against the existing corpus: a
     stream-static LEFT ANTI join on the content md5 drops any incoming
@@ -67,14 +69,12 @@ def stream_snapshot_dedup(
     base_fps = base_docs.select(F.md5("text").alias("content_fp")).distinct()
     incoming = new_docs.withColumn("content_fp", F.md5("text"))
     fresh = incoming.join(base_fps, "content_fp", "left_anti")
-    return fresh.withWatermark("ts", horizon).dropDuplicatesWithinWatermark(
+    return fresh.withWatermark("ts", INGEST_HORIZON).dropDuplicatesWithinWatermark(
         ["content_fp"]
     )
 
 
-def stream_contamination_flags(
-    new_docs: DataFrame, eval_docs: DataFrame, horizon: str = "1 hour"
-) -> DataFrame:
+def stream_contamination_flags(new_docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Streaming twin of operators/dedup.py::decontaminate — the
     quarantine channel: every incoming doc that shares a word
     3-shingle with the (static) eval set is emitted exactly once, to
@@ -91,20 +91,20 @@ def stream_contamination_flags(
     stream needs (doc_id, ts, text)."""
     ew = fx.tokenize_ws()
     eval_hashes = (
-        eval_docs.filter(F.size(ew) >= 3)
-        .select(F.explode(fx.shingles(ew, 3)).alias("s"))
+        eval_docs.filter(F.size(ew) >= fx.SHINGLE_WORDS)
+        .select(F.explode(fx.shingles(ew)).alias("s"))
         .select(F.md5("s").alias("h"))
         .distinct()
     )
     words = fx.tokenize_ws()
     exploded = (
-        new_docs.filter(F.size(words) >= 3)
-        .select("doc_id", "ts", F.explode(fx.shingles(words, 3)).alias("s"))
+        new_docs.filter(F.size(words) >= fx.SHINGLE_WORDS)
+        .select("doc_id", "ts", F.explode(fx.shingles(words)).alias("s"))
         .select("doc_id", "ts", F.md5("s").alias("h"))
     )
     flagged = exploded.join(F.broadcast(eval_hashes), "h", "left_semi")
     return (
-        flagged.withWatermark("ts", horizon)
+        flagged.withWatermark("ts", INGEST_HORIZON)
         .dropDuplicatesWithinWatermark(["doc_id"])
         .select("doc_id", "ts")
     )

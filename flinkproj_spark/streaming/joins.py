@@ -26,82 +26,73 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flinkproj_spark.operators.sampling import SLIDE_STEP, SLIDE_WINDOW
+from flinkproj_spark.streaming.pipelines import WATERMARK
 
-def stream_stream_join(
-    impressions: DataFrame,
-    clicks: DataFrame,
-    max_delay: str = "10 minutes",
-) -> DataFrame:
+MAX_CLICK_DELAY = "10 minutes"  # attribution window after an impression
+
+
+def _attribution_join(impressions: DataFrame, clicks: DataFrame, how: str) -> DataFrame:
+    imp = impressions.withWatermark("imp_ts", MAX_CLICK_DELAY)
+    clk = clicks.withWatermark("click_ts", MAX_CLICK_DELAY)
+    return imp.join(
+        clk,
+        (imp["ad_id"] == clk["ad_id"])
+        & (clk["click_ts"] >= imp["imp_ts"])
+        & (clk["click_ts"] <= imp["imp_ts"] + F.expr(f"INTERVAL {MAX_CLICK_DELAY}")),
+        how,
+    ).select(imp["ad_id"], "imp_ts", "click_ts")
+
+
+def stream_stream_join(impressions: DataFrame, clicks: DataFrame) -> DataFrame:
     """Inner join of two event streams on ad_id where the click happens
-    within [0, max_delay] after its impression — the canonical
+    within [0, MAX_CLICK_DELAY] after its impression — the canonical
     impression/click attribution join. Both watermarks plus the interval
     condition bound the join state on both sides.
 
     Inputs need columns (ad_id, imp_ts) and (ad_id, click_ts)."""
-    imp = impressions.withWatermark("imp_ts", max_delay)
-    clk = clicks.withWatermark("click_ts", max_delay)
-    return imp.join(
-        clk,
-        (imp["ad_id"] == clk["ad_id"])
-        & (clk["click_ts"] >= imp["imp_ts"])
-        & (clk["click_ts"] <= imp["imp_ts"] + F.expr(f"INTERVAL {max_delay}")),
-    ).select(imp["ad_id"], "imp_ts", "click_ts")
+    return _attribution_join(impressions, clicks, "inner")
 
 
-def stream_stream_left_join(
-    impressions: DataFrame,
-    clicks: DataFrame,
-    max_delay: str = "10 minutes",
-) -> DataFrame:
+def stream_stream_left_join(impressions: DataFrame, clicks: DataFrame) -> DataFrame:
     """LEFT OUTER variant of the attribution join: every impression
     emits — matched rows as soon as the click arrives, UNMATCHED ones
     with a null click_ts once the watermark proves no click can still
-    come (impression state is held exactly until imp_ts + max_delay
-    passes the watermark, then emitted-null and evicted). The
-    unattributed channel is the half a funnel dashboard actually
-    monitors; an inner join silently drops it.
+    come (impression state is held exactly until imp_ts +
+    MAX_CLICK_DELAY passes the watermark, then emitted-null and
+    evicted). The unattributed channel is the half a funnel dashboard
+    actually monitors; an inner join silently drops it.
 
     Same state bound as the inner join — the outer behavior changes
     only WHEN unmatched rows leave the store, not how much state is
     held. Inputs need (ad_id, imp_ts) and (ad_id, click_ts)."""
-    imp = impressions.withWatermark("imp_ts", max_delay)
-    clk = clicks.withWatermark("click_ts", max_delay)
-    return imp.join(
-        clk,
-        (imp["ad_id"] == clk["ad_id"])
-        & (clk["click_ts"] >= imp["imp_ts"])
-        & (clk["click_ts"] <= imp["imp_ts"] + F.expr(f"INTERVAL {max_delay}")),
-        "left_outer",
-    ).select(imp["ad_id"], "imp_ts", "click_ts")
+    return _attribution_join(impressions, clicks, "left_outer")
 
 
-def stream_dedup(events: DataFrame, horizon: str = "40 seconds") -> DataFrame:
+def stream_dedup(events: DataFrame) -> DataFrame:
     """Streaming exact deduplication on event_id: keeps the first
     arrival of each id, drops re-deliveries within the watermark
-    horizon; state for an id is evicted once the watermark passes it
-    (duplicates straggling beyond the horizon are an at-least-once
-    tail, same contract as the reference's idempotent-upsert sink K3).
+    horizon (the report pipeline's WATERMARK); state for an id is
+    evicted once the watermark passes it (duplicates straggling beyond
+    the horizon are an at-least-once tail, same contract as the
+    reference's idempotent-upsert sink K3).
 
     Input needs columns (event_id, ts ...); all columns pass through."""
-    return events.withWatermark("ts", horizon).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
 
-def stream_sliding_counts(
-    events: DataFrame,
-    window: str = "30 seconds",
-    slide: str = "10 seconds",
-    horizon: str = "40 seconds",
-) -> DataFrame:
+def stream_sliding_counts(events: DataFrame) -> DataFrame:
     """Hopping-window per-type counts over a stream — the streaming twin
-    of sampling.sliding_window_agg (each event counted in
-    window/slide = 3 overlapping windows).
+    of sampling.sliding_window_agg, on its SLIDE_WINDOW/SLIDE_STEP
+    (each event counted in 3 overlapping windows), under the report
+    pipeline's WATERMARK.
 
     Input needs columns (ts, event_type)."""
     return (
-        events.withWatermark("ts", horizon)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", SLIDE_WINDOW, SLIDE_STEP).alias("w"), "event_type")
         .agg(F.count("*").alias("cnt"))
         .select(
             F.col("w.start").alias("win_start"),

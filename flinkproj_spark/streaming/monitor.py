@@ -148,85 +148,6 @@ def stream_quantile_sketch(orders: DataFrame) -> DataFrame:
     )
 
 
-def stream_file_inventory(events: DataFrame) -> DataFrame:
-    """Streaming small-files inventory — the ingest-time feed of
-    operators/sampling.py::compaction_plan. Each event folds into its
-    (event_type, day) cell's row/byte counters: decomposable sums, so
-    micro-batch merging is exact and state is the calendar x type grid
-    forever (geometry-sized, no watermark — the stream_cms_sketch
-    argument, here for layout monitoring). Run in complete/update
-    mode; the inventory is sampling.event_day_inventory ITSELF and
-    reading the live compaction plan is the SAME
-    sampling.compaction_bins the batch planner uses (pinned equal in
-    tests/test_streaming_ext.py), so the "should we compact yet"
-    dashboard can never disagree with the nightly planner."""
-    from flinkproj_spark.operators.sampling import event_day_inventory
-
-    return event_day_inventory(events)
-
-
-def stream_value_histogram(events: DataFrame) -> DataFrame:
-    """Streaming value-histogram registers — the ingest-time twin of
-    operators/stats.py::histogram_value. Each event folds (1,
-    value_e6) into its width-10 bucket's (n, _sum_e6) cell via the
-    SHARED histogram_registers derivation: decomposable count/sum, so
-    micro-batch merging is exact in any arrival order and state is one
-    row per occupied bucket forever — value-range-sized, no watermark
-    (the stream_file_inventory argument, here for the live value-
-    distribution dashboard an anomaly responder reads instead of
-    waiting for the nightly profile). Run in complete/update mode;
-    read with the SAME stats.histogram_from_registers finisher (pinned
-    equal to the batch key in tests/test_streaming_ext.py). Input
-    stream needs (value)."""
-    from flinkproj_spark.operators.stats import histogram_registers
-
-    return histogram_registers(events)
-
-
-def stream_shard_balance(docs: DataFrame) -> DataFrame:
-    """Streaming shard-balance registers — the ingest-time feed of
-    operators/sampling.py::shard_balance_report. Each incoming doc
-    folds (1, token_count) into its shard's (n_docs, n_tokens) cell:
-    decomposable sums on the SHARED shard_doc_counts derivation (the
-    same md5-bucket expression train_shard_shuffle lays files out
-    with), so micro-batch merging is exact in any arrival order and
-    state is _N_SHARDS rows of two longs forever — geometry-sized, no
-    watermark (the stream_file_inventory argument, here for the
-    training-shard dashboard: a hot shard shows up WHILE the corpus is
-    being written, not at the pre-freeze audit). Run in
-    complete/update mode; read the live skew verdict with the SAME
-    sampling.shard_balance_from_counts the batch audit uses (pinned
-    equal in tests/test_streaming_ext.py). Input stream needs
-    (doc_id, text)."""
-    from flinkproj_spark.operators.sampling import shard_doc_counts
-
-    return shard_doc_counts(docs)
-
-
-def stream_vacuum_monitor(inv_state: DataFrame) -> DataFrame:
-    """Continuous lake-maintenance verdicts — the streaming twin of
-    operators/sampling.py::lake_file_verdicts and the monitor the
-    nightly deploy/run_lake_maintenance.py job reads between runs.
-    Composes with stream_file_inventory: the streaming query maintains
-    the (event_type, day) inventory state (decomposable count/sum
-    registers, exact under any micro-batch order, calendar x type
-    sized forever); THIS function is the read side — point it at the
-    materialized state table (memory/Delta sink of the inventory
-    query) and it emits every day-file's live verdict
-    ('vacuum'/'compact'/'keep') via the SHARED
-    lake_file_verdicts_from_inventory finisher, so the live dashboard
-    and the nightly batch plan are the same derivation by
-    construction (pinned in tests/test_streaming_ext.py). The
-    max-day anchor and per-type means recompute per read over the
-    inventory grid only — never event rows — which is what makes a
-    per-trigger verdict refresh affordable at 100 TB ingest."""
-    from flinkproj_spark.operators.sampling import (
-        lake_file_verdicts_from_inventory,
-    )
-
-    return lake_file_verdicts_from_inventory(inv_state)
-
-
 def build_conformal_thresholds(spark: SparkSession, sf_dir: str) -> dict:
     """Freeze the batch conformal calibration
     (operators/screens.py::conformal_coverage_report's threshold
@@ -305,12 +226,15 @@ def stream_zonemap_monitor(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_srm_monitor(events: DataFrame, horizon: str = "40 days") -> DataFrame:
+SRM_HORIZON = "40 days"  # how long a user's first-seen state is kept
+
+
+def stream_srm_monitor(events: DataFrame) -> DataFrame:
     """Streaming sample-ratio-mismatch monitor — the ingest-time twin
     of operators/screens.py::srm_check's user-count stage. Each
     user's FIRST event admits them to their hash variant
     (dropDuplicatesWithinWatermark on user_id — state is one row per
-    user within the horizon, the experiment-population scale any SRM
+    user within SRM_HORIZON, the experiment-population scale any SRM
     monitor inherently pays), then a 2-key variant count that merges
     exactly across micro-batches. Run in complete/update mode and
     feed the two counters into the same (a−b)²·1e6/(a+b) decision the
@@ -321,7 +245,7 @@ def stream_srm_monitor(events: DataFrame, horizon: str = "40 days") -> DataFrame
     (user_id, ts)."""
     from flinkproj_spark.operators.screens import srm_variant
 
-    first_seen = events.withWatermark("ts", horizon).dropDuplicatesWithinWatermark(
+    first_seen = events.withWatermark("ts", SRM_HORIZON).dropDuplicatesWithinWatermark(
         ["user_id"]
     )
     return first_seen.select(srm_variant().alias("variant")).groupBy("variant").agg(
@@ -363,7 +287,7 @@ def stream_token_mass(docs: DataFrame) -> DataFrame:
     folds its whitespace-token count into its language's sum:
     decomposable, so micro-batch merging is exact and state is one
     long per language forever (dimension-sized, no watermark — the
-    stream_file_inventory argument, here for the data-mix dashboard).
+    stream_cms_sketch argument, here for the data-mix dashboard).
     Run in complete/update mode; reading the live quota allocation is
     the SAME sampling.token_budget_from_counts the batch allocator
     uses (pinned equal in tests/test_streaming_ext.py), so the

@@ -46,9 +46,7 @@ def _phash_with_ts(batches):
         yield out
 
 
-def stream_phash_gate(
-    new_payloads: DataFrame, base_payloads: DataFrame, horizon: str = "1 hour"
-) -> DataFrame:
+def stream_phash_gate(new_payloads: DataFrame, base_payloads: DataFrame) -> DataFrame:
     """Streaming image-admission gate — the multimodal twin of
     stream_snapshot_dedup's stream-static shape: continuous image
     ingest is admitted only if the payload's 60-bit dHash is NOT
@@ -72,7 +70,7 @@ def stream_phash_gate(
     broadcast-hinted, re-resolved per micro-batch (a compaction /
     ingest job refreshes it, same rule as stream_snapshot_dedup); the
     stream side's decode+hash is one Arrow mapInPandas stage; state is
-    one (doc_id, bool) per in-flight doc per horizon plus the dedup
+    one (doc_id, bool) per in-flight doc per INGEST_HORIZON plus the dedup
     hash set. Input stream needs (doc_id, ts, payload binary); base
     needs (doc_id, payload binary)."""
     from flinkproj_spark.operators.multimodal import (
@@ -81,6 +79,7 @@ def stream_phash_gate(
         _phash_pgm,
         phash_band_rows,
     )
+    from flinkproj_spark.streaming.curate import INGEST_HORIZON
 
     base_bands = phash_band_rows(
         base_payloads.select("doc_id", "payload")
@@ -93,7 +92,7 @@ def stream_phash_gate(
     incoming = (
         new_payloads.select("doc_id", "ts", "payload")
         .mapInPandas(_phash_with_ts, schema="doc_id long, ts timestamp, phash long")
-        .withWatermark("ts", horizon)
+        .withWatermark("ts", INGEST_HORIZON)
         .dropDuplicatesWithinWatermark(["phash"])
     )
     cand = phash_band_rows(incoming, ["doc_id", "ts"]).join(

@@ -422,18 +422,12 @@ def cluster_state_view(spark: SparkSession, state_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def stream_shard_publisher(
-    docs: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    n_shards: int = 8,
-    salt: str = "shard0",
-):
+def stream_shard_publisher(docs: DataFrame, out_dir: str, checkpoint_dir: str):
     """Continuous shard publication with a verifiable incremental
     manifest: each micro-batch of (doc_id, text|ids, ...) rows is
     hash-assigned to the SAME deterministic shards as the batch writer
-    (md5(doc_id||salt) — a doc lands in the same shard whether it
-    arrived by batch or by stream), appended under
+    (operators/sampling.py::shard_assignment — a doc lands in the same
+    shard whether it arrived by batch or by stream), appended under
     `data/epoch=<id>/shard=<k>/` (a replayed epoch overwrites its own
     directory, so the data sink is idempotent under foreachBatch's
     at-least-once contract), and the per-shard receipt — row count,
@@ -446,9 +440,10 @@ def stream_shard_publisher(
     `shard_publisher_manifest(spark, out_dir)` against the batch
     shard_manifest over the same directory: equal at every epoch
     (pinned by the convergence + replay test). The manifest merge cost
-    is O(n_shards) per batch — state never grows with history — and
+    is O(_N_SHARDS) per batch — state never grows with history — and
     the checksum is order-insensitive, so late/reordered delivery
     cannot fake or hide a row."""
+    from flinkproj_spark.operators.sampling import shard_assignment
     from flinkproj_spark.sources.files import _manifest_terms
 
     data_dir = os.path.join(out_dir, "data")
@@ -458,11 +453,7 @@ def stream_shard_publisher(
         if batch.isEmpty():
             return
         spark_b = batch.sparkSession
-        key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(salt)))
-        sharded = batch.withColumn(
-            "shard",
-            (F.conv(F.substring(key, 1, 8), 16, 10).cast("long") % n_shards),
-        )
+        sharded = batch.withColumn("shard", shard_assignment()[1])
         sharded.write.partitionBy("shard").mode("overwrite").parquet(
             os.path.join(data_dir, f"epoch={epoch_id}")
         )

@@ -44,7 +44,7 @@ def main() -> int:
     from flinkproj_spark.session import build_session
     from flinkproj_spark.sources.tables import register_oracle_views
 
-    spark = build_session("oracle_check", cpus=8)
+    spark = build_session("oracle_check")
     con = duckdb.connect()
     register_oracle_views(con, sf_dir)
 

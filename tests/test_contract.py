@@ -193,7 +193,9 @@ def test_every_engine_definition_is_referenced():
     defines (a function, class or assigned name in flinkproj_spark/)
     is referenced — as a name, an attribute or an import — somewhere in
     flinkproj_spark/, tools/, deploy/, bench.py or tests/. A name that
-    only its own definition mentions is unreached code: delete it."""
+    only its own definition mentions is unreached code: delete it. A
+    package __init__.py re-export is not a use: it only names the
+    definition again."""
     import ast
     from pathlib import Path
 
@@ -212,7 +214,7 @@ def test_every_engine_definition_is_referenced():
                 used.add(node.id)
             elif isinstance(node, ast.Attribute):
                 used.add(node.attr)
-            elif isinstance(node, ast.alias):
+            elif isinstance(node, ast.alias) and path.name != "__init__.py":
                 used.add(node.name.rsplit(".", 1)[-1])
         if not path.is_relative_to(engine):
             continue
@@ -283,6 +285,7 @@ ONE_BUILDER = {
     ("QC_WEIGHTS",): "flinkproj_spark/operators/text.py::_qc_score_exprs",
     ("DSIR_SALT",): "flinkproj_spark/operators/curation.py::dsir_bucket",
     ("SRM_SALT",): "flinkproj_spark/operators/screens.py::srm_variant",
+    ("_SHUFFLE_SALT",): "flinkproj_spark/operators/sampling.py::shard_assignment",
 }
 
 
@@ -325,3 +328,89 @@ def test_each_shared_primitive_has_one_builder():
     for path in sorted((root / "flinkproj_spark").rglob("*.py")):
         scan(ast.parse(path.read_text(), str(path)), str(path.relative_to(root)))
     assert readers == {group: {builder} for group, builder in ONE_BUILDER.items()}, readers
+
+
+#: Defaulted engine parameters that no caller outside tests/ passes a
+#: second value, and why each stays a parameter. Every other
+#: single-value tuning choice is a module constant, which a test that
+#: needs another value monkeypatches.
+SINGLE_VALUE_OPTIONS = {
+    "read_kafka_json(starting_offsets)": "deployment setting: where a job starts reading its topic",
+    "dim_area_from_jdbc(table)": "deployment setting: the live dimension's JDBC table",
+    "dim_area_from_jdbc(driver)": "deployment setting: the JDBC driver class on the cluster",
+    "dim_area_from_jdbc(options)": "deployment setting: credentials and fetch options of the store",
+    "upsert_keyed(key)": "pinned by perfbench/stream.py, whose timing wrapper passes key by position",
+    "read_jsonl(keep_corrupt)": "switch between all-null and dead-letter reads; tests/test_sources.py covers both",
+    "compact_small_files(sort_cols)": "switch between round-robin and range-sorted compaction; tests/test_sources.py covers both",
+}
+
+
+def _python_sources(root):
+    """(path, source) of every Python caller outside tests/: the engine,
+    deploy/, tools/ (with the heredoc scripts in tools/verify_all.sh),
+    bench.py and perfbench/."""
+    import re
+
+    for d in ("flinkproj_spark", "deploy", "tools", "perfbench"):
+        for path in sorted((root / d).rglob("*.py")):
+            yield path, path.read_text()
+    yield root / "bench.py", (root / "bench.py").read_text()
+    for path in sorted((root / "tools").glob("*.sh")):
+        for body in re.findall(r"<<'?EOF'?\n(.*?)\nEOF", path.read_text(), re.S):
+            yield path, body
+
+
+def test_every_engine_option_takes_two_values():
+    """A defaulted engine parameter is an option only if some caller
+    outside tests/ passes it a value other than its default (a
+    non-literal argument counts as another value). One that every
+    caller leaves at its default is a single-value tuning choice: make
+    it the module constant that owns the decision, or list it in
+    SINGLE_VALUE_OPTIONS with the reason it stays. Calls match by
+    function name, as in the dead-code guard."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    options = {}  # function name -> [(param, position or None, default dump)]
+    for path in sorted((root / "flinkproj_spark").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
+            for i, (p, d) in enumerate(zip(pos[first:], a.defaults), first):
+                options.setdefault(node.name, []).append((p.arg, i - skip, ast.dump(d)))
+            for p, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None:
+                    options.setdefault(node.name, []).append((p.arg, None, ast.dump(d)))
+
+    varied = set()
+    for path, source in _python_sources(root):
+        for call in ast.walk(ast.parse(source, str(path))):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+            for param, position, default in options.get(name, ()):
+                kw = {k.arg: k.value for k in call.keywords}
+                if param in kw:
+                    value = kw[param]
+                elif None in kw or any(isinstance(x, ast.Starred) for x in call.args):
+                    value = None  # **kwargs or *args: may carry any value
+                elif position is not None and position < len(call.args):
+                    value = call.args[position]
+                else:
+                    continue
+                if value is None or ast.dump(value) != default:
+                    varied.add(f"{name}({param})")
+
+    single = {f"{name}({p})" for name, opts in options.items() for p, _, _ in opts} - varied
+    assert single == set(SINGLE_VALUE_OPTIONS), (
+        "defaulted parameters no caller varies (make each a module constant "
+        "or list it with a reason): " + ", ".join(sorted(single - set(SINGLE_VALUE_OPTIONS)))
+        + "; stale SINGLE_VALUE_OPTIONS entries: "
+        + ", ".join(sorted(set(SINGLE_VALUE_OPTIONS) - single))
+    )

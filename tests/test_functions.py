@@ -57,7 +57,7 @@ def test_shingles_match_python_reference(spark):
     got = {
         r.id: r.sh
         for r in df.select(
-            "id", fx.shingles(fx.tokenize_ws(), 3).alias("sh")
+            "id", fx.shingles(fx.tokenize_ws()).alias("sh")
         ).collect()
     }
     for i, s in rows:

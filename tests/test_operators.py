@@ -1737,7 +1737,7 @@ def test_source_minhash_sketch_is_mergeable(spark, sf_dir):
     words = fx.tokenize_ws()
     rows = (
         docs.filter(F.size(words) >= 3)
-        .select("source", F.explode(fx.shingles(words, 3)).alias("sh"))
+        .select("source", F.explode(fx.shingles(words)).alias("sh"))
         .distinct()
         .collect()
     )
@@ -4246,6 +4246,7 @@ def test_pipeline_lake_digest_invariance_and_layout(spark, sf_dir):
 
     out_path = os.path.join(
         tempfile.gettempdir(), "flinkproj_spark_lake",
+        spark.sparkContext.applicationId,
         os.path.basename(os.path.normpath(sf_dir)),
     )
     bin_dirs = glob.glob(os.path.join(out_path, "event_type=*", "bin_id=*"))
@@ -4253,6 +4254,28 @@ def test_pipeline_lake_digest_invariance_and_layout(spark, sf_dir):
     for d in bin_dirs:
         parts = [f for f in os.listdir(d) if f.startswith("part-")]
         assert len(parts) == 1, (d, parts)
+
+
+def test_pipeline_lake_scratch_lake_is_per_application(spark, sf_dir, monkeypatch):
+    """Two sessions compacting the same corpus at once must not share
+    a scratch lake (one would read back the other's files): the lake
+    pipeline_lake writes and reads is named after its application."""
+    import os
+
+    from flinkproj_spark.operators.e2e import pipeline_lake
+    from flinkproj_spark.sources import files
+
+    written = []
+    write = files.write_compacted_files
+
+    def recording_write(spark_, sf_dir_, out_path):
+        written.append(out_path)
+        write(spark_, sf_dir_, out_path)
+
+    monkeypatch.setattr(files, "write_compacted_files", recording_write)
+    pipeline_lake(spark, sf_dir)
+    assert len(written) == 1
+    assert spark.sparkContext.applicationId in written[0].split(os.sep), written
 
 
 def test_pipeline_multimodal_funnel_invariants(spark, sf_dir):

@@ -296,8 +296,8 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
             "l_orderkey", "l_quantity")
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority")
-        write_bucketed(li, "b_lineitem", "l_orderkey", 8)
-        write_bucketed(orders, "b_orders", "o_orderkey", 8)
+        write_bucketed(li, "b_lineitem", "l_orderkey")
+        write_bucketed(orders, "b_orders", "o_orderkey")
         j = spark.table("b_lineitem").join(
             spark.table("b_orders"),
             F.col("l_orderkey") == F.col("o_orderkey"),

@@ -83,14 +83,17 @@ def test_xml_lines_parse_and_route_malformed(spark, tmp_path):
     df.unpersist()
 
 
-def test_stream_jsonl_drains_to_batch_result(spark, sf_dir, tmp_path):
+def test_stream_jsonl_drains_to_batch_result(spark, sf_dir, tmp_path, monkeypatch):
+    from flinkproj_spark.sources import files
+
+    monkeypatch.setattr(files, "MAX_FILES_PER_TRIGGER", 2)
     ev = _events(spark, sf_dir).limit(200)
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     ev.coalesce(4).write.mode("overwrite").json(src)
     q = (
-        stream_jsonl(spark, src, SCHEMA, max_files_per_trigger=2)
+        stream_jsonl(spark, src, SCHEMA)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -111,8 +114,11 @@ def test_rate_generators_are_json_line_streams(spark):
         assert df.dtypes == [("value", "string")]
 
 
-def test_orc_roundtrip_matches_parquet(spark, sf_dir, tmp_path):
+def test_orc_roundtrip_matches_parquet(spark, sf_dir, tmp_path, monkeypatch):
+    from flinkproj_spark.sources import files
     from flinkproj_spark.sources.files import read_orc, stream_orc, write_orc
+
+    monkeypatch.setattr(files, "MAX_FILES_PER_TRIGGER", 4)
 
     ev = _events(spark, sf_dir)
     p = str(tmp_path / "ev_orc")
@@ -123,7 +129,7 @@ def test_orc_roundtrip_matches_parquet(spark, sf_dir, tmp_path):
     out = str(tmp_path / "orc_out")
     ck = str(tmp_path / "orc_ck")
     q = (
-        stream_orc(spark, p, SCHEMA, max_files_per_trigger=4)
+        stream_orc(spark, p, SCHEMA)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ck)
@@ -227,7 +233,7 @@ def test_zorder_write_shrinks_per_file_extents(spark, sf_dir, tmp_path):
     )
     z_out = str(tmp_path / "zorder")
     rr_out = str(tmp_path / "roundrobin")
-    write_zorder_layout(events, z_out, "user_id", "minute", n_files=8)
+    write_zorder_layout(events, z_out, "user_id", "minute")
     events.repartition(8).write.parquet(rr_out)
 
     def total_extent_area(path):
@@ -255,14 +261,17 @@ def test_zorder_write_shrinks_per_file_extents(spark, sf_dir, tmp_path):
     assert z_area < rr_area / 2, (z_area, rr_area)
 
 
-def test_compact_small_files_shrinks_file_count(spark, sf_dir, tmp_path):
+def test_compact_small_files_shrinks_file_count(spark, sf_dir, tmp_path, monkeypatch):
     """128 tiny files compact to the byte-derived target count with
     identical rows; the sorted variant keeps the clustered layout
     (per-file key ranges stay disjoint-ish, not round-robin)."""
     import pyspark.sql.functions as F
 
+    from flinkproj_spark.sources import files
     from flinkproj_spark.sources.files import compact_small_files
     from flinkproj_spark.sources.tables import load_table
+
+    monkeypatch.setattr(files, "TARGET_FILE_BYTES", 1 << 20)
 
     src = str(tmp_path / "shattered")
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id")
@@ -272,7 +281,7 @@ def test_compact_small_files_shrinks_file_count(spark, sf_dir, tmp_path):
     assert len(glob.glob(f"{src}/part-*.parquet")) == 128
 
     out = str(tmp_path / "compacted")
-    n = compact_small_files(spark, src, out, target_file_bytes=1 << 20)
+    n = compact_small_files(spark, src, out)
     files = glob.glob(f"{out}/part-*.parquet")
     assert len(files) == n and n < 16
     back = spark.read.parquet(out)
@@ -280,8 +289,7 @@ def test_compact_small_files_shrinks_file_count(spark, sf_dir, tmp_path):
     assert {r.event_id for r in back.collect()} == {r.event_id for r in events.collect()}
 
     out2 = str(tmp_path / "compacted_sorted")
-    compact_small_files(spark, src, out2, target_file_bytes=1 << 20,
-                        sort_cols=("user_id",))
+    compact_small_files(spark, src, out2, sort_cols=("user_id",))
     per_file = (
         spark.read.parquet(out2)
         .groupBy(F.input_file_name().alias("f"))

@@ -923,7 +923,7 @@ class TestStreamSourceSketch:
         want = {
             r.source: tuple(r[f"s{i}"] for i in range(N_HASHES))
             for r in docs.filter(F.size(words) >= 3)
-            .select("source", F.explode(fx.shingles(words, 3)).alias("sh"))
+            .select("source", F.explode(fx.shingles(words)).alias("sh"))
             .select("source", base.alias("x"))
             .groupBy("source")
             .agg(
@@ -1314,7 +1314,7 @@ class TestStreamFileInventory:
             compaction_plan,
         )
         from flinkproj_spark.sources.tables import load_table
-        from flinkproj_spark.streaming.monitor import stream_file_inventory
+        from flinkproj_spark.operators.sampling import event_day_inventory
 
         src = str(tmp_path / "src")
         events = load_table(spark, sf_dir, "events").select(
@@ -1325,7 +1325,7 @@ class TestStreamFileInventory:
             "append"
         ).parquet(src)
         q = (
-            stream_file_inventory(
+            event_day_inventory(
                 spark.readStream.schema(
                     "event_id long, ts timestamp, event_type string,"
                     " props string"
@@ -1345,7 +1345,7 @@ class TestStreamFileInventory:
         }
         want_inv = {
             (r.event_type, r.d): (r.n_rows, r.bytes)
-            for r in stream_file_inventory(events).collect()
+            for r in event_day_inventory(events).collect()
         }
         assert got_inv == want_inv and len(got_inv) > 50
         key = lambda r: (r.event_type, r.bin_id)
@@ -1375,12 +1375,12 @@ class TestStreamFileInventory:
         # the live per-file verdict monitor over the SAME inventory
         # equals the batch lake_file_verdicts key row for row, and all
         # three verdicts are live
-        from flinkproj_spark.operators.sampling import lake_file_verdicts
-        from flinkproj_spark.streaming.monitor import stream_vacuum_monitor
+        from flinkproj_spark.operators.sampling import (
+            lake_file_verdicts, lake_file_verdicts_from_inventory)
 
         frow = lambda r: (r.n_rows, r.bytes, r.age_days, r.verdict)
         got_f = {(r.event_type, r.day): frow(r)
-                 for r in stream_vacuum_monitor(streamed).collect()}
+                 for r in lake_file_verdicts_from_inventory(streamed).collect()}
         want_f = {(r.event_type, r.day): frow(r)
                   for r in lake_file_verdicts(spark, sf_dir).collect()}
         assert got_f == want_f
@@ -1665,7 +1665,7 @@ class TestStreamPhashGate:
             vals.append(vals[-1] + (1 if b else -1))
         return b"P5 8 8 255\n" + bytes(vals)
 
-    def test_admits_only_images_far_from_base(self, spark, tmp_path):
+    def test_admits_only_images_far_from_base(self, spark, tmp_path, monkeypatch):
         """Convergence to the batch dedup_phash_hamming verdicts: the
         gate must reject exactly the incoming images whose dHash is
         within PHASH_MAX_HAMMING of some base image (computed brute
@@ -1673,7 +1673,10 @@ class TestStreamPhashGate:
         copies, and admit the rest — across a micro-batch boundary."""
         from flinkproj_spark.operators.multimodal import (
             PHASH_MAX_HAMMING, phash60)
+        from flinkproj_spark.streaming import curate
         from flinkproj_spark.streaming.multimodal import stream_phash_gate
+
+        monkeypatch.setattr(curate, "INGEST_HORIZON", "0 seconds")
 
         a_bits = [1] * 60
         b_bits = [0] * 60
@@ -1705,12 +1708,12 @@ class TestStreamPhashGate:
         base = spark.createDataFrame(base_rows, "doc_id long, payload binary")
         _feed(spark, src, incoming, schema)
         stream = spark.readStream.schema(schema).parquet(src)
-        _run(stream_phash_gate(stream, base, horizon="0 seconds"), out, ckpt)
+        _run(stream_phash_gate(stream, base), out, ckpt)
         # advance the watermark so every run-1 verdict finalizes (the
         # admission NEGATION emits on expiry); the flush row itself
         # stays pending, which is the correct append-mode semantics
         _feed(spark, src, [(99, _sec(7200), self._pgm(b_bits))], schema)
-        _run(stream_phash_gate(stream, base, horizon="0 seconds"), out, ckpt)
+        _run(stream_phash_gate(stream, base), out, ckpt)
 
         got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
         assert got == expected == [1, 5]
@@ -1832,7 +1835,7 @@ class TestStreamValueHistogram:
         from flinkproj_spark.operators.stats import (
             histogram_from_registers, histogram_value)
         from flinkproj_spark.sources.tables import load_table
-        from flinkproj_spark.streaming.monitor import stream_value_histogram
+        from flinkproj_spark.operators.stats import histogram_registers
         import pyspark.sql.functions as F
 
         src = str(tmp_path / "src")
@@ -1842,7 +1845,7 @@ class TestStreamValueHistogram:
             "append"
         ).parquet(src)
         q = (
-            stream_value_histogram(
+            histogram_registers(
                 spark.readStream.schema("event_id long, value double")
                 .parquet(src)
             )
@@ -1872,7 +1875,7 @@ class TestStreamShardBalance:
         from flinkproj_spark.operators.sampling import (
             _N_SHARDS, shard_balance_from_counts, shard_balance_report)
         from flinkproj_spark.sources.tables import load_table
-        from flinkproj_spark.streaming.monitor import stream_shard_balance
+        from flinkproj_spark.operators.sampling import shard_doc_counts
         import pyspark.sql.functions as F
 
         src = str(tmp_path / "src")
@@ -1882,7 +1885,7 @@ class TestStreamShardBalance:
             "append"
         ).parquet(src)
         q = (
-            stream_shard_balance(
+            shard_doc_counts(
                 spark.readStream.schema("doc_id long, text string").parquet(src)
             )
             .writeStream.format("memory")

@@ -157,7 +157,7 @@ def main() -> int:
     from flinkproj_spark import registry
     from flinkproj_spark.session import build_session
 
-    spark = build_session("plan_lint", cpus=8)
+    spark = build_session("plan_lint")
     flagged: dict[str, list[str]] = {}
     hard_fail = []
     for k, fn in registry.queries().items():
